@@ -23,12 +23,26 @@ iteration (mandatory: plan depth would otherwise grow linearly and overwhelm
 the driver). Hub-class skew on the ``sup`` side (ANATOMICAL_ENTITY etc.) is
 handled by AQE skew-join plus the explicit salting helper in
 ``operators/salting.py`` for the post-closure probe joins.
+
+Routing: each Spark round costs a handful of jobs (barrier checkpoint,
+anti-join, emptiness probe) whatever the data size, while a
+dimension-scale TBox seed is tiny (a 2k-document KB: 493 edges and 110
+restrictions, closing to 1.5k rows in 4 rounds). When the seed and the
+restriction set fit one barrier partition (``iterbarrier.fits_driver``),
+they are collected once and the same semi-naive rounds run in Python on
+the driver; a closure that outgrows one partition mid-run hands its
+``(closure, delta)`` state to the Spark loop, which resumes from there.
+Measured on that KB build plus its SPARQL path queries (4 cores,
+local[4], BENCH.md §22): the five closure calls' jobs fell from 113 to 38.
 """
 
 from __future__ import annotations
 
+from collections import defaultdict
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 
 def _edges(df: DataFrame, sub: str = "sub", sup: str = "sup") -> DataFrame:
@@ -67,6 +81,86 @@ def _monotonicity_rule(delta: DataFrame, r1: DataFrame) -> DataFrame:
     ).select(F.col("m_sub").alias("sub"), F.col("m_iri2").alias("sup"))
 
 
+def _monotonicity_index(restrictions: list[tuple]):
+    """Driver twin of :func:`_monotonicity_rule` over ``(prop, filler, iri)``
+    rows; SQL join semantics, so a NULL prop or filler never matches."""
+    by_filler: dict = defaultdict(list)
+    by_prop_filler: dict = defaultdict(list)
+    for prop, filler, iri in restrictions:
+        if prop is not None and filler is not None:
+            by_filler[filler].append((prop, iri))
+            by_prop_filler[(prop, filler)].append(iri)
+
+    def mono(delta: set) -> set:
+        return {
+            (r1, r2)
+            for x, y in delta
+            for prop, r1 in by_filler.get(x, ())
+            for r2 in by_prop_filler.get((prop, y), ())
+        }
+
+    return mono
+
+
+def _driver_rounds(
+    seed: list[tuple], restrictions: list[tuple] | None, max_iterations: int
+) -> tuple[set, set | None, int]:
+    """The Spark loop's round recurrence of :func:`transitive_closure` over
+    Python sets, for a seed that fits one barrier partition.
+
+    Returns ``(closure, delta, rounds)``. ``delta`` is None once the
+    fixpoint converged; otherwise the closure outgrew one partition after
+    ``rounds`` rounds and the caller resumes the Spark loop from
+    ``(closure, delta)``, which are exactly that loop's state at that round.
+    """
+    from phenoscape_owl_tools_spark.iterbarrier import fits_driver
+
+    closure = set(seed)
+    delta = closure
+    if restrictions is None:
+        succ: dict = defaultdict(list)
+        for a, b in closure:
+            succ[a].append(b)
+    else:
+        mono = _monotonicity_index(restrictions)
+        delta = closure | mono(closure)
+        closure = set(delta)
+        # closure by sub and by sup; NULL keys (only a NULL restriction iri
+        # can make one) are left out so they never join, as in SQL
+        out_idx: dict = defaultdict(set)
+        in_idx: dict = defaultdict(set)
+
+        def index(rows: set) -> None:
+            for a, b in rows:
+                if a is not None:
+                    out_idx[a].add(b)
+                if b is not None:
+                    in_idx[b].add(a)
+
+        index(closure)
+    for it in range(max_iterations):
+        if not fits_driver(len(closure)):
+            return closure, delta, it
+        if restrictions is None:
+            step = {(a, c) for a, b in delta for c in succ.get(b, ())}
+        else:
+            step = {(a, c) for a, b in delta for c in out_idx.get(b, ())}
+            step |= {(a, c) for b, c in delta for a in in_idx.get(b, ())}
+            step |= mono(delta)
+        new = {
+            (a, c) for a, c in step if a is not None and c is not None and a != c
+        } - closure
+        if not new:
+            return closure, None, it + 1
+        closure |= new
+        delta = new
+        if restrictions is not None:
+            index(new)
+    raise RuntimeError(
+        f"transitive_closure did not converge in {max_iterations} iterations"
+    )
+
+
 def transitive_closure(
     edges: DataFrame,
     restrictions: DataFrame | None = None,
@@ -81,22 +175,86 @@ def transitive_closure(
     (X subClassOf Y) and named restrictions R1=(P some X), R2=(P some Y),
     emit (R1 subClassOf R2). Mirrors what ELK derives from
     NamedRestrictionGenerator axioms (NamedRestrictionGenerator.scala:33-43).
+
+    Route: a seed (and restriction set) that fits one barrier partition is
+    closed on the driver by :func:`_driver_rounds`; a closure that outgrows
+    it mid-run resumes in the Spark loop below. ``max_iterations`` counts
+    rounds across both.
     """
-    from phenoscape_owl_tools_spark.iterbarrier import IterationBarrier
+    import pandas as pd
 
-    barrier = IterationBarrier("closure", adaptive_width=True)
+    from phenoscape_owl_tools_spark import iterbarrier
+
+    barrier = iterbarrier.IterationBarrier("closure", adaptive_width=True)
     edges = barrier(_edges(edges).dropDuplicates(), "edges")
-
+    spark = edges.sparkSession
     if restrictions is not None:
-        r1 = barrier(
-            restrictions.select(
-                F.col("prop").alias("r_prop"), F.col("filler").alias("r_filler"), F.col("iri").alias("r_iri")
-            ),
-            "restrictions",
+        r1 = restrictions.select(
+            F.col("prop").alias("r_prop"), F.col("filler").alias("r_filler"), F.col("iri").alias("r_iri")
         )
 
+    closure = delta = None
+    start = 0
+    r_rows = None
+    on_driver = iterbarrier.fits_driver(barrier.seed_rows)
+    if on_driver and restrictions is not None:
+        # one row over the threshold is enough to decide
+        r_pdf = r1.limit(iterbarrier.TARGET_ROWS_PER_PARTITION + 1).toPandas()
+        r_rows = list(zip(r_pdf["r_prop"], r_pdf["r_filler"], r_pdf["r_iri"]))
+        on_driver = iterbarrier.fits_driver(len(r_rows))
+    if on_driver:
+        pdf = edges.toPandas()
+        seed = list(zip(pdf["sub"], pdf["sup"]))
+        rows, delta_rows, start = _driver_rounds(seed, r_rows, max_iterations)
+        schema = StructType([
+            StructField(c, edges.schema[c].dataType, True) for c in ("sub", "sup")
+        ])
+
+        def frame(part: set, tag: str) -> DataFrame:
+            pdf = pd.DataFrame.from_records(list(part), columns=["sub", "sup"])
+            return barrier.from_pandas(spark, pdf, schema, tag)
+
+        # the closure only grows from the seed, which is a frame already:
+        # only derived rows travel back (none for a relation that is
+        # transitive already, e.g. a SPARQL path over a closed hierarchy)
+        derived = rows.difference(seed)
+        closure = edges.unionByName(frame(derived, "closure")) if derived else edges
+        if delta_rows is not None:
+            delta = frame(delta_rows, "delta")
+            barrier.set_width(len(rows), spark)
+    if not on_driver or delta is not None:
+        closure = _spark_rounds(
+            barrier, edges, None if restrictions is None else barrier(r1, "restrictions"),
+            closure, delta, start, max_iterations,
+        )
+
+    if reflexive:
+        nodes = (
+            closure.select(F.col("sub").alias("n"))
+            .unionByName(closure.select(F.col("sup").alias("n")))
+            .dropDuplicates()
+        )
+        closure = closure.unionByName(
+            nodes.select(F.col("n").alias("sub"), F.col("n").alias("sup"))
+        )
+    return closure
+
+
+def _spark_rounds(
+    barrier,
+    edges: DataFrame,
+    r1: DataFrame | None,
+    closure: DataFrame | None,
+    delta: DataFrame | None,
+    start: int,
+    max_iterations: int,
+) -> DataFrame:
+    """Semi-naive rounds ``start..max_iterations`` of :func:`transitive_closure`
+    over DataFrames, from the seed (``closure`` None) or from a
+    ``(closure, delta)`` state handed over by :func:`_driver_rounds`."""
+
     def monotonicity(delta: DataFrame) -> DataFrame:
-        if restrictions is None:
+        if r1 is None:
             return None
         return _monotonicity_rule(delta, r1)
 
@@ -105,12 +263,13 @@ def transitive_closure(
     # checkpoints leak per-task state that doubles task time per iteration
     # on Spark 4.1), so plan depth stays bounded by the iteration count
     # (~graph diameter).
-    closure = edges
-    delta = edges
-    first_mono = monotonicity(edges)
-    if first_mono is not None:
-        delta = barrier(delta.unionByName(first_mono).dropDuplicates(), "delta")
-        closure = delta
+    if closure is None:
+        closure = edges
+        delta = edges
+        first_mono = monotonicity(edges)
+        if first_mono is not None:
+            delta = barrier(delta.unionByName(first_mono).dropDuplicates(), "delta")
+            closure = delta
 
     # Every COMPACT_EVERY rounds, rewrite the accumulated closure (a union
     # of all prior deltas) into one parquet scan: bounds union width — the
@@ -118,9 +277,8 @@ def transitive_closure(
     # the barrier GC superseded files (superseded deltas become dead once
     # closure and the live delta are both freshly materialized).
     COMPACT_EVERY = 8
-    converged = False
-    for it in range(max_iterations):
-        if restrictions is None:
+    for it in range(start, max_iterations):
+        if r1 is None:
             # plain transitivity over a static edge set: linear semi-naive
             # (delta ∘ base) is complete and cheapest — O(diameter) rounds
             step = (
@@ -155,29 +313,16 @@ def transitive_closure(
             "delta",
         )
         if new.isEmpty():
-            converged = True
-            break
+            return closure
         closure = closure.unionByName(new)
         delta = new
         if (it + 1) % COMPACT_EVERY == 0:
             closure = barrier.materialize(closure, "closure")
             delta = barrier.materialize(delta, "delta")
             barrier.gc(keep=2)
-    if not converged:
-        raise RuntimeError(
-            f"transitive_closure did not converge in {max_iterations} iterations"
-        )
-
-    if reflexive:
-        nodes = (
-            closure.select(F.col("sub").alias("n"))
-            .unionByName(closure.select(F.col("sup").alias("n")))
-            .dropDuplicates()
-        )
-        closure = closure.unionByName(
-            nodes.select(F.col("n").alias("sub"), F.col("n").alias("sup"))
-        )
-    return closure
+    raise RuntimeError(
+        f"transitive_closure did not converge in {max_iterations} iterations"
+    )
 
 
 def el_closure(

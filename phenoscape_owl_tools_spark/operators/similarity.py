@@ -485,7 +485,8 @@ def jaccard_similarity(
     ``hubs`` injects a precomputed hub-node list (see
     :func:`corpus_hub_nodes`) so repeated calls against the same corpus
     skip the per-call frequency probe; any node list works — correctness
-    never depends on WHICH nodes are hubs, only the skew bound does."""
+    never depends on WHICH nodes are hubs, only the skew bound does. Without
+    ``hub_bits``, the first 62 nodes of a longer list are used."""
     qi = indirect_associations(
         query_profiles.select("individual", "phenotype"), closure
     ).select(F.col("individual").alias("query"), F.col("node"))
@@ -495,7 +496,7 @@ def jaccard_similarity(
     q_sizes = qi.groupBy("query").agg(F.countDistinct("node").alias("n_q"))
     c_sizes = ci.groupBy("corpus").agg(F.countDistinct("node").alias("n_c"))
     if hubs is not None and hub_bits is None:
-        hub_bits = len(hubs)
+        hub_bits = min(len(hubs), 62)  # one bit per hub in a signed 64-bit mask
     if hub_bits is None:
         n_q = query_profiles.count()
         n_c = corpus_profiles.count()

@@ -49,6 +49,14 @@ from phenoscape_owl_tools_spark.plans.corpus_build import CorpusConfig, doc_stat
 from phenoscape_owl_tools_spark.streaming.ingest import read_document_stream
 
 DECISIONS = "decisions"
+# Read with this schema, never inferred: partition type inference turns an
+# all-digit batch key (a hex checksum can be one) into a long, which drops
+# its leading zeros, and comparing it with a hex key then fails under ANSI
+# casts or, without them, silently drops every prior keeper.
+DECISION_SCHEMA = (
+    "doc_id string, content_hash string, gate_pass boolean, exact_keeper boolean, "
+    "contaminated boolean, kept boolean, batch string"
+)
 
 
 def _prior_keepers(
@@ -68,7 +76,7 @@ def _prior_keepers(
     root = Path(out_path) / DECISIONS
     if not any(root.glob("batch=*")):
         return None
-    df = spark.read.parquet(str(root))
+    df = read_corpus_decisions(spark, out_path)
     return (
         df.where(F.col("batch") != current_key)
         .where(F.col("exact_keeper"))
@@ -204,7 +212,7 @@ def run_streaming_corpus(
 
 def read_corpus_decisions(spark: SparkSession, out_path: str) -> DataFrame:
     """All per-batch decision tables (adds the ``batch`` partition key)."""
-    return spark.read.parquet(str(Path(out_path) / DECISIONS))
+    return spark.read.schema(DECISION_SCHEMA).parquet(str(Path(out_path) / DECISIONS))
 
 
 def streaming_kept_ids(spark: SparkSession, out_path: str) -> DataFrame:

@@ -33,3 +33,29 @@ def corpus(tmp_path_factory):
 
 SF001 = "/root/testdata/sf0.001"
 SF01 = "/root/testdata/sf0.01"
+
+
+@pytest.fixture
+def both_routes(monkeypatch):
+    """Run a check under both fixpoint routes of ``iterbarrier.fits_driver``.
+
+    Use as a decorator on a nested zero-argument function: it runs once on
+    the driver route (test-sized seeds always fit one partition) and once
+    with ``TARGET_ROWS_PER_PARTITION`` patched to 0, so every non-empty seed
+    takes the Spark loop. A failure notes the route it came from.
+    """
+    from phenoscape_owl_tools_spark import iterbarrier
+
+    def run(check):
+        for route in ("driver", "spark"):
+            with monkeypatch.context() as m:
+                if route == "spark":
+                    m.setattr(iterbarrier, "TARGET_ROWS_PER_PARTITION", 0)
+                try:
+                    check()
+                except BaseException as exc:
+                    exc.add_note(f"fixpoint route: {route}")
+                    raise
+        return check
+
+    return run

@@ -2,6 +2,8 @@ from __future__ import annotations
 
 import random
 
+import pytest
+
 from phenoscape_owl_tools_spark.operators import closure
 from phenoscape_owl_tools_spark.oracle import pyoracle
 
@@ -10,44 +12,53 @@ def _edges_df(spark, edges):
     return spark.createDataFrame([(a, b) for a, b in edges], ["sub", "sup"])
 
 
-def test_transitive_closure_random_dag(spark):
+def test_transitive_closure_random_dag(spark, both_routes):
     rng = random.Random(7)
     nodes = [f"n{i}" for i in range(60)]
     edges = set()
     for i in range(1, 60):
         for _ in range(rng.randrange(1, 3)):
             edges.add((nodes[i], nodes[rng.randrange(i)]))
-    got = {
-        (r["sub"], r["sup"])
-        for r in closure.transitive_closure(_edges_df(spark, edges)).collect()
-    }
-    assert got == pyoracle.transitive_closure(edges)
+
+    @both_routes
+    def _():
+        got = {
+            (r["sub"], r["sup"])
+            for r in closure.transitive_closure(_edges_df(spark, edges)).collect()
+        }
+        assert got == pyoracle.transitive_closure(edges)
 
 
-def test_transitive_closure_reflexive_chain(spark):
+def test_transitive_closure_reflexive_chain(spark, both_routes):
     edges = {("a", "b"), ("b", "c"), ("c", "d")}
-    got = {
-        (r["sub"], r["sup"])
-        for r in closure.transitive_closure(_edges_df(spark, edges), reflexive=True).collect()
-    }
-    assert got == pyoracle.transitive_closure(edges, reflexive=True)
+
+    @both_routes
+    def _():
+        got = {
+            (r["sub"], r["sup"])
+            for r in closure.transitive_closure(_edges_df(spark, edges), reflexive=True).collect()
+        }
+        assert got == pyoracle.transitive_closure(edges, reflexive=True)
 
 
-def test_el_closure_with_equiv(spark):
+def test_el_closure_with_equiv(spark, both_routes):
     sub = _edges_df(spark, {("b", "a"), ("c", "b")})
     eq = spark.createDataFrame([("b", "d")], ["a", "b"])
-    got = {
-        (r["sub"], r["sup"])
-        for r in closure.el_closure(sub, equiv_edges=eq).collect()
-    }
-    # d == b => d subclass a, c subclass d, etc.
-    assert ("d", "a") in got
-    assert ("c", "d") in got
-    assert ("c", "a") in got
-    assert ("b", "d") in got and ("d", "b") in got
+
+    @both_routes
+    def _():
+        got = {
+            (r["sub"], r["sup"])
+            for r in closure.el_closure(sub, equiv_edges=eq).collect()
+        }
+        # d == b => d subclass a, c subclass d, etc.
+        assert ("d", "a") in got
+        assert ("c", "d") in got
+        assert ("c", "a") in got
+        assert ("b", "d") in got and ("d", "b") in got
 
 
-def test_restriction_monotonicity_inside_fixpoint(spark):
+def test_restriction_monotonicity_inside_fixpoint(spark, both_routes):
     """X<Y must propagate to (P some X) < (P some Y), and those new edges
     must feed further transitive steps (ELK-saturation parity)."""
     sub = _edges_df(spark, {("x", "y"), ("y", "z")})
@@ -55,15 +66,18 @@ def test_restriction_monotonicity_inside_fixpoint(spark):
         [("rx", "P", "x"), ("ry", "P", "y"), ("rz", "P", "z"), ("top", "Q", "z")],
         ["iri", "prop", "filler"],
     )
-    got = {
-        (r["sub"], r["sup"])
-        for r in closure.transitive_closure(_edges_df(spark, {("x", "y"), ("y", "z")}), restrictions=restr).collect()
-    }
-    assert ("rx", "ry") in got
-    assert ("ry", "rz") in got
-    assert ("rx", "rz") in got  # via transitivity over derived edges
-    assert ("x", "z") in got
-    assert not any(s == "top" or p == "top" for s, p in got)
+
+    @both_routes
+    def _():
+        got = {
+            (r["sub"], r["sup"])
+            for r in closure.transitive_closure(_edges_df(spark, {("x", "y"), ("y", "z")}), restrictions=restr).collect()
+        }
+        assert ("rx", "ry") in got
+        assert ("ry", "rz") in got
+        assert ("rx", "rz") in got  # via transitivity over derived edges
+        assert ("x", "z") in got
+        assert not any(s == "top" or p == "top" for s, p in got)
 
 
 def test_direct_hierarchy(spark):
@@ -152,7 +166,7 @@ def test_property_chain_closure_subprops_only(spark):
     assert got == set(assertions) | {("p", "a", "b"), ("p", "b", "c")}
 
 
-def test_derived_restriction_edges_compose_with_asserted_facts(spark):
+def test_derived_restriction_edges_compose_with_asserted_facts(spark, both_routes):
     """ELK parity gap (found in review): rx < ry is DERIVED by monotonicity
     from x < y; an asserted a < rx must then compose to a < ry. Linear
     semi-naive against the base edge set misses this."""
@@ -160,12 +174,15 @@ def test_derived_restriction_edges_compose_with_asserted_facts(spark):
     restrictions = spark.createDataFrame(
         [("rx", "P", "x"), ("ry", "P", "y")], ["iri", "prop", "filler"]
     )
-    got = {
-        (r["sub"], r["sup"])
-        for r in closure.transitive_closure(edges, restrictions=restrictions).collect()
-    }
-    assert ("rx", "ry") in got  # monotonicity
-    assert ("a", "ry") in got  # composition through the DERIVED edge
+
+    @both_routes
+    def _():
+        got = {
+            (r["sub"], r["sup"])
+            for r in closure.transitive_closure(edges, restrictions=restrictions).collect()
+        }
+        assert ("rx", "ry") in got  # monotonicity
+        assert ("a", "ry") in got  # composition through the DERIVED edge
 
 
 def test_incremental_closure_matches_full_recompute(spark):
@@ -509,3 +526,135 @@ def test_maintain_closure_with_restrictions_auto(spark):
         restrictions=restrictions,
     )
     assert {tuple(r) for r in got.collect()} == {tuple(r) for r in want.collect()}
+
+
+# ---------------------------------------------------------------------------
+# Driver/Spark routing (iterbarrier.fits_driver) against pyoracle
+# ---------------------------------------------------------------------------
+
+
+def _spy_routes(monkeypatch):
+    """Record which rounds ran: driver calls, and the ``start`` round of
+    every Spark-loop call (0 = from the seed, > 0 = a driver hand-off)."""
+    calls = {"driver": 0, "spark_starts": []}
+    driver, spark_rounds = closure._driver_rounds, closure._spark_rounds
+
+    def driver_spy(*args, **kwargs):
+        calls["driver"] += 1
+        return driver(*args, **kwargs)
+
+    def spark_spy(barrier, edges, r1, cl, delta, start, max_iterations):
+        calls["spark_starts"].append(start)
+        return spark_rounds(barrier, edges, r1, cl, delta, start, max_iterations)
+
+    monkeypatch.setattr(closure, "_driver_rounds", driver_spy)
+    monkeypatch.setattr(closure, "_spark_rounds", spark_spy)
+    return calls
+
+
+def _el_oracle(edges, restrictions):
+    """Transitivity plus EL monotonicity to a fixpoint, naively."""
+    facts = set(edges)
+    while True:
+        tc = pyoracle.transitive_closure(facts)
+        mono = {
+            (r1, r2)
+            for x, y in tc
+            for r1, p1, f1 in restrictions
+            for r2, p2, f2 in restrictions
+            if p1 == p2 and f1 == x and f2 == y
+        }
+        if tc | mono == facts:
+            return facts
+        facts = tc | mono
+
+
+def _closure_set(df):
+    return {(r["sub"], r["sup"]) for r in df.collect()}
+
+
+def _patch_threshold(monkeypatch, rows):
+    from phenoscape_owl_tools_spark import iterbarrier
+
+    monkeypatch.setattr(iterbarrier, "TARGET_ROWS_PER_PARTITION", rows)
+
+
+@pytest.mark.parametrize("leaves,route", [(6, "driver"), (7, "spark")])
+def test_route_seed_at_and_over_threshold(spark, monkeypatch, leaves, route):
+    """A star closes to itself: 6 seed rows (= the threshold) stay on the
+    driver throughout, 7 go to the Spark loop from the seed."""
+    _patch_threshold(monkeypatch, 6)
+    calls = _spy_routes(monkeypatch)
+    edges = {(f"leaf{i}", "root") for i in range(leaves)}
+    got = _closure_set(closure.transitive_closure(_edges_df(spark, edges)))
+    assert got == pyoracle.transitive_closure(edges)
+    if route == "driver":
+        assert calls == {"driver": 1, "spark_starts": []}
+    else:
+        assert calls == {"driver": 0, "spark_starts": [0]}
+
+
+def test_route_chain_hands_off_mid_fixpoint(spark, monkeypatch):
+    """An 11-edge chain closes to 66 rows; with a 15-row threshold the
+    driver hands its state to the Spark loop after one round."""
+    _patch_threshold(monkeypatch, 15)
+    calls = _spy_routes(monkeypatch)
+    edges = {(f"c{i:02d}", f"c{i + 1:02d}") for i in range(11)}
+    got = _closure_set(closure.transitive_closure(_edges_df(spark, edges)))
+    assert got == pyoracle.transitive_closure(edges)
+    assert calls == {"driver": 1, "spark_starts": [1]}
+
+
+def test_route_chain_with_restrictions_hands_off_mid_fixpoint(spark, monkeypatch):
+    """Same hand-off under the non-linear rounds: monotonicity mirrors the
+    chain onto its restriction classes (2 x 28 closure rows)."""
+    _patch_threshold(monkeypatch, 20)
+    calls = _spy_routes(monkeypatch)
+    nodes = [f"c{i}" for i in range(8)]
+    edges = {(nodes[i], nodes[i + 1]) for i in range(7)}
+    restr = [(f"r_{n}", "P", n) for n in nodes]
+    restr_df = spark.createDataFrame(restr, ["iri", "prop", "filler"])
+    got = _closure_set(
+        closure.transitive_closure(_edges_df(spark, edges), restrictions=restr_df)
+    )
+    assert got == _el_oracle(edges, restr)
+    assert calls["driver"] == 1
+    assert len(calls["spark_starts"]) == 1 and calls["spark_starts"][0] > 0
+
+
+@pytest.mark.parametrize("threshold", [0, 15, 1000])
+def test_route_max_iterations_counts_rounds_across_routes(spark, monkeypatch, threshold):
+    """An 11-edge chain needs 11 linear rounds (the last finds nothing new)
+    in the Spark loop, on the driver, or split by a hand-off after one."""
+    _patch_threshold(monkeypatch, threshold)
+    edges = {(f"c{i:02d}", f"c{i + 1:02d}") for i in range(11)}
+    got = _closure_set(closure.transitive_closure(_edges_df(spark, edges), max_iterations=11))
+    assert got == pyoracle.transitive_closure(edges)
+    with pytest.raises(RuntimeError, match="did not converge in 10 iterations"):
+        closure.transitive_closure(_edges_df(spark, edges), max_iterations=10)
+
+
+def test_route_degenerate_seeds(spark, both_routes):
+    """Empty, self-loop-only and NULL-endpoint seeds, on both routes."""
+    schema = "sub string, sup string"
+    empty = spark.createDataFrame([], schema)
+    loops = spark.createDataFrame([("a", "a"), ("b", "b")], schema)
+    nulls = spark.createDataFrame(
+        [("a", None), (None, "b"), (None, None), ("a", "b"), ("b", "c")], schema
+    )
+    restr = spark.createDataFrame([("ra", "P", "a"), ("rc", "P", "c")], ["iri", "prop", "filler"])
+
+    @both_routes
+    def _():
+        for restrictions in (None, restr):
+            assert _closure_set(closure.transitive_closure(empty, restrictions)) == set()
+            assert _closure_set(closure.transitive_closure(loops, restrictions)) == set()
+            assert _closure_set(closure.transitive_closure(loops, restrictions, reflexive=True)) == set()
+        assert _closure_set(closure.transitive_closure(nulls)) == pyoracle.transitive_closure(
+            {("a", "b"), ("b", "c")}
+        )
+        assert _closure_set(closure.transitive_closure(nulls, restr)) == _el_oracle(
+            {("a", "b"), ("b", "c")}, [("ra", "P", "a"), ("rc", "P", "c")]
+        )
+        out = closure.transitive_closure(empty)
+        assert out.schema.simpleString() == "struct<sub:string,sup:string>"

@@ -24,14 +24,17 @@ def test_mention_detection_partition_invariant(spark):
     assert _rows(a) == _rows(b)
 
 
-def test_connected_components_edge_order_invariant(spark):
+def test_connected_components_edge_order_invariant(spark, both_routes):
     flat = KG.load(spark, SF001, "documents")
     eq = KG.equiv_edges(flat)
-    a = components.connected_components(eq.repartition(11))
-    b = components.connected_components(
-        eq.orderBy(F.desc("a")).repartition(3)
-    )
-    assert _rows(a) == _rows(b)
+
+    @both_routes
+    def _():
+        a = components.connected_components(eq.repartition(11))
+        b = components.connected_components(
+            eq.orderBy(F.desc("a")).repartition(3)
+        )
+        assert _rows(a) == _rows(b)
 
 
 def test_exact_dedup_keeper_stable_across_partitioning(spark):

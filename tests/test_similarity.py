@@ -366,6 +366,10 @@ def test_jaccard_precomputed_hubs_skip_probe_and_match(spark):
     rare = sorted({r["phenotype"] for r in c.select("phenotype").collect()}
                   - set(hubs))[:1]
     assert rows(hubs=hubs[:3] + rare) == probed
+    # more hubs than mask bits: the first 62 are used, the rest stay rare
+    padded = hubs + [f"http://example.org/not-a-node/{i}" for i in range(59)]
+    assert len(padded) == 63
+    assert rows(hubs=padded) == probed
 
 
 def test_global_rank_stable_across_reexecutions(spark):

@@ -476,3 +476,44 @@ def test_streaming_corpus_funnel_equals_batch(spark, tmp_path):
     again = {r["doc_id"]
              for r in scorpus.streaming_kept_ids(spark, str(out)).collect()}
     assert again == stream_kept
+
+
+def test_streaming_corpus_all_digit_batch_key_keeps_prior_keepers(spark, tmp_path):
+    """A batch key made only of digits must still read as a string. Inferred
+    as a long, comparing it with the next batch's hex key either failed the
+    batch (ANSI casts) or dropped every prior keeper (non-ANSI), so a later
+    duplicate with a larger id was kept."""
+    import hashlib
+
+    from phenoscape_owl_tools_spark import catalog
+    from phenoscape_owl_tools_spark.plans import corpus_build
+    from phenoscape_owl_tools_spark.streaming import corpus as scorpus
+
+    text = "shared content block alpha beta gamma 0"
+    digits = "0123456789012345"
+    out = tmp_path / "corpus_out"
+    prior = spark.createDataFrame(
+        [("a000", hashlib.sha256(text.encode()).hexdigest(), True, True, False, True)],
+        "doc_id string, content_hash string, gate_pass boolean, "
+        "exact_keeper boolean, contaminated boolean, kept boolean",
+    )
+    catalog.write_table(prior, out / scorpus.DECISIONS / f"batch={digits}", fingerprint=digits)
+
+    docs = spark.createDataFrame([
+        Row(doc_id="d001", lang="en", source="s1", text=text),
+        Row(doc_id="d002", lang="en", source="s1",
+            text="unique document 2 with ordinary prose content body"),
+    ])
+    in_dir = tmp_path / "corpus_in"
+    docs.coalesce(1).write.parquet(str(in_dir))
+    cfg = corpus_build.CorpusConfig(
+        min_quality=0.05, max_dup_word_frac=0.5, lsh_threshold=None
+    )
+    scorpus.run_streaming_corpus(
+        spark, str(in_dir), docs.schema, str(out), str(tmp_path / "ck"), config=cfg
+    )
+    kept = {r["doc_id"] for r in scorpus.streaming_kept_ids(spark, str(out)).collect()}
+    assert kept == {"a000", "d002"}
+    batches = {r["batch"] for r in scorpus.read_corpus_decisions(spark, str(out))
+               .select("batch").distinct().collect()}
+    assert digits in batches and len(batches) == 2
