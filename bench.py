@@ -240,9 +240,8 @@ def incremental_mixed_main(
     from pyspark.sql import functions as F
 
     from phenoscape_owl_tools_spark.operators.closure import (
+        choose_maintenance_strategy,
         incremental_closure_apply,
-        incremental_closure_delete,
-        incremental_closure_update,
         transitive_closure,
     )
     from phenoscape_owl_tools_spark.session import get_spark
@@ -298,20 +297,9 @@ def incremental_mixed_main(
         F.concat(F.lit("n"), (F.col("id") % 97 + 2)).alias("sup"),
     ).localCheckpoint(eager=True)
 
-    from phenoscape_owl_tools_spark.operators.closure import (
-        choose_maintenance_strategy,
-    )
-
     t0 = time.perf_counter()
     choice = choose_maintenance_strategy(before, deleted)
     t_choice = time.perf_counter() - t0
-
-    t0 = time.perf_counter()
-    after_del = incremental_closure_delete(before, asserted, deleted)
-    mid = after_del.localCheckpoint(eager=True)
-    got = incremental_closure_update(mid, inserted)
-    n_inc = got.count()
-    t_inc = time.perf_counter() - t0
 
     t0 = time.perf_counter()
     fused = incremental_closure_apply(before, asserted, deleted, inserted)
@@ -325,20 +313,14 @@ def incremental_mixed_main(
     )
     n_scr = scratch.count()
     t_scr = time.perf_counter() - t0
-    identical = (
-        got.exceptAll(scratch).isEmpty() and scratch.exceptAll(got).isEmpty()
-        and n_fused == n_scr
-        and fused.exceptAll(scratch).isEmpty()
-    )
+    identical = n_fused == n_scr and fused.exceptAll(scratch).isEmpty()
     print(json.dumps({
         "job": "mixed incremental closure (delete %d + insert %d, %s)"
                % (n_delete, n_insert, shape),
         "closure_rows_before": before.count(),
-        "closure_rows_after": n_inc,
-        "incremental_sec": round(t_inc, 2),
+        "closure_rows_after": n_fused,
         "fused_sec": round(t_fused, 2),
         "scratch_sec": round(t_scr, 2),
-        "speedup": round(t_scr / t_inc, 2),
         "fused_speedup": round(t_scr / t_fused, 2),
         "identical": identical,
         "scratch_rows": n_scr,

@@ -17,6 +17,7 @@ format-agnostic. What the north rule requires and this module provides:
 
 from __future__ import annotations
 
+import hashlib
 import json
 import time
 from pathlib import Path
@@ -106,6 +107,47 @@ def read_table(spark: SparkSession, path: str | Path) -> DataFrame:
     if "bucket" in df.columns:
         df = df.drop("bucket")
     return df
+
+
+def fingerprint(*parts: str) -> str:
+    """Stage fingerprint: a short hash of ``parts``, each ended by a unit
+    separator so ("ab", "c") and ("a", "bc") differ."""
+    h = hashlib.sha256()
+    for p in parts:
+        h.update(p.encode())
+        h.update(b"\x1f")
+    return h.hexdigest()[:16]
+
+
+def stage_runner(spark: SparkSession, result, out_dir: Path | None, resume: bool, n_buckets: int):
+    """The ``stage(name, fingerprint, build, bucket_col=None)`` function of a
+    pipeline run, recording each stage's frame in ``result.stages`` and its
+    manifest in ``result.manifests``.
+
+    With ``out_dir`` a stage is written with a manifest and read back; with
+    ``resume``, a stage whose manifest carries the same fingerprint is read
+    back without calling ``build``. Without ``out_dir`` the stage is an
+    eager local checkpoint, and the frame that call returns is the one
+    recorded (profilers key stages on its identity).
+    """
+
+    def stage(name: str, fingerprint: str, build, bucket_col: str | None = None) -> DataFrame:
+        if out_dir is None:
+            df = build().localCheckpoint(eager=True)
+        else:
+            p = out_dir / name
+            if resume and is_stage_valid(p, fingerprint):
+                result.manifests[name] = read_manifest(p) | {"resumed": True}
+            else:
+                result.manifests[name] = write_table(
+                    build(), p, fingerprint=fingerprint, bucket_col=bucket_col,
+                    n_buckets=n_buckets,
+                )
+            df = read_table(spark, p)
+        result.stages[name] = df
+        return df
+
+    return stage
 
 
 def to_ntriples(triples: DataFrame) -> DataFrame:

@@ -61,9 +61,10 @@ def equiv_to_subclass(equiv: DataFrame, a: str = "a", b: str = "b") -> DataFrame
 def _monotonicity_rule(delta: DataFrame, r1: DataFrame) -> DataFrame:
     """EL monotonicity: (X ⊑ Y) ∧ R1=(P some X) ∧ R2=(P some Y) ⟹ R1 ⊑ R2.
 
-    ``r1`` columns: (r_prop, r_filler, r_iri). Shared by the batch fixpoint
-    (:func:`transitive_closure`) and the insertion-delta path
-    (:func:`incremental_closure_update`) so the rule cannot diverge.
+    ``r1`` columns: (r_prop, r_filler, r_iri), see :func:`_restriction_index`.
+    Shared by the batch fixpoint (:func:`transitive_closure`) and
+    incremental maintenance (:func:`incremental_closure_apply`: overdelete,
+    rederive and insertion rounds) so the rule cannot diverge.
     """
     lhs = delta.join(r1, delta["sub"] == r1["r_filler"]).select(
         F.col("r_iri").alias("m_sub"),
@@ -79,6 +80,40 @@ def _monotonicity_rule(delta: DataFrame, r1: DataFrame) -> DataFrame:
         r2,
         (lhs["m_prop"] == r2["m_prop2"]) & (lhs["m_sup_filler"] == r2["m_filler2"]),
     ).select(F.col("m_sub").alias("sub"), F.col("m_iri2").alias("sup"))
+
+
+def _restriction_index(restrictions: DataFrame) -> DataFrame:
+    """``restrictions(iri, prop, filler)`` as the ``r1`` columns that
+    :func:`_monotonicity_rule` joins on."""
+    return restrictions.select(
+        F.col("prop").alias("r_prop"),
+        F.col("filler").alias("r_filler"),
+        F.col("iri").alias("r_iri"),
+    )
+
+
+def _with_monotonicity(step: DataFrame, delta: DataFrame, r1: DataFrame | None) -> DataFrame:
+    """``step`` plus the monotonicity facts ``delta`` fires (none without
+    restrictions)."""
+    return step if r1 is None else step.unionByName(_monotonicity_rule(delta, r1))
+
+
+def _compose(a: DataFrame, b: DataFrame) -> DataFrame:
+    """Relational composition: (x, z) for every (x, y) in ``a`` and (y, z)
+    in ``b``."""
+    return (
+        a.alias("x").join(b.alias("y"), F.col("x.sup") == F.col("y.sub"))
+        .select(F.col("x.sub").alias("sub"), F.col("y.sup").alias("sup"))
+    )
+
+
+def _novel(step: DataFrame, known: DataFrame) -> DataFrame:
+    """The distinct non-reflexive facts of ``step`` not yet in ``known``."""
+    return (
+        step.where(F.col("sub") != F.col("sup"))
+        .dropDuplicates()
+        .join(known, on=["sub", "sup"], how="left_anti")
+    )
 
 
 def _monotonicity_index(restrictions: list[tuple]):
@@ -189,9 +224,7 @@ def transitive_closure(
     edges = barrier(_edges(edges).dropDuplicates(), "edges")
     spark = edges.sparkSession
     if restrictions is not None:
-        r1 = restrictions.select(
-            F.col("prop").alias("r_prop"), F.col("filler").alias("r_filler"), F.col("iri").alias("r_iri")
-        )
+        r1 = _restriction_index(restrictions)
 
     closure = delta = None
     start = 0
@@ -252,12 +285,6 @@ def _spark_rounds(
     """Semi-naive rounds ``start..max_iterations`` of :func:`transitive_closure`
     over DataFrames, from the seed (``closure`` None) or from a
     ``(closure, delta)`` state handed over by :func:`_driver_rounds`."""
-
-    def monotonicity(delta: DataFrame) -> DataFrame:
-        if r1 is None:
-            return None
-        return _monotonicity_rule(delta, r1)
-
     # The closure accumulates as a union of barrier-materialized deltas:
     # every branch is an independent parquet scan (iterbarrier.py — plain
     # checkpoints leak per-task state that doubles task time per iteration
@@ -266,9 +293,10 @@ def _spark_rounds(
     if closure is None:
         closure = edges
         delta = edges
-        first_mono = monotonicity(edges)
-        if first_mono is not None:
-            delta = barrier(delta.unionByName(first_mono).dropDuplicates(), "delta")
+        if r1 is not None:
+            delta = barrier(
+                edges.unionByName(_monotonicity_rule(edges, r1)).dropDuplicates(), "delta"
+            )
             closure = delta
 
     # Every COMPACT_EVERY rounds, rewrite the accumulated closure (a union
@@ -281,11 +309,7 @@ def _spark_rounds(
         if r1 is None:
             # plain transitivity over a static edge set: linear semi-naive
             # (delta ∘ base) is complete and cheapest — O(diameter) rounds
-            step = (
-                delta.alias("d")
-                .join(edges.alias("e"), F.col("d.sup") == F.col("e.sub"))
-                .select(F.col("d.sub").alias("sub"), F.col("e.sup").alias("sup"))
-            )
+            step = _compose(delta, edges)
         else:
             # monotonicity DERIVES NEW EDGES mid-fixpoint (rx ⊑ ry), so the
             # edge set is not static: linear semi-naive against the base
@@ -293,25 +317,10 @@ def _spark_rounds(
             # (e.g. a ⊑ rx asserted, rx ⊑ ry derived ⟹ a ⊑ ry — which ELK
             # entails). Non-linear semi-naive closes over the FULL relation:
             # delta ∘ closure ∪ closure ∘ delta (also O(log d) rounds).
-            step = (
-                delta.alias("d")
-                .join(closure.alias("c"), F.col("d.sup") == F.col("c.sub"))
-                .select(F.col("d.sub").alias("sub"), F.col("c.sup").alias("sup"))
-                .unionByName(
-                    closure.alias("c2")
-                    .join(delta.alias("d2"), F.col("c2.sup") == F.col("d2.sub"))
-                    .select(F.col("c2.sub").alias("sub"), F.col("d2.sup").alias("sup"))
-                )
+            step = _with_monotonicity(
+                _compose(delta, closure).unionByName(_compose(closure, delta)), delta, r1
             )
-        mono = monotonicity(delta)
-        if mono is not None:
-            step = step.unionByName(mono)
-        new = barrier(
-            step.where(F.col("sub") != F.col("sup"))
-            .dropDuplicates()
-            .join(closure, on=["sub", "sup"], how="left_anti"),
-            "delta",
-        )
+        new = barrier(_novel(step, closure), "delta")
         if new.isEmpty():
             return closure
         closure = closure.unionByName(new)
@@ -511,220 +520,30 @@ def property_chain_closure(
     return full
 
 
-def incremental_closure_update(
-    closure: DataFrame,
-    new_edges: DataFrame,
-    restrictions: DataFrame | None = None,
-    max_iterations: int = 100,
-) -> DataFrame:
-    """Maintain a materialized transitive closure under edge INSERTIONS.
-
-    ``closure`` is an already-materialized transitive closure (what
-    :func:`transitive_closure` returned, or the stage table the pipeline
-    wrote); ``new_edges(sub, sup)`` is a batch of newly asserted edges
-    (e.g. a streaming micro-batch of mention/subclass triples). Returns the
-    closure of (old graph ∪ new edges) WITHOUT recomputing from scratch:
-    the standard semi-naive insertion delta — seed the delta with
-    TC-bridged copies of each new edge (old ∘ new, new ∘ old, old ∘ new ∘
-    old) and iterate only the delta against the accumulated relation.
-    Cost tracks the size of the NEW entailments (a batch touching one
-    region of the graph closes in O(diameter-of-affected-region) rounds),
-    not the closure size — at 10^12-doc scale the continuous-ingest path
-    re-closes per checkpointed micro-batch this way.
-
-    With ``restrictions``, the EL monotonicity rule runs inside the same
-    delta loop (new subclass facts can mint new restriction edges, which
-    compose further — same non-linear semi-naive shape as
-    :func:`transitive_closure`).
-
-    Deletions are NOT handled (DRed/counting would be needed); the
-    pipeline's deletion story is stage-level rebuild, matching the
-    reference's batch semantics.
-    """
-    from phenoscape_owl_tools_spark.iterbarrier import IterationBarrier
-
-    barrier = IterationBarrier("closure_inc", adaptive_width=True)
-    old = barrier(_edges(closure).dropDuplicates(), "closure")
-    fresh = _edges(new_edges).dropDuplicates()
-
-    if restrictions is not None:
-        r1 = barrier(
-            restrictions.select(
-                F.col("prop").alias("r_prop"),
-                F.col("filler").alias("r_filler"),
-                F.col("iri").alias("r_iri"),
-            ),
-            "restrictions",
-        )
-
-    def monotonicity(delta: DataFrame) -> DataFrame | None:
-        if restrictions is None:
-            return None
-        return _monotonicity_rule(delta, r1)
-
-    def compose(a: DataFrame, b: DataFrame) -> DataFrame:
-        return (
-            a.alias("x").join(b.alias("y"), F.col("x.sup") == F.col("y.sub"))
-            .select(F.col("x.sub").alias("sub"), F.col("y.sup").alias("sup"))
-        )
-
-    # insertion delta seed: new, old∘new, new∘old, old∘new∘old
-    seed = (
-        fresh.unionByName(compose(old, fresh))
-        .unionByName(compose(fresh, old))
-        .unionByName(compose(compose(old, fresh), old))
-    )
-    mono = monotonicity(fresh)
-    if mono is not None:
-        seed = seed.unionByName(mono)
-    full = old
-    delta = barrier(
-        seed.where(F.col("sub") != F.col("sup"))
-        .dropDuplicates()
-        .join(full, on=["sub", "sup"], how="left_anti"),
-        "delta",
-    )
-    COMPACT_EVERY = 8
-    for it in range(max_iterations):
-        if delta.isEmpty():
-            return full
-        full = full.unionByName(delta)
-        # non-linear: delta composes with the full (old + new) relation on
-        # both sides, so derived∘derived chains and restriction edges close
-        step = compose(delta, full).unionByName(compose(full, delta))
-        mono = monotonicity(delta)
-        if mono is not None:
-            step = step.unionByName(mono)
-        delta = barrier(
-            step.where(F.col("sub") != F.col("sup"))
-            .dropDuplicates()
-            .join(full, on=["sub", "sup"], how="left_anti"),
-            "delta",
-        )
-        if (it + 1) % COMPACT_EVERY == 0:
-            full = barrier.materialize(full, "full")
-            delta = barrier.materialize(delta, "delta")
-            barrier.gc(keep=2)
-    raise RuntimeError(
-        f"incremental_closure_update did not converge in {max_iterations} iterations"
-    )
-
-
-def incremental_closure_delete(
-    closure: DataFrame,
-    asserted_edges: DataFrame,
-    deleted_edges: DataFrame,
-    restrictions: DataFrame | None = None,
-    max_iterations: int = 100,
-) -> DataFrame:
-    """Maintain a materialized transitive closure under edge DELETIONS —
-    DRed (delete-and-rederive, Gupta/Mumick/Subrahmanian SIGMOD'93):
-
-    1. **Overdelete**: everything whose derivation might use a deleted
-       edge — close the deleted set against the old closure on both sides
-       (and through the monotonicity rule) until fixpoint, intersecting
-       with the old closure so only existing facts are marked.
-    2. **Remainder** R = closure − overdeleted.
-    3. **Rederive**: put back any overdeleted fact with an alternative
-       derivation from the surviving asserted edges + R (one-step base
-       membership, R∘R composition, monotonicity over R), to fixpoint.
-
-    ``asserted_edges`` is the ASSERTED base graph (the closure alone cannot
-    distinguish asserted from derived); ``deleted_edges`` the batch being
-    retracted. Returns the closure of (asserted − deleted), computed
-    without a from-scratch refixpoint when the deletion touches a small
-    region. Insertions go through :func:`incremental_closure_update`;
-    a mixed batch = delete first, then insert.
-    """
-    from phenoscape_owl_tools_spark.iterbarrier import IterationBarrier
-
-    barrier = IterationBarrier("closure_del", adaptive_width=True)
-    old = barrier(_edges(closure).dropDuplicates(), "closure")
-    deleted = _edges(deleted_edges).dropDuplicates()
-    base_new = barrier(
-        _edges(asserted_edges).dropDuplicates()
-        .join(deleted, on=["sub", "sup"], how="left_anti"),
-        "base",
-    )
-    if restrictions is not None:
-        r1 = barrier(
-            restrictions.select(
-                F.col("prop").alias("r_prop"),
-                F.col("filler").alias("r_filler"),
-                F.col("iri").alias("r_iri"),
-            ),
-            "restrictions",
-        )
-
-    def mono(delta: DataFrame) -> DataFrame | None:
-        return None if restrictions is None else _monotonicity_rule(delta, r1)
-
-    def compose(a: DataFrame, b: DataFrame) -> DataFrame:
-        return (
-            a.alias("x").join(b.alias("y"), F.col("x.sup") == F.col("y.sub"))
-            .select(F.col("x.sub").alias("sub"), F.col("y.sup").alias("sup"))
-        )
-
-    # ---- phase 1: overdelete ----
-    over = barrier(deleted.join(old, on=["sub", "sup"], how="leftsemi"), "over")
-    delta = over
+def _overdelete(
+    barrier, old: DataFrame, deleted: DataFrame, r1: DataFrame | None,
+    max_iterations: int,
+) -> DataFrame | None:
+    """DRed phase 1: every ``old`` fact whose derivation might use a deleted
+    edge. The deleted edges that are ``old`` facts are closed against
+    ``old`` on both sides (and through the monotonicity rule) to fixpoint.
+    ``old`` is closed, so every such composition is an ``old`` fact already
+    and needs no semi-join against it; only the self-loops a cycle composes
+    are dropped, as ``old`` holds none. Returns None when no deleted edge is
+    an ``old`` fact."""
+    delta = barrier(deleted.join(old, on=["sub", "sup"], how="leftsemi"), "over")
+    if delta.isEmpty():
+        return None
+    over = delta
     for _ in range(max_iterations):
-        if delta.isEmpty():
-            break
-        step = compose(delta, old).unionByName(compose(old, delta))
-        m = mono(delta)
-        if m is not None:
-            step = step.unionByName(m)
-        delta = barrier(
-            step.dropDuplicates()
-            .join(old, on=["sub", "sup"], how="leftsemi")  # only existing facts
-            .join(over, on=["sub", "sup"], how="left_anti"),
-            "over_delta",
+        step = _with_monotonicity(
+            _compose(delta, old).unionByName(_compose(old, delta)), delta, r1
         )
+        delta = barrier(_novel(step, over), "over_delta")
+        if delta.isEmpty():
+            return over
         over = over.unionByName(delta)
-    else:
-        raise RuntimeError("overdeletion did not converge")
-
-    remainder = barrier(old.join(over, on=["sub", "sup"], how="left_anti"), "rem")
-
-    # ---- phase 3: rederive ----
-    # Only overdeleted facts can come back, so restrict every composition
-    # to the overdeleted facts' endpoints: for a target (a, c) ∈ over,
-    # look for (a, b) and (b, c) in R — cost ∝ |over| × fanout, never the
-    # all-pairs R∘R (that would be the direct_hierarchy two-hop blowup and
-    # strictly worse than the from-scratch refixpoint this path avoids).
-    R = remainder
-    targets = barrier(over.join(remainder, on=["sub", "sup"], how="left_anti"),
-                      "targets")
-    for _ in range(max_iterations):
-        if targets.isEmpty():
-            return R
-        bridged = (
-            targets.alias("t")
-            .join(R.alias("x"), F.col("t.sub") == F.col("x.sub"))
-            .join(
-                R.alias("y"),
-                (F.col("x.sup") == F.col("y.sub"))
-                & (F.col("y.sup") == F.col("t.sup")),
-            )
-            .select(F.col("t.sub").alias("sub"), F.col("t.sup").alias("sup"))
-        )
-        candidates = base_new.join(targets, on=["sub", "sup"], how="leftsemi")             .unionByName(bridged)
-        m = mono(R)
-        if m is not None:
-            candidates = candidates.unionByName(
-                m.join(targets, on=["sub", "sup"], how="leftsemi")
-            )
-        new = barrier(
-            candidates.where(F.col("sub") != F.col("sup")).dropDuplicates(),
-            "rederive",
-        )
-        if new.isEmpty():
-            return R
-        R = barrier.materialize(R.unionByName(new), "rem")
-        targets = barrier(targets.join(new, on=["sub", "sup"], how="left_anti"),
-                          "targets")
-    raise RuntimeError("rederivation did not converge")
+    raise RuntimeError("overdeletion did not converge")
 
 
 def incremental_closure_apply(
@@ -735,23 +554,39 @@ def incremental_closure_apply(
     restrictions: DataFrame | None = None,
     max_iterations: int = 100,
 ) -> DataFrame:
-    """FUSED mixed-batch maintenance: closure((asserted − deleted) ∪
-    inserted) in one overdelete pass + ONE combined rederive/insert loop.
+    """Maintain a materialized closure under a batch of edge deletions AND
+    insertions: closure((asserted − deleted) ∪ inserted), without a
+    from-scratch refixpoint.
 
-    The sequential recipe (:func:`incremental_closure_delete` then
-    :func:`incremental_closure_update`) pays two full fixpoint loops and
-    re-derives the insert seed against the already-updated closure; here
-    the rederivation rule (endpoint-constrained ``targets ⨝ R ⨝ R`` +
-    one-step base membership — never all-pairs R∘R) and the insertion
-    delta rule (``delta∘R ∪ R∘delta``) run in the SAME loop over one
-    growing accumulator, so each round's new facts — whether rederived or
-    insert-derived — immediately feed both rules. Correctness: every
-    added fact has a derivation from the new base (both rules only join
-    against facts already proven), and every fact of the true closure is
-    reached (insert-derived chains by the semi-naive argument; rederivable
-    overdeleted facts by iterating the target-constrained bridge until no
-    round adds anything). Result equals the from-scratch closure of the
-    mutated graph — asserted by the randomized mixed-batch test.
+    ``closure`` is the materialized closure of ``asserted_edges`` (what
+    :func:`transitive_closure` returned, with the same ``restrictions``);
+    ``asserted_edges`` is the ASSERTED base graph, because the closure alone
+    cannot tell asserted from derived facts. It is read only when something
+    is deleted, so a caller that only inserts may pass the closure itself.
+    Either batch may be empty.
+
+    DRed (delete-and-rederive, Gupta/Mumick/Subrahmanian SIGMOD'93) plus
+    semi-naive insertion, in one loop:
+
+    1. **Overdelete** (:func:`_overdelete`), skipped when nothing is
+       deleted. The remainder R = closure − overdeleted.
+    2. **One complete first round** from R: the inserted edges, bridged
+       through R (R∘new, new∘R, R∘new∘R) as in the standard insertion seed;
+       and the overdeleted facts with a one-step derivation from R — base
+       membership, ``over ⨝ R ⨝ R`` bridges, monotonicity over R. Since the
+       old closure is closed, R∘R and monotonicity over R can only add
+       overdeleted facts, so restricting them to those endpoints loses
+       nothing and never pays the all-pairs R∘R (the direct_hierarchy
+       two-hop blowup).
+    3. **Semi-naive rounds**: each round's new facts compose with the
+       accumulated relation on both sides (``delta∘R ∪ R∘delta``, plus
+       monotonicity), so rederived and insert-derived facts feed each
+       other — the non-linear shape of :func:`transitive_closure`.
+
+    The round count tracks the affected region (the overdelete cone plus
+    the new entailments), not the graph depth; each round is one barrier,
+    and an insert-only batch pays no overdelete pass. Result equals the
+    from-scratch closure of the mutated graph (randomized tests).
     """
     from phenoscape_owl_tools_spark.iterbarrier import IterationBarrier
 
@@ -759,121 +594,57 @@ def incremental_closure_apply(
     old = barrier(_edges(closure).dropDuplicates(), "closure")
     deleted = _edges(deleted_edges).dropDuplicates()
     fresh = _edges(inserted_edges).dropDuplicates()
-    surviving = (
-        _edges(asserted_edges).dropDuplicates()
-        .join(deleted, on=["sub", "sup"], how="left_anti")
-    )
-    base_full = barrier(surviving.unionByName(fresh).dropDuplicates(), "base")
-
+    r1 = None
     if restrictions is not None:
-        r1 = barrier(
-            restrictions.select(
-                F.col("prop").alias("r_prop"),
-                F.col("filler").alias("r_filler"),
-                F.col("iri").alias("r_iri"),
-            ),
-            "restrictions",
-        )
+        r1 = barrier(_restriction_index(restrictions), "restrictions")
 
-    def mono(delta: DataFrame) -> DataFrame | None:
-        return None if restrictions is None else _monotonicity_rule(delta, r1)
+    R = old
+    over = None
+    if not deleted.isEmpty():
+        over = _overdelete(barrier, old, deleted, r1, max_iterations)
+    if over is not None:
+        R = barrier(old.join(over, on=["sub", "sup"], how="left_anti"), "rem")
 
-    def compose(a: DataFrame, b: DataFrame) -> DataFrame:
-        return (
-            a.alias("x").join(b.alias("y"), F.col("x.sup") == F.col("y.sub"))
-            .select(F.col("x.sub").alias("sub"), F.col("y.sup").alias("sup"))
-        )
-
-    # ---- phase 1: overdelete (identical to incremental_closure_delete) ----
-    over = barrier(deleted.join(old, on=["sub", "sup"], how="leftsemi"), "over")
-    delta = over
-    for _ in range(max_iterations):
-        if delta.isEmpty():
-            break
-        step = compose(delta, old).unionByName(compose(old, delta))
-        m = mono(delta)
-        if m is not None:
-            step = step.unionByName(m)
-        delta = barrier(
-            step.dropDuplicates()
-            .join(old, on=["sub", "sup"], how="leftsemi")
-            .join(over, on=["sub", "sup"], how="left_anti"),
-            "over_delta",
-        )
-        over = over.unionByName(delta)
-    else:
-        raise RuntimeError("overdeletion did not converge")
-
-    R = barrier(old.join(over, on=["sub", "sup"], how="left_anti"), "rem")
-    targets = barrier(over.join(R, on=["sub", "sup"], how="left_anti"), "targets")
-
-    # ---- phase 2: combined rederive + insert fixpoint ----
-    # one-time insert seed bridged through the remainder (facts needing
-    # overdeleted bridges arrive later through the loop once rederived)
-    seed = (
-        fresh.unionByName(compose(R, fresh))
-        .unionByName(compose(fresh, R))
-        .unionByName(compose(compose(R, fresh), R))
+    step = _with_monotonicity(
+        fresh.unionByName(_compose(R, fresh))
+        .unionByName(_compose(fresh, R))
+        .unionByName(_compose(_compose(R, fresh), R)),
+        fresh, r1,
     )
-    m = mono(fresh)
-    if m is not None:
-        seed = seed.unionByName(m)
-    delta = barrier(
-        seed.where(F.col("sub") != F.col("sup"))
-        .dropDuplicates()
-        .join(R, on=["sub", "sup"], how="left_anti"),
-        "delta",
-    )
-    targets_live = not targets.isEmpty()
-    COMPACT_EVERY = 8
+    if over is not None:
+        surviving = _edges(asserted_edges).join(deleted, on=["sub", "sup"], how="left_anti")
+        bridged = (
+            over.alias("t")
+            .join(R.alias("x"), F.col("t.sub") == F.col("x.sub"))
+            .join(
+                R.alias("y"),
+                (F.col("x.sup") == F.col("y.sub")) & (F.col("y.sup") == F.col("t.sup")),
+            )
+            .select(F.col("t.sub").alias("sub"), F.col("t.sup").alias("sup"))
+        )
+        step = step.unionByName(surviving.join(over, on=["sub", "sup"], how="leftsemi"))
+        step = step.unionByName(bridged)
+        if r1 is not None:
+            step = step.unionByName(
+                _monotonicity_rule(R, r1).join(over, on=["sub", "sup"], how="leftsemi")
+            )
+
+    COMPACT_EVERY = 8  # see _spark_rounds: bound union width + GC temp files
     for it in range(max_iterations):
-        grow = delta
-        if targets_live:
-            bridged = (
-                targets.alias("t")
-                .join(R.alias("x"), F.col("t.sub") == F.col("x.sub"))
-                .join(
-                    R.alias("y"),
-                    (F.col("x.sup") == F.col("y.sub"))
-                    & (F.col("y.sup") == F.col("t.sup")),
-                )
-                .select(F.col("t.sub").alias("sub"), F.col("t.sup").alias("sup"))
-            )
-            cand = base_full.join(targets, on=["sub", "sup"], how="leftsemi") \
-                .unionByName(bridged)
-            mR = mono(R)
-            if mR is not None:
-                cand = cand.unionByName(
-                    mR.join(targets, on=["sub", "sup"], how="leftsemi")
-                )
-            grow = grow.unionByName(cand)
-        grow = barrier(
-            grow.where(F.col("sub") != F.col("sup"))
-            .dropDuplicates()
-            .join(R, on=["sub", "sup"], how="left_anti"),
-            "grow",
-        )
-        if grow.isEmpty():
+        delta = barrier(_novel(step, R), "delta")
+        if delta.isEmpty():
             return R
-        R = R.unionByName(grow)
+        R = R.unionByName(delta)
         if (it + 1) % COMPACT_EVERY == 0:
-            R = barrier.materialize(R, "rem")
-        if targets_live:
-            targets = barrier(
-                targets.join(grow, on=["sub", "sup"], how="left_anti"), "targets"
-            )
-            targets_live = not targets.isEmpty()
-        step = compose(grow, R).unionByName(compose(R, grow))
-        m = mono(grow)
-        if m is not None:
-            step = step.unionByName(m)
-        delta = barrier(
-            step.where(F.col("sub") != F.col("sup"))
-            .dropDuplicates()
-            .join(R, on=["sub", "sup"], how="left_anti"),
-            "delta",
+            R = barrier.materialize(R, "closure")
+            delta = barrier.materialize(delta, "delta")
+            barrier.gc(keep=2)
+        step = _with_monotonicity(
+            _compose(delta, R).unionByName(_compose(R, delta)), delta, r1
         )
-    raise RuntimeError("fused maintenance did not converge")
+    raise RuntimeError(
+        f"incremental_closure_apply did not converge in {max_iterations} iterations"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -885,7 +656,7 @@ def incremental_closure_apply(
 #   B-ary(10), avg ~7 reflexive ancestors/node:        incremental 0.38-0.47x
 #   deep-40, mid-graph deletes (cone ~3.5% of closure): incremental 0.67x
 #   deep-40, last-layer deletes (cone < 0.2%):          incremental 1.72x
-# The composed incremental recipe pays ~10 fixed full-closure scans
+# The incremental recipe measured there paid ~10 fixed full-closure scans
 # (overdelete/rederive semijoins + the insert seed's old-compose passes);
 # from-scratch pays one scan per semi-naive round (~ graph depth). So the
 # decision variables are the DEPTH PROXY (avg ancestors per node — a lower

@@ -36,7 +36,6 @@ stage manifests (row counts collected at write time), not extra actions.
 
 from __future__ import annotations
 
-import hashlib
 from dataclasses import dataclass, field
 from pathlib import Path
 
@@ -80,14 +79,6 @@ class CorpusResult:
         return {k: m.get("row_count") for k, m in self.manifests.items()}
 
 
-def _fingerprint(*parts: str) -> str:
-    h = hashlib.sha256()
-    for p in parts:
-        h.update(p.encode())
-        h.update(b"\x1f")
-    return h.hexdigest()[:16]
-
-
 def doc_stats(documents: DataFrame, text_col: str = "text") -> DataFrame:
     """Per-document quality + repetition metrics in ONE map-only pass
     (both operators are pure column math over the same split — Catalyst
@@ -111,35 +102,11 @@ def run(
     out_path = Path(out_dir) if out_dir else None
     result = CorpusResult(corpus=None)  # type: ignore[arg-type]
 
-    def stage(name: str, fingerprint: str, build, bucket_col: str | None = None):
-        if out_path is not None:
-            p = out_path / name
-            if resume and catalog.is_stage_valid(p, fingerprint):
-                df = catalog.read_table(spark, p)
-                result.manifests[name] = catalog.read_manifest(p) | {
-                    "resumed": True
-                }
-                result.stages[name] = df
-                return df
-            df = build()
-            m = catalog.write_table(
-                df,
-                p,
-                fingerprint=fingerprint,
-                bucket_col=bucket_col,
-                n_buckets=cfg.n_buckets,
-            )
-            result.manifests[name] = m
-            df = catalog.read_table(spark, p)
-            result.stages[name] = df
-            return df
-        df = build().localCheckpoint(eager=True)
-        result.stages[name] = df
-        return df
+    stage = catalog.stage_runner(spark, result, out_path, resume, cfg.n_buckets)
 
     # content-covering fingerprint (see kb_build.run: schema-only
     # fingerprints would serve corpus A's cache for corpus B)
-    in_fp = _fingerprint(
+    in_fp = catalog.fingerprint(
         str(documents.schema),
         str(catalog.content_checksum(documents)) if out_path is not None else "",
         str(catalog.content_checksum(benchmark))
@@ -157,7 +124,7 @@ def run(
 
     stats = stage(
         "doc_stats",
-        _fingerprint("stats", in_fp),
+        catalog.fingerprint("stats", in_fp),
         lambda: doc_stats(docs, text_col),
         bucket_col="doc_id",
     )
@@ -169,7 +136,7 @@ def run(
 
     exact = stage(
         "exact_groups",
-        _fingerprint("exact", in_fp),
+        catalog.fingerprint("exact", in_fp),
         lambda: dedup.exact_dedup(filtered, text_col),
         bucket_col="doc_id",
     )
@@ -182,14 +149,14 @@ def run(
     if cfg.lsh_threshold is not None:
         pairs = stage(
             "neardup_pairs",
-            _fingerprint("pairs", in_fp),
+            catalog.fingerprint("pairs", in_fp),
             lambda: dedup.minhash_lsh_dedup(
                 exact_kept, threshold=cfg.lsh_threshold
             ),
         )
         clusters = stage(
             "dup_clusters",
-            _fingerprint("clusters", in_fp),
+            catalog.fingerprint("clusters", in_fp),
             lambda: dedup.dedup_clusters(exact_kept, pairs),
             bucket_col="doc_id",
         )
@@ -237,7 +204,7 @@ def run(
 
         semantic = stage(
             "semantic_kept",
-            _fingerprint("semantic", in_fp),
+            catalog.fingerprint("semantic", in_fp),
             _semantic,
             bucket_col="doc_id",
         )
@@ -252,7 +219,7 @@ def run(
     if benchmark is not None:
         contaminated = stage(
             "contaminated",
-            _fingerprint("contam", in_fp),
+            catalog.fingerprint("contam", in_fp),
             lambda: dedup.decontaminate(
                 deduped,
                 benchmark,
@@ -268,7 +235,7 @@ def run(
     if cfg.budget_tokens is not None:
         sampled = stage(
             "sampled",
-            _fingerprint("sample", in_fp),
+            catalog.fingerprint("sample", in_fp),
             lambda: quota_sample(
                 deduped, cfg.budget_tokens, by=cfg.budget_by, text_col=text_col
             ),
@@ -278,7 +245,7 @@ def run(
 
     kept = stage(
         "kept_ids",
-        _fingerprint("kept", in_fp),
+        catalog.fingerprint("kept", in_fp),
         lambda: deduped.select("doc_id"),
         bucket_col="doc_id",
     )
@@ -294,7 +261,7 @@ def run(
 
         stage(
             "packed",
-            _fingerprint("packed", in_fp),
+            catalog.fingerprint("packed", in_fp),
             lambda: pack_sequences(result.corpus, cfg.seq_len, text_col),
             bucket_col="doc_id",
         )

@@ -23,7 +23,6 @@ Scale design notes:
 
 from __future__ import annotations
 
-import hashlib
 import json
 from dataclasses import dataclass, field
 from pathlib import Path
@@ -315,14 +314,6 @@ def absence_query(
     ).dropDuplicates()
 
 
-def _fingerprint(*parts: str) -> str:
-    h = hashlib.sha256()
-    for p in parts:
-        h.update(p.encode())
-        h.update(b"\x1f")
-    return h.hexdigest()[:16]
-
-
 def run(
     spark: SparkSession,
     inputs: KBInputs,
@@ -335,26 +326,7 @@ def run(
     result = KBResult(triples=None)  # type: ignore[arg-type]
     out_path = Path(out_dir) if out_dir else None
 
-    def stage(name: str, fingerprint: str, build, bucket_col: str | None = None):
-        """Materialize one stage with manifest + resume."""
-        if out_path is not None:
-            p = out_path / name
-            if resume and catalog.is_stage_valid(p, fingerprint):
-                df = catalog.read_table(spark, p)
-                result.manifests[name] = catalog.read_manifest(p) | {"resumed": True}
-                result.stages[name] = df
-                return df
-            df = build()
-            m = catalog.write_table(
-                df, p, fingerprint=fingerprint, bucket_col=bucket_col, n_buckets=n_buckets
-            )
-            result.manifests[name] = m
-            df = catalog.read_table(spark, p)
-            result.stages[name] = df
-            return df
-        df = build().localCheckpoint(eager=True)
-        result.stages[name] = df
-        return df
+    stage = catalog.stage_runner(spark, result, out_path, resume, n_buckets)
 
     # Resume fingerprint covers input CONTENT, not just shape: a schema-only
     # fingerprint would happily serve corpus A's cached stages for corpus B.
@@ -380,34 +352,36 @@ def run(
         content_parts.append(
             f"{name}={catalog.content_checksum(df) if df is not None else 'none'}"
         )
-    in_fp = _fingerprint(
+    in_fp = catalog.fingerprint(
         str(inputs.documents.schema), str(sorted(inputs.terms.columns)),
         *content_parts,
     )
 
-    linked = stage("linked_mentions", _fingerprint("linked", in_fp),
+    linked = stage("linked_mentions", catalog.fingerprint("linked", in_fp),
                    lambda: link_mentions(spark, inputs))
-    ann = stage("span_annotations", _fingerprint("ann", in_fp),
+    ann = stage("span_annotations", catalog.fingerprint("ann", in_fp),
                 lambda: compose_span_annotations(linked))
     dt = doc_triples(ann)
-    doc_trip = stage("doc_triples", _fingerprint("doc_triples", in_fp), lambda: dt["triples"])
-    eq_edges = stage("eq_edges", _fingerprint("eq_edges", in_fp), lambda: dt["eq_edges"])
-    states = stage("states", _fingerprint("states", in_fp), lambda: dt["states"])
-    depict = stage("depictions", _fingerprint("depict", in_fp),
+    doc_trip = stage("doc_triples", catalog.fingerprint("doc_triples", in_fp),
+                     lambda: dt["triples"])
+    eq_edges = stage("eq_edges", catalog.fingerprint("eq_edges", in_fp), lambda: dt["eq_edges"])
+    states = stage("states", catalog.fingerprint("states", in_fp), lambda: dt["states"])
+    depict = stage("depictions", catalog.fingerprint("depict", in_fp),
                    lambda: depiction_triples(inputs.documents, linked))
 
     tbox = build_tbox(inputs)
     restrictions = stage(
         "restrictions",
-        _fingerprint("restr", in_fp),
+        catalog.fingerprint("restr", in_fp),
         lambda: tbox["restrictions"].unionByName(dt["restrictions"]).dropDuplicates(),
     )
-    negates = stage("negates", _fingerprint("negates", in_fp), lambda: tbox["negates"])
-    tbox_triples = stage("tbox_triples", _fingerprint("tboxt", in_fp), lambda: tbox["triples"])
+    negates = stage("negates", catalog.fingerprint("negates", in_fp), lambda: tbox["negates"])
+    tbox_triples = stage("tbox_triples", catalog.fingerprint("tboxt", in_fp),
+                         lambda: tbox["triples"])
 
     cl = stage(
         "closure",
-        _fingerprint("closure", in_fp),
+        catalog.fingerprint("closure", in_fp),
         lambda: closure_op.el_closure(
             inputs.subclass_edges.unionByName(eq_edges),
             equiv_edges=inputs.equiv_edges,
@@ -418,7 +392,7 @@ def run(
 
     neg_sub = stage(
         "negation_hierarchy",
-        _fingerprint("neg", in_fp),
+        catalog.fingerprint("neg", in_fp),
         lambda: negation.negation_subclass_axioms(negates, cl),
     )
 
@@ -443,12 +417,12 @@ def run(
     result.manifests["_config"] = {"presence_path_salt": salt}
     presences = stage(
         "presences",
-        _fingerprint("presences", in_fp, f"salt={salt}"),
+        catalog.fingerprint("presences", in_fp, f"salt={salt}"),
         lambda: presence_query(exhibits, describes, cl, presence_map, taxa, salt=salt),
     )
     absences = stage(
         "absences",
-        _fingerprint("absences", in_fp, f"salt={salt}"),
+        catalog.fingerprint("absences", in_fp, f"salt={salt}"),
         lambda: absence_query(exhibits, describes, cl, absence_map, taxa, salt=salt),
     )
 
@@ -457,7 +431,7 @@ def run(
     parts.append(
         stage(
             "closure_triples",
-            _fingerprint("clt", in_fp),
+            catalog.fingerprint("clt", in_fp),
             lambda: cl.select(
                 F.col("sub").alias("subj"),
                 F.lit(vocab.RDFS_SUBCLASS_OF).alias("pred"),
@@ -473,7 +447,7 @@ def run(
     )
     if inputs.gene_annotations is not None:
         parts.append(
-            stage("gene_profiles", _fingerprint("gp", in_fp),
+            stage("gene_profiles", catalog.fingerprint("gp", in_fp),
                   lambda: profiles_op.gene_profiles(inputs.gene_annotations))
         )
     if inputs.taxonomy_edges is not None and inputs.state_phenotypes is not None:
@@ -489,12 +463,12 @@ def run(
             _, prof = profiles_op.evolutionary_profiles(inputs.taxonomy_edges, assoc)
             return profiles_op.profile_triples(prof, sp)
 
-        parts.append(stage("evolutionary_profiles", _fingerprint("evo", in_fp), build_evo))
+        parts.append(stage("evolutionary_profiles", catalog.fingerprint("evo", in_fp), build_evo))
     if inputs.homology is not None:
         from phenoscape_owl_tools_spark.operators import homology as hom_op
 
         parts.append(
-            stage("homology_triples", _fingerprint("hom", in_fp),
+            stage("homology_triples", catalog.fingerprint("hom", in_fp),
                   lambda: hom_op.homology_axioms(inputs.homology))
         )
 
@@ -508,7 +482,8 @@ def run(
             all_t = components.canonicalize_triples(all_t, comp)
         return all_t.dropDuplicates()
 
-    triples = stage("triples", _fingerprint("emit", in_fp), build_all_triples, bucket_col="subj")
+    triples = stage("triples", catalog.fingerprint("emit", in_fp), build_all_triples,
+                    bucket_col="subj")
     result.triples = triples
     if out_path is not None:
         (out_path / "_pipeline_manifest.json").write_text(

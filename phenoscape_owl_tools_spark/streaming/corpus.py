@@ -26,10 +26,14 @@ Semantics contract (asserted by tests/test_streaming.py):
   of its micro-batch AND no other batch recorded a keeper with the same
   content hash and a smaller doc_id — equal to the batch decision whenever
   documents arrive in doc_id order (the natural discipline for
-  monotonically-keyed ingest). Replay after checkpoint loss is idempotent
-  in ANY order: decisions compare ids, not arrival times, and each batch
-  overwrites its own content-keyed partition (the
-  ``ingest._drive_extraction_stream`` discipline).
+  monotonically-keyed ingest). Under that discipline, replay after
+  checkpoint loss is idempotent: each batch overwrites its own
+  content-keyed partition (the ``ingest._drive_extraction_stream``
+  discipline). Out of doc_id order it is NOT: a smaller-id duplicate that
+  arrives in a later batch leaves both keepers ``kept`` (the kept ids then
+  hold duplicate content), and an out-of-order replay can flip an earlier
+  batch's decision. No post-drain ``min(doc_id)`` per content hash
+  reconciliation exists yet.
 
 Every micro-batch writes a lineage manifest (row count, checksum,
 fingerprint = batch content key) via ``catalog.write_table`` — the

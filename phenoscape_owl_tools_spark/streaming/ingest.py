@@ -434,8 +434,9 @@ def run_incremental_closure(
 ) -> str:
     """Continuous closure maintenance: new edge files stream in; each
     micro-batch re-materializes the transitive closure INCREMENTALLY
-    (operators.closure.incremental_closure_update — cost tracks new
-    entailments, not closure size) and writes a new closure version.
+    (operators.closure.incremental_closure_apply with an insert-only
+    batch — cost tracks new entailments, not closure size) and writes a
+    new closure version.
 
     Versioning: each batch writes ``{out_path}/v=<k>`` then updates the
     ``_LATEST`` pointer file — readers always load a complete snapshot
@@ -452,40 +453,10 @@ def run_incremental_closure(
     implementation, chosen because a parquet-dir pointer swap is the
     strongest atomicity available without a table format.
     """
-    import os
-
-    from phenoscape_owl_tools_spark.operators.closure import (
-        incremental_closure_update,
-    )
-
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    edges = reader.parquet(edges_path)
-
-    latest_file = os.path.join(out_path, "_LATEST")
-
-    def current_closure():
-        if os.path.exists(latest_file):
-            with open(latest_file) as fh:
-                return spark.read.parquet(fh.read().strip())
-        return spark.createDataFrame([], "sub string, sup string")
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.dropDuplicates().localCheckpoint(eager=True)
-        if batch_df.isEmpty():
-            return
-        updated = incremental_closure_update(current_closure(), batch_df)
-        version_path = os.path.join(out_path, f"v={batch_id}")
-        updated.write.mode("overwrite").parquet(version_path)
-        tmp = latest_file + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(version_path)
-        os.replace(tmp, latest_file)  # atomic pointer swap
-
-    return _drive_closure_stream(
-        spark, edges, sink, out_path, latest_file, checkpoint_path
-    )
+    return _drive_closure_stream(spark, reader.parquet(edges_path), out_path, checkpoint_path)
 
 
 def run_incremental_nt_closure(
@@ -505,11 +476,6 @@ def run_incremental_nt_closure(
     atomic ``_LATEST`` pointer. The end-to-end continuous-ingest shape: an
     upstream exporter appends triple dumps; the closure follows without
     recomputes."""
-    import os
-
-    from phenoscape_owl_tools_spark.operators.closure import (
-        incremental_closure_update,
-    )
     from phenoscape_owl_tools_spark.sources.ttl import parse_ntriples_lines
 
     reader = spark.readStream
@@ -520,8 +486,28 @@ def run_incremental_nt_closure(
         .where(F.col("pred") == edge_pred)
         .select(F.col("subj").alias("sub"), F.col("obj").alias("sup"))
     )
+    return _drive_closure_stream(spark, edges, out_path, checkpoint_path)
+
+
+def _drive_closure_stream(
+    spark: SparkSession, edges: DataFrame, out_path: str, checkpoint_path: str,
+) -> str:
+    """Drain the ``edges(sub, sup)`` stream, folding each micro-batch into
+    the closure snapshot that ``_LATEST`` points at; returns the final
+    snapshot path."""
+    import os
+
+    from phenoscape_owl_tools_spark.operators.closure import (
+        incremental_closure_apply,
+    )
 
     latest_file = os.path.join(out_path, "_LATEST")
+
+    def commit(version_path: str) -> None:
+        tmp = latest_file + ".tmp"
+        with open(tmp, "w") as fh:
+            fh.write(version_path)
+        os.replace(tmp, latest_file)  # atomic pointer swap
 
     def current_closure():
         if os.path.exists(latest_file):
@@ -533,24 +519,12 @@ def run_incremental_nt_closure(
         batch_df = batch_df.dropDuplicates().localCheckpoint(eager=True)
         if batch_df.isEmpty():
             return
-        updated = incremental_closure_update(current_closure(), batch_df)
+        # insert-only batch: a closure is its own asserted base
+        current = current_closure()
+        updated = incremental_closure_apply(current, current, batch_df.limit(0), batch_df)
         version_path = os.path.join(out_path, f"v={batch_id}")
         updated.write.mode("overwrite").parquet(version_path)
-        tmp = latest_file + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(version_path)
-        os.replace(tmp, latest_file)
-
-    return _drive_closure_stream(
-        spark, edges, sink, out_path, latest_file, checkpoint_path
-    )
-
-
-def _drive_closure_stream(
-    spark: SparkSession, edges: DataFrame, sink, out_path: str,
-    latest_file: str, checkpoint_path: str,
-) -> str:
-    import os
+        commit(version_path)
 
     (
         edges.writeStream.foreachBatch(sink)
@@ -566,9 +540,6 @@ def _drive_closure_stream(
         spark.createDataFrame([], "sub string, sup string").write.mode(
             "overwrite"
         ).parquet(version_path)
-        tmp = latest_file + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(version_path)
-        os.replace(tmp, latest_file)
+        commit(version_path)
     with open(latest_file) as fh:
         return fh.read().strip()
