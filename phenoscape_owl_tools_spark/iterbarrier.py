@@ -1,5 +1,6 @@
 """Iteration barrier for driver-loop fixpoints (closure, connected
-components, chain saturation).
+components, chain saturation), and the driver-route rule they and
+SemDeDup share.
 
 Why not ``localCheckpoint``/``checkpoint``: measured on Spark 4.1.2, a loop
 whose iteration k+1 derives from iteration k's *checkpointed* frame shows
@@ -24,7 +25,10 @@ through :meth:`IterationBarrier.from_pandas`. Anything larger keeps the
 Spark loop, so driver state never exceeds that constant. Measured on a
 cold 2k-document KB build plus its SPARQL loop (4 cores, local[4],
 BENCH.md §22): Spark jobs fell from 255 to 160, and the build's CPU time
-from 20.8 to 17.6 s (medians of 12 runs).
+from 20.8 to 17.6 s (medians of 12 runs). Cascade SemDeDup
+(``operators/semdedup.py``) routes its vector set by the same rule: one
+Arrow collect of at most that many rows, then the assignment GEMM and
+the pair tiles on the driver, so no Python worker starts.
 """
 
 from __future__ import annotations
@@ -179,5 +183,6 @@ TARGET_ROWS_PER_PARTITION = 50_000
 
 
 def fits_driver(rows: int) -> bool:
-    """Route a fixpoint to the driver: its state fits one barrier partition."""
+    """Route a fixpoint or a SemDeDup vector set to the driver: its state
+    fits one barrier partition."""
     return rows <= TARGET_ROWS_PER_PARTITION

@@ -448,7 +448,12 @@ def corpus_hub_nodes(
     :func:`jaccard_similarity` probes for itself when none is supplied.
     Compute once and pass via ``hubs=`` to amortize the probe (one
     groupBy/orderBy/limit/collect) across repeated similarity calls
-    against the same corpus (r3 verdict nit)."""
+    against the same corpus (r3 verdict nit).
+
+    ``bits`` is bounded like ``hub_bits``: one hub per bit of a signed
+    64-bit mask, so at most 62."""
+    if not 0 <= bits <= 62:
+        raise ValueError(f"bits must be in [0, 62], got {bits}")
     ci = indirect_associations(
         corpus_profiles.select("individual", "phenotype"), closure
     )

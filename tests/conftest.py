@@ -37,12 +37,14 @@ SF01 = "/root/testdata/sf0.01"
 
 @pytest.fixture
 def both_routes(monkeypatch):
-    """Run a check under both fixpoint routes of ``iterbarrier.fits_driver``.
+    """Run a check under both routes of ``iterbarrier.fits_driver``: the
+    driver route and the Spark route of every operator that routes on it
+    (the closure and connected-components fixpoints, cascade SemDeDup).
 
     Use as a decorator on a nested zero-argument function: it runs once on
-    the driver route (test-sized seeds always fit one partition) and once
-    with ``TARGET_ROWS_PER_PARTITION`` patched to 0, so every non-empty seed
-    takes the Spark loop. A failure notes the route it came from.
+    the driver route (test-sized inputs always fit one partition) and once
+    with ``TARGET_ROWS_PER_PARTITION`` patched to 0, so every non-empty
+    input takes the Spark route. A failure notes the route it came from.
     """
     from phenoscape_owl_tools_spark import iterbarrier
 
@@ -54,7 +56,7 @@ def both_routes(monkeypatch):
                 try:
                     check()
                 except BaseException as exc:
-                    exc.add_note(f"fixpoint route: {route}")
+                    exc.add_note(f"route: {route}")
                     raise
         return check
 

@@ -3,6 +3,9 @@ operators applied in sequence; manifests + resume behave like the KB build."""
 
 from __future__ import annotations
 
+import tempfile
+from pathlib import Path
+
 from pyspark.sql import functions as F
 
 from phenoscape_owl_tools_spark.operators import dedup, textstats
@@ -99,56 +102,63 @@ def test_pipeline_without_optional_stages(spark):
     assert 0 < got <= docs.count()
 
 
-def test_pipeline_semantic_and_packing_stages(spark, tmp_path):
+def test_pipeline_semantic_and_packing_stages(spark, tmp_path, both_routes):
     from phenoscape_owl_tools_spark.operators import semdedup
     from phenoscape_owl_tools_spark.operators.packing import pack_sequences
 
     docs = _docs(spark)
     emb = spark.read.parquet(f"{SF001}/embeddings.parquet")
     cfg = corpus_build.CorpusConfig(seq_len=512)
-    out = tmp_path / "corpus_sem"
-    res = corpus_build.run(spark, docs, embeddings=emb, out_dir=out, config=cfg)
-    got = {r["doc_id"] for r in res.corpus.select("doc_id").collect()}
-
-    # restate: text-dedup survivors, then SemDeDup over THEIR embeddings only
     base = _expected_ids(spark, docs, None, corpus_build.CorpusConfig())
-    surv = emb.where(F.col("vec_id").cast("string").isin(*base))
-    sem = semdedup.semantic_dedup(surv, k=cfg.sem_k, threshold=cfg.sem_threshold)
-    sem_kept = {
-        str(r["vec_id"]) for r in sem.where(F.col("kept")).collect()
-    }
-    assert got == base & sem_kept
-    assert got < base  # the synthetic corpus HAS semantic near-dups
 
-    # the packed stage is a true decision table over exactly the corpus
-    packed = res.stages["packed"]
-    assert {r["doc_id"] for r in packed.select("doc_id").collect()} == got
-    expect_packed = {
-        tuple(r) for r in pack_sequences(res.corpus, 512).collect()
-    }
-    assert {tuple(r) for r in packed.collect()} == expect_packed
+    @both_routes
+    def _():
+        # a fresh out_dir per route, so the second route does not resume
+        out = Path(tempfile.mkdtemp(prefix="corpus_sem_", dir=tmp_path))
+        res = corpus_build.run(spark, docs, embeddings=emb, out_dir=out, config=cfg)
+        got = {r["doc_id"] for r in res.corpus.select("doc_id").collect()}
 
-    # resume covers the new stages too
-    r2 = corpus_build.run(spark, docs, embeddings=emb, out_dir=out, config=cfg)
-    assert r2.manifests["semantic_kept"].get("resumed")
-    assert r2.manifests["packed"].get("resumed")
+        # restate: text-dedup survivors, then SemDeDup over THEIR embeddings only
+        surv = emb.where(F.col("vec_id").cast("string").isin(*base))
+        sem = semdedup.semantic_dedup(surv, k=cfg.sem_k, threshold=cfg.sem_threshold)
+        sem_kept = {
+            str(r["vec_id"]) for r in sem.where(F.col("kept")).collect()
+        }
+        assert got == base & sem_kept
+        assert got < base  # the synthetic corpus HAS semantic near-dups
+
+        # the packed stage is a true decision table over exactly the corpus
+        packed = res.stages["packed"]
+        assert {r["doc_id"] for r in packed.select("doc_id").collect()} == got
+        expect_packed = {
+            tuple(r) for r in pack_sequences(res.corpus, 512).collect()
+        }
+        assert {tuple(r) for r in packed.collect()} == expect_packed
+
+        # resume covers the new stages too
+        r2 = corpus_build.run(spark, docs, embeddings=emb, out_dir=out, config=cfg)
+        assert r2.manifests["semantic_kept"].get("resumed")
+        assert r2.manifests["packed"].get("resumed")
 
 
-def test_semantic_stage_keeps_unembedded_docs(spark):
+def test_semantic_stage_keeps_unembedded_docs(spark, both_routes):
     docs = _docs(spark)
     # embeddings for only half the corpus: un-embedded docs have no
     # semantic verdict and MUST survive the stage
     emb = spark.read.parquet(f"{SF001}/embeddings.parquet").where(
         F.col("vec_id") % 2 == 0
     )
-    res = corpus_build.run(spark, docs, embeddings=emb)
-    got = {r["doc_id"] for r in res.corpus.select("doc_id").collect()}
     base = _expected_ids(spark, docs, None, corpus_build.CorpusConfig())
     odd_base = {d for d in base if int(d) % 2 == 1}
-    assert odd_base <= got  # nothing un-embedded was dropped
-    sem = res.stages["semantic_kept"]
-    dropped = {r["doc_id"] for r in sem.where(~F.col("kept")).collect()}
-    assert got == base - dropped
+
+    @both_routes
+    def _():
+        res = corpus_build.run(spark, docs, embeddings=emb)
+        got = {r["doc_id"] for r in res.corpus.select("doc_id").collect()}
+        assert odd_base <= got  # nothing un-embedded was dropped
+        sem = res.stages["semantic_kept"]
+        dropped = {r["doc_id"] for r in sem.where(~F.col("kept")).collect()}
+        assert got == base - dropped
 
 
 def test_semantic_stage_trained_mode(spark):

@@ -1,11 +1,13 @@
 """semantic_dedup: k=1 degeneration vs the exact brute-force pair oracle,
 assignment determinism, within-cluster restriction, keep-rule consistency,
-and the no-cartesian / map-only-assignment plan contracts."""
+the no-cartesian / map-only-assignment plan contracts, and the driver
+route deciding exactly as the Spark route."""
 
 from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import Row
 
 from phenoscape_owl_tools_spark.operators.dedup import embedding_near_dups
@@ -60,15 +62,18 @@ def test_pairs_are_within_cluster_and_block_width_invariant(spark):
     assert pairs4 == pairs2
 
 
-def test_keep_rule_matches_pairs(spark):
+def test_keep_rule_matches_pairs(spark, both_routes):
     emb = _mkemb(spark)
     dropped = {
         r["id_b"] for r in semantic_near_dups(emb, k=4, threshold=0.9).collect()
     }
-    decisions = semantic_dedup(emb, k=4, threshold=0.9).collect()
-    assert len(decisions) == 64
-    for r in decisions:
-        assert r["kept"] == (r["vec_id"] not in dropped)
+
+    @both_routes
+    def _():
+        decisions = semantic_dedup(emb, k=4, threshold=0.9).collect()
+        assert len(decisions) == 64
+        for r in decisions:
+            assert r["kept"] == (r["vec_id"] not in dropped)
 
 
 def test_assignment_is_map_only_and_pairs_have_no_cartesian(spark):
@@ -97,7 +102,7 @@ def test_assignment_ties_break_to_smallest_cluster(spark):
     assert set(got.values()) == {0}
 
 
-def test_string_ids_round_trip(spark):
+def test_string_ids_round_trip(spark, both_routes):
     rows = [
         Row(vec_id=f"doc-{i:03d}", embedding=[math.sin(0.7 * (i - i % 2) + 1.3 * j) for j in range(6)])
         for i in range(12)
@@ -107,10 +112,13 @@ def test_string_ids_round_trip(spark):
     assert pairs, "even/odd twins must pair"
     for r in pairs:
         assert isinstance(r["id_a"], str) and r["id_a"] < r["id_b"]
-    decisions = {r["vec_id"]: r["kept"] for r in semantic_dedup(emb, k=2, threshold=0.999).collect()}
-    assert set(decisions) == {f"doc-{i:03d}" for i in range(12)}
-    dropped = {r["id_b"] for r in pairs}
-    assert all(decisions[v] == (v not in dropped) for v in decisions)
+
+    @both_routes
+    def _():
+        decisions = {r["vec_id"]: r["kept"] for r in semantic_dedup(emb, k=2, threshold=0.999).collect()}
+        assert set(decisions) == {f"doc-{i:03d}" for i in range(12)}
+        dropped = {r["id_b"] for r in pairs}
+        assert all(decisions[v] == (v not in dropped) for v in decisions)
 
 
 def test_semantic_pairs_compose_with_cluster_collapse(spark):
@@ -187,16 +195,27 @@ def test_kept_set_mode_matches_paper_on_chains(spark):
     assert paper == {0: True, 1: False, 2: True}
 
 
-def test_kept_set_never_drops_more_than_cascade(spark):
+def test_kept_set_never_drops_more_than_cascade(spark, both_routes):
     emb = _mkemb(spark)
     for thr in (0.9, 0.999):
-        casc = {r["vec_id"]: r["kept"]
-                for r in semantic_dedup(emb, k=4, threshold=thr).collect()}
         paper = {r["vec_id"]: r["kept"]
                  for r in semantic_dedup(emb, k=4, threshold=thr, mode="kept_set").collect()}
-        assert set(casc) == set(paper)
-        # kept_set keeps a superset: every cascade-kept doc stays kept
-        assert all(paper[i] for i in casc if casc[i])
+
+        # kept_set has one route; cascade is checked on both
+        @both_routes
+        def _():
+            casc = {r["vec_id"]: r["kept"]
+                    for r in semantic_dedup(emb, k=4, threshold=thr).collect()}
+            assert set(casc) == set(paper)
+            # kept_set keeps a superset: every cascade-kept doc stays kept
+            assert all(paper[i] for i in casc if casc[i])
+            # at 0.999 only the sparse i -> i+9 near-period CHAINS survive
+            # as pairs, so the two modes genuinely diverge; at 0.9 the graph
+            # is dense near-cliques (everyone neighbors the kept minimum)
+            # where the modes legitimately agree
+            if thr == 0.999:
+                assert casc != paper
+
         # kept_set must equal the sequential greedy run over the SAME
         # near-dup pairs (the sin fixture chains through its ~2pi/0.7
         # near-period, so cascade and kept_set genuinely diverge here)
@@ -217,12 +236,6 @@ def test_kept_set_never_drops_more_than_cascade(spark):
                 kept.add(i)
         expect = {i: (i not in ids or i in kept) for i in paper}
         assert paper == expect
-        # at 0.999 only the sparse i -> i+9 near-period CHAINS survive as
-        # pairs, so the two modes genuinely diverge; at 0.9 the graph is
-        # dense near-cliques (everyone neighbors the kept minimum) where
-        # the modes legitimately agree
-        if thr == 0.999:
-            assert casc != paper
 
 
 def test_semantic_dedup_rejects_unknown_mode(spark):
@@ -232,3 +245,96 @@ def test_semantic_dedup_rejects_unknown_mode(spark):
         assert False, "expected ValueError"
     except ValueError:
         pass
+
+
+def _run_at_cap(monkeypatch, emb, cap, **kw):
+    """(sorted decision rows, schema, mapInPandas calls) of a cascade run
+    with the driver-route row cap patched to ``cap``."""
+    from phenoscape_owl_tools_spark import iterbarrier
+
+    calls: list = []
+    real = type(emb).mapInPandas
+
+    def spy(self, *a, **k):
+        calls.append(a)
+        return real(self, *a, **k)
+
+    with monkeypatch.context() as m:
+        m.setattr(type(emb), "mapInPandas", spy)
+        m.setattr(iterbarrier, "TARGET_ROWS_PER_PARTITION", cap)
+        df = semantic_dedup(emb, **kw)
+        rows = sorted(map(tuple, df.collect()), key=repr)
+    return rows, df.schema, len(calls)
+
+
+def _on_both_routes(monkeypatch, emb, **kw):
+    """route -> :func:`_run_at_cap` for an n-vector input: the cap n keeps
+    the run on the driver, n - 1 sends it to Spark."""
+    n = emb.count()
+    return {
+        "driver": _run_at_cap(monkeypatch, emb, n, **kw),
+        "spark": _run_at_cap(monkeypatch, emb, n - 1, **kw),
+    }
+
+
+def test_route_boundary_same_decisions(spark, monkeypatch):
+    """At n vectors the cap n keeps the run on the driver (no mapInPandas);
+    n - 1 sends it to Spark. Both give the same rows and schema."""
+    emb = _mkemb(spark)
+    got = _on_both_routes(monkeypatch, emb, k=4, threshold=0.9)
+    (d_rows, d_schema, d_calls), (s_rows, s_schema, s_calls) = got["driver"], got["spark"]
+    assert d_calls == 0 and s_calls > 0
+    assert len(d_rows) == 64 and any(not r[2] for r in d_rows)
+    assert d_rows == s_rows
+    assert d_schema == s_schema
+    assert [f.nullable for f in d_schema.fields] == [True, True, False]
+
+
+def _degenerate(spark, rows):
+    return spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
+
+
+def test_degenerate_inputs_on_both_routes(spark, monkeypatch):
+    cases = {
+        # an empty embedding set: an empty table with the right schema
+        "empty": ([], []),
+        "single": ([(7, [0.3, 0.4])], [(7, 0, True)]),
+        # a zero vector has cosine 0 to everything: never pairs, and it
+        # ties every centroid, so it takes cluster 0
+        "zero": (
+            [(1, [0.0, 0.0]), (2, [1.0, 0.0]), (3, [1.0, 0.001])],
+            [(1, 0, True), (2, 1, True), (3, 1, False)],
+        ),
+        # identical vectors: one cluster (centroid ties go to 0) and every
+        # pair a hit, so only the smallest id survives
+        "identical": (
+            [(i, [0.6, 0.8]) for i in range(5)],
+            [(0, 0, True)] + [(i, 0, False) for i in range(1, 5)],
+        ),
+        # a NULL id sorts first (so it is centroid 0) and, pairing with
+        # nothing, is kept
+        "null_id": (
+            [(None, [0.0, 1.0]), (1, [1.0, 0.0]), (2, [1.0, 0.01]), (3, [-1.0, 0.0])],
+            [(1, 1, True), (2, 1, False), (3, 0, True), (None, 0, True)],
+        ),
+    }
+    for name, (rows, want) in cases.items():
+        got = _on_both_routes(monkeypatch, _degenerate(spark, rows), k=2, threshold=0.9)
+        (d_rows, d_schema, d_calls), (s_rows, s_schema, s_calls) = got["driver"], got["spark"]
+        assert d_calls == 0 and s_calls > 0, name
+        assert d_rows == s_rows == sorted(want, key=repr), name
+        assert d_schema == s_schema, name
+
+
+def test_null_id_in_a_pair_fails_on_both_routes(spark, monkeypatch):
+    """A NULL id has no order against another id, so a NULL-id vector that
+    pairs fails the tile scorer. The Spark route has always failed here;
+    the driver route must not silently decide instead."""
+    from pyspark.errors import PythonException
+
+    emb = _degenerate(spark, [(None, [1.0, 0.0]), (1, [1.0, 0.0]), (2, [-1.0, 0.0])])
+    for cap in (3, 2):  # driver route, then Spark route
+        with pytest.raises(
+            (TypeError, PythonException), match="not supported between instances of"
+        ):
+            _run_at_cap(monkeypatch, emb, cap, k=2, threshold=0.9)

@@ -3,6 +3,8 @@ from __future__ import annotations
 import math
 import random
 
+import pytest
+
 from phenoscape_owl_tools_spark.operators import closure, similarity
 from phenoscape_owl_tools_spark.oracle import pyoracle
 
@@ -370,6 +372,17 @@ def test_jaccard_precomputed_hubs_skip_probe_and_match(spark):
     padded = hubs + [f"http://example.org/not-a-node/{i}" for i in range(59)]
     assert len(padded) == 63
     assert rows(hubs=padded) == probed
+
+
+def test_corpus_hub_nodes_rejects_bits_outside_mask(spark):
+    """More hub nodes than mask bits would be dropped silently by
+    jaccard_similarity, so corpus_hub_nodes refuses them up front."""
+    prof_df, cl = _skewed_case(spark)
+    c = prof_df.where(prof_df["individual"].startswith("VTO"))
+    for bits in (63, -1):
+        with pytest.raises(ValueError, match="bits"):
+            similarity.corpus_hub_nodes(c, cl, bits)
+    assert len(similarity.corpus_hub_nodes(c, cl, 62)) <= 62
 
 
 def test_global_rank_stable_across_reexecutions(spark):
