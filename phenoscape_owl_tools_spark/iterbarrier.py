@@ -26,9 +26,10 @@ Spark loop, so driver state never exceeds that constant. Measured on a
 cold 2k-document KB build plus its SPARQL loop (4 cores, local[4],
 BENCH.md §22): Spark jobs fell from 255 to 160, and the build's CPU time
 from 20.8 to 17.6 s (medians of 12 runs). Cascade SemDeDup
-(``operators/semdedup.py``) routes its vector set by the same rule: one
-Arrow collect of at most that many rows, then the assignment GEMM and
-the pair tiles on the driver, so no Python worker starts.
+(``operators/semdedup.py``) routes its vector set by the same rule, plus
+a cap on rows x dim (``semdedup.DRIVER_MAX_DOUBLES``): a narrow probe
+decides, then one Arrow collect, and the assignment GEMM and the pair
+tiles run on the driver, so no Python worker starts.
 """
 
 from __future__ import annotations

@@ -26,24 +26,30 @@ Execution shape:
 
 - assignment is MAP-ONLY: the k centroid unit vectors are collected to
   the driver (k x dim doubles — dimension-scale, guarded) and scored
-  against each Arrow batch with one numpy GEMM in ``mapInPandas`` — no
-  shuffle, no per-row Python (see :func:`assign_clusters` for why the
-  pure-column-expression alternative is the slow path, not the fast one);
+  against each Arrow batch with one numpy GEMM in ``mapInArrow`` — no
+  shuffle, no per-row Python, ids passed through as Arrow values (see
+  :func:`assign_clusters` for why the pure-column-expression alternative
+  is the slow path, not the fast one);
 - within-cluster pairs reuse the exact tiled-GEMM shape of
   ``dedup.embedding_near_dups_gemm`` with ``(cluster, block)`` as the
   packing key: B(B+1)/2 tiles per cluster, each scored by one numpy GEMM
-  in ``mapInPandas``; no CartesianProduct in the plan, per-task memory =
+  in ``mapInArrow``; no CartesianProduct in the plan, per-task memory =
   2 blocks, tiles are independent tasks. Pick ``n_blocks`` so a cluster
   block fits executor memory;
 - route: a cascade :func:`semantic_dedup` whose vector set fits one
   barrier partition (``iterbarrier.fits_driver``, the closure's row cap)
-  needs no Spark job beyond one collect. ``(vec_id, u, blk)`` is
-  collected once over Arrow (unit vectors and block hashes computed
-  JVM-side, as on the Spark route), and the same assignment and tile
-  kernels (:func:`_assign_kernel`, :func:`_score_tile`) run over the same
-  ``(cluster, block)`` tiles in a driver loop. No Python worker starts:
-  on a 2k-document corpus build (4 cores, local[4], BENCH.md §24) the
-  build's CPU time fell from 23.5 to 18.8 s (medians of 10 pairs).
+  and holds at most ``DRIVER_MAX_DOUBLES`` unit-vector doubles needs no
+  Spark job beyond a narrow probe and one collect. The probe counts rows
+  (up to the cap) and reads the widest embedding; only a set that fits is
+  collected, once, over Arrow as ``(vec_id, u, blk)`` (unit vectors and
+  block hashes computed JVM-side, as on the Spark route), and the same
+  assignment and tile kernels (:func:`_assign_kernel`, :func:`_score_tile`)
+  run over the same ``(cluster, block)`` tiles in a driver loop. No Python
+  worker starts. The driver route won every pair at every size measured
+  (BENCH.md §24, 4 cores, local[4], median wall of 5 pairs): 20k x 64-d
+  1.1 vs 4.5 s, 50k x 64-d 3.4 vs 8.1 s and 20k x 1024-d 9.6 vs 21.2 s,
+  and a 2k-document corpus build's CPU time fell from 26.9 to 21.9 s
+  (medians of 10 pairs).
 """
 
 from __future__ import annotations
@@ -57,6 +63,10 @@ from .. import iterbarrier
 from .dedup import unit_vector_col
 
 MAX_CENTROIDS = 4096  # driver-collect guard: centroids are dimension-scale
+# driver-route guard on rows x dim: the largest vector set measured to run
+# faster on the driver (BENCH §24), ~160 MB of doubles, well inside the
+# driver's default 1 GB result cap
+DRIVER_MAX_DOUBLES = 20_000 * 1024
 
 
 def _id_type(embeddings: DataFrame) -> str:
@@ -73,6 +83,14 @@ def _assign_kernel(units, cmat):
     import numpy as np
 
     return np.argmax(np.round(units @ cmat.T, 6), axis=1).astype(np.int32)
+
+
+def _unit_matrix(u):
+    """The n x dim float64 matrix of an Arrow ``array<double>`` column of
+    unit vectors."""
+    import numpy as np
+
+    return np.stack(u.to_numpy(zero_copy_only=False))
 
 
 def _id_array(ids: list):
@@ -156,8 +174,9 @@ def assign_clusters(
     ``cluster`` = argmax_j round(cos(u, c_j), 6), ties to the smallest j
     (``np.argmax`` returns the first maximal index). Unit vectors are
     computed JVM-side (one fold per row); the n x k score matrix comes
-    from ONE numpy GEMM per Arrow batch in ``mapInPandas`` — no shuffle,
-    no per-row Python, nothing grows with k but the GEMM width.
+    from ONE numpy GEMM per Arrow batch in ``mapInArrow`` — no shuffle,
+    no per-row Python, nothing grows with k but the GEMM width. Batches
+    stay Arrow, so an id column holding a NULL keeps its exact values.
 
     Measured lesson (BENCH §17): the "pure column math" alternative — k
     unrolled ``aggregate``/``zip_with`` fold expressions + a
@@ -170,7 +189,7 @@ def assign_clusters(
     both SFs.
     """
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     cents = centroids if centroids is not None else centroid_units(embeddings, k)
     cmat = np.array([cu for _, cu in cents], dtype=np.float64)  # k x dim
@@ -178,20 +197,19 @@ def assign_clusters(
         "vec_id", unit_vector_col(F.col("embedding")).alias("u")
     )
 
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
+    def assign(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        # Arrow in and out: ids pass through untouched (pandas turns an
+        # integral column holding a NULL into float64, rounding ids > 2^53)
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            mat = np.array(list(pdf["u"]), dtype=np.float64)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "cluster": _assign_kernel(mat, cmat),
-                    "u": pdf["u"],
-                }
+            cluster = _assign_kernel(_unit_matrix(batch.column("u")), cmat)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column("vec_id"), pa.array(cluster), batch.column("u")],
+                names=["vec_id", "cluster", "u"],
             )
 
-    return base.mapInPandas(
+    return base.mapInArrow(
         assign, f"vec_id {_id_type(embeddings)}, cluster int, u array<double>"
     )
 
@@ -234,7 +252,7 @@ def _within_cluster_pairs(
     assigned: DataFrame, threshold: float, n_blocks: int
 ) -> DataFrame:
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     spark = assigned.sparkSession
     id_t = assigned.schema["vec_id"].dataType.simpleString()
@@ -260,28 +278,33 @@ def _within_cluster_pairs(
         .select("cluster", "ba", "bb", "vecs_a", "vecs_b")
     )
 
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def block(vs):
-            # ids keep their Spark type (no forced int64)
-            ids = _id_array([v["vec_id"] for v in vs])
-            return ids, np.array([v["u"] for v in vs], dtype=np.float64)
+    def score(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        # Arrow, not pandas: pandas turns the struct's integral id field
+        # into float64 when any id in the batch is NULL
+        def block(vecs):  # one list<struct<vec_id, u>> cell
+            return _id_array(vecs.field("vec_id").to_pylist()), _unit_matrix(vecs.field("u"))
 
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                diagonal = row["ba"] == row["bb"]
-                ids_a, m_a = block(row["vecs_a"])
-                ids_b, m_b = (ids_a, m_a) if diagonal else block(row["vecs_b"])
+        for batch in batches:
+            id_pa = batch.schema.field("vecs_a").type.value_type.field("vec_id").type
+            cluster, ba, bb, vecs_a, vecs_b = (
+                batch.column(c) for c in ("cluster", "ba", "bb", "vecs_a", "vecs_b")
+            )
+            for i in range(batch.num_rows):
+                diagonal = ba[i].as_py() == bb[i].as_py()
+                ids_a, m_a = block(vecs_a[i].values)
+                ids_b, m_b = (ids_a, m_a) if diagonal else block(vecs_b[i].values)
                 lo, hi, cos = _score_tile(ids_a, m_a, ids_b, m_b, diagonal, threshold)
-                yield pd.DataFrame(
-                    {
-                        "cluster": np.full(len(lo), row["cluster"]),
-                        "id_a": lo,
-                        "id_b": hi,
-                        "cos": cos,
-                    }
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        pa.array(np.full(len(lo), cluster[i].as_py()), pa.int32()),
+                        pa.array(lo, id_pa),
+                        pa.array(hi, id_pa),
+                        pa.array(cos, pa.float64()),
+                    ],
+                    names=["cluster", "id_a", "id_b", "cos"],
                 )
 
-    return tiled.mapInPandas(
+    return tiled.mapInArrow(
         score, f"cluster int, id_a {id_t}, id_b {id_t}, cos double"
     )
 
@@ -318,11 +341,11 @@ def semantic_dedup(
     GEMM. kept_set never drops more than cascade (asserted in tests).
 
     Route: a cascade run with the fixed centroids over a vector set that
-    fits one barrier partition (``iterbarrier.fits_driver``) runs on the
-    driver (:func:`_driver_cascade`): one Arrow collect, the same kernels
-    over the same tiles, and a decision table with the Spark route's rows
-    and schema. Larger sets, ``kept_set`` and passed ``centroids`` take
-    the Spark route below.
+    fits one barrier partition (``iterbarrier.fits_driver``) and
+    ``DRIVER_MAX_DOUBLES`` runs on the driver (:func:`_driver_cascade`): a
+    narrow probe, one Arrow collect, the same kernels over the same tiles,
+    and a decision table with the Spark route's rows and schema. Larger
+    sets, ``kept_set`` and passed ``centroids`` take the Spark route below.
 
     On the Spark route the assignment frame feeds both the pair tiling and
     the final flag join; it is materialized ONCE (plans have no subtree
@@ -352,34 +375,45 @@ def semantic_dedup(
     )
 
 
+def _spark_order(v) -> tuple:
+    """Sort key of one collected id in Spark's ascending order: NULL
+    first, NaN after every other value."""
+    if v is None:
+        return (0,)
+    return (2,) if v != v else (1, v)
+
+
 def _driver_cascade(
     embeddings: DataFrame, k: int, threshold: float, n_blocks: int
 ) -> DataFrame | None:
     """The cascade decision table computed on the driver, or None when the
-    vector set does not fit one barrier partition.
+    vector set does not fit one barrier partition or its unit vectors
+    exceed ``DRIVER_MAX_DOUBLES``.
 
-    Same contract as the Spark route: centroids are the unit vectors of
-    the k smallest ``vec_id`` rows (NULL first, as ``orderBy`` sorts), and
-    the assignment GEMM and every ``(cluster, block)`` tile run through
-    the same kernels. A NULL id is kept like any id in no pair; one that
-    pairs fails the scorer, as on the Spark route.
+    A narrow probe (row count up to the cap and the widest embedding)
+    decides before anything wide is collected. Same contract as the Spark
+    route: centroids are the unit vectors of the k smallest ``vec_id`` rows
+    in ``orderBy`` order (NULL first, NaN last), and the assignment GEMM and
+    every ``(cluster, block)`` tile run through the same kernels. Ids are
+    read from Arrow as Python values, so a NULL stays None and a bigint id
+    stays exact. A NULL id is kept like any id in no pair; one that pairs
+    fails the scorer, as on the Spark route.
     """
-    import numpy as np
+    import heapq
+
     import pandas as pd
+    import pyarrow as pa
     from pyspark.sql.types import BooleanType, IntegerType, StructField, StructType
 
     assert 0 < k <= MAX_CENTROIDS  # the guard centroid_units applies
     # one row over the cap is enough to decide
-    pdf = (
-        embeddings.select(
-            "vec_id",
-            unit_vector_col(F.col("embedding")).alias("u"),
-            _block_col(n_blocks).alias("blk"),
-        )
+    n, dim = (
+        embeddings.select(F.size("embedding").alias("dim"))
         .limit(iterbarrier.TARGET_ROWS_PER_PARTITION + 1)
-        .toPandas()
+        .agg(F.count(F.lit(1)), F.max("dim"))
+        .first()
     )
-    if not iterbarrier.fits_driver(len(pdf)):
+    if not iterbarrier.fits_driver(n) or n * (dim or 0) > DRIVER_MAX_DOUBLES:
         return None
     schema = StructType([
         StructField("vec_id", embeddings.schema["vec_id"].dataType, True),
@@ -387,17 +421,22 @@ def _driver_cascade(
         StructField("kept", BooleanType(), False),
     ])
     spark = embeddings.sparkSession
-    if not len(pdf):
+    table = embeddings.select(
+        "vec_id",
+        unit_vector_col(F.col("embedding")).alias("u"),
+        _block_col(n_blocks).alias("blk"),
+    ).toArrow()
+    if not table.num_rows:
         return spark.createDataFrame([], schema)
 
-    vec_ids = pdf["vec_id"]
-    # an integral id column holding a NULL arrives as float64 with NaN
-    ids = _id_array(vec_ids.astype(object).where(vec_ids.notna(), None).tolist())
-    units = np.stack(pdf["u"].to_numpy())  # array<double> rows: float64
-    first = vec_ids.sort_values(na_position="first", kind="stable").index[:k]
+    id_list = table.column("vec_id").to_pylist()
+    ids = _id_array(id_list)
+    units = _unit_matrix(table.column("u"))
+    first = heapq.nsmallest(k, range(len(id_list)), key=lambda i: _spark_order(id_list[i]))
     cluster = _assign_kernel(units, units[first])
 
-    blocks = pd.DataFrame({"c": cluster, "b": pdf["blk"]}).groupby(["c", "b"]).indices
+    blk = table.column("blk").to_numpy()
+    blocks = pd.DataFrame({"c": cluster, "b": blk}).groupby(["c", "b"]).indices
     dropped: set = set()
     for (c, a), rows_a in blocks.items():
         for b in range(a, n_blocks):
@@ -408,10 +447,11 @@ def _driver_cascade(
                 ids[rows_a], units[rows_a], ids[rows_b], units[rows_b], a == b, threshold
             )
             dropped.update(hi.tolist())
-    out = pd.DataFrame({
-        "vec_id": vec_ids,
-        "cluster": cluster,
-        "kept": ~vec_ids.isin(dropped),
+    # Arrow, not pandas, on the way back too: pandas reads a NaN id as NULL
+    out = pa.table({
+        "vec_id": table.column("vec_id"),
+        "cluster": pa.array(cluster),
+        "kept": pa.array([v not in dropped for v in id_list]),
     })
     return spark.createDataFrame(out, schema)
 

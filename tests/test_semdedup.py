@@ -248,23 +248,29 @@ def test_semantic_dedup_rejects_unknown_mode(spark):
 
 
 def _run_at_cap(monkeypatch, emb, cap, **kw):
-    """(sorted decision rows, schema, mapInPandas calls) of a cascade run
-    with the driver-route row cap patched to ``cap``."""
+    """(sorted decision rows, schema, Python UDF calls, toArrow calls) of a
+    cascade run with the driver-route row cap patched to ``cap``. The UDF
+    calls count ``mapInPandas`` and ``mapInArrow``."""
     from phenoscape_owl_tools_spark import iterbarrier
 
-    calls: list = []
-    real = type(emb).mapInPandas
+    calls: dict = {"mapInPandas": 0, "mapInArrow": 0, "toArrow": 0}
 
-    def spy(self, *a, **k):
-        calls.append(a)
-        return real(self, *a, **k)
+    def spy(name):
+        real = getattr(type(emb), name)
+
+        def wrapped(self, *a, **k):
+            calls[name] += 1
+            return real(self, *a, **k)
+
+        return wrapped
 
     with monkeypatch.context() as m:
-        m.setattr(type(emb), "mapInPandas", spy)
+        for name in calls:
+            m.setattr(type(emb), name, spy(name))
         m.setattr(iterbarrier, "TARGET_ROWS_PER_PARTITION", cap)
         df = semantic_dedup(emb, **kw)
         rows = sorted(map(tuple, df.collect()), key=repr)
-    return rows, df.schema, len(calls)
+    return rows, df.schema, calls["mapInPandas"] + calls["mapInArrow"], calls["toArrow"]
 
 
 def _on_both_routes(monkeypatch, emb, **kw):
@@ -278,20 +284,43 @@ def _on_both_routes(monkeypatch, emb, **kw):
 
 
 def test_route_boundary_same_decisions(spark, monkeypatch):
-    """At n vectors the cap n keeps the run on the driver (no mapInPandas);
-    n - 1 sends it to Spark. Both give the same rows and schema."""
+    """At n vectors the cap n keeps the run on the driver (no Python UDF);
+    n - 1 sends it to Spark without the wide collect. Both give the same
+    rows and schema."""
     emb = _mkemb(spark)
     got = _on_both_routes(monkeypatch, emb, k=4, threshold=0.9)
-    (d_rows, d_schema, d_calls), (s_rows, s_schema, s_calls) = got["driver"], got["spark"]
+    (d_rows, d_schema, d_calls, d_collects) = got["driver"]
+    (s_rows, s_schema, s_calls, s_collects) = got["spark"]
     assert d_calls == 0 and s_calls > 0
+    assert d_collects == 1 and s_collects == 0
     assert len(d_rows) == 64 and any(not r[2] for r in d_rows)
     assert d_rows == s_rows
     assert d_schema == s_schema
     assert [f.nullable for f in d_schema.fields] == [True, True, False]
 
 
+def test_vector_doubles_guard_routes_wide_sets_to_spark(spark, monkeypatch):
+    """Under the row cap, a set of more than ``DRIVER_MAX_DOUBLES`` unit
+    vector doubles (rows x dim) takes the Spark route without the wide
+    collect; at the guard it stays on the driver."""
+    from phenoscape_owl_tools_spark.operators import semdedup
+
+    emb = _mkemb(spark)  # 64 vectors of 8 dimensions
+    runs = {}
+    for guard in (64 * 8, 64 * 8 - 1):
+        monkeypatch.setattr(semdedup, "DRIVER_MAX_DOUBLES", guard)
+        runs[guard] = _run_at_cap(monkeypatch, emb, 64, k=4, threshold=0.9)
+    (d_rows, _, d_calls, d_collects), (s_rows, _, s_calls, s_collects) = runs.values()
+    assert (d_calls, d_collects) == (0, 1)
+    assert s_calls > 0 and s_collects == 0
+    assert d_rows == s_rows
+
+
 def _degenerate(spark, rows):
     return spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
+
+
+BIG = 2**60
 
 
 def test_degenerate_inputs_on_both_routes(spark, monkeypatch):
@@ -317,10 +346,16 @@ def test_degenerate_inputs_on_both_routes(spark, monkeypatch):
             [(None, [0.0, 1.0]), (1, [1.0, 0.0]), (2, [1.0, 0.01]), (3, [-1.0, 0.0])],
             [(1, 1, True), (2, 1, False), (3, 0, True), (None, 0, True)],
         ),
+        # ids past 2**53 next to a NULL stay exact: as doubles all three
+        # would round to 2**60, so the pair (and its drop) would be lost
+        "big_ids_and_null": (
+            [(None, [0.0, 1.0]), (BIG + 1, [1.0, 0.0]), (BIG + 2, [1.0, 0.01]), (BIG + 3, [-1.0, 0.0])],
+            [(BIG + 1, 1, True), (BIG + 2, 1, False), (BIG + 3, 0, True), (None, 0, True)],
+        ),
     }
     for name, (rows, want) in cases.items():
         got = _on_both_routes(monkeypatch, _degenerate(spark, rows), k=2, threshold=0.9)
-        (d_rows, d_schema, d_calls), (s_rows, s_schema, s_calls) = got["driver"], got["spark"]
+        (d_rows, d_schema, d_calls, _), (s_rows, s_schema, s_calls, _) = got["driver"], got["spark"]
         assert d_calls == 0 and s_calls > 0, name
         assert d_rows == s_rows == sorted(want, key=repr), name
         assert d_schema == s_schema, name
@@ -338,3 +373,20 @@ def test_null_id_in_a_pair_fails_on_both_routes(spark, monkeypatch):
             (TypeError, PythonException), match="not supported between instances of"
         ):
             _run_at_cap(monkeypatch, emb, cap, k=2, threshold=0.9)
+
+
+def test_double_ids_order_null_first_and_nan_last_on_both_routes(spark, monkeypatch):
+    """A double id column sorts NULL first and NaN after every number, so
+    the k=2 centroids are the NULL row and 1.0, not NULL and NaN."""
+    nan = float("nan")
+    emb = spark.createDataFrame(
+        [(None, [0.0, 1.0]), (nan, [1.0, 0.0]), (1.0, [-1.0, 0.0]), (2.0, [-1.0, 0.01])],
+        "vec_id double, embedding array<float>",
+    )
+    want = [(1.0, 1, True), (2.0, 1, False), (nan, 0, True), (None, 0, True)]
+    got = _on_both_routes(monkeypatch, emb, k=2, threshold=0.9)
+    (d_rows, d_schema, d_calls, _), (s_rows, s_schema, s_calls, _) = got["driver"], got["spark"]
+    assert d_calls == 0 and s_calls > 0
+    # NaN != NaN, so compare the rows' reprs
+    assert list(map(repr, d_rows)) == list(map(repr, s_rows)) == list(map(repr, sorted(want, key=repr)))
+    assert d_schema == s_schema
