@@ -3090,13 +3090,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One oracle-paired entry per SURVEY.md §2 operator family.
-
-    The correctness harness samples the first ~50 entries, so same-shaped
-    generator/textstat outputs are merged (see q_generator_axioms etc.) to
-    keep the registry at 49 entries — every implemented operator is behind
-    exactly one green row. Component queries remain importable for tests.
-    """
+    """One oracle-paired entry per SURVEY.md §2 operator family."""
     return {
         "mention_triples": q_mention_triples,
         "nexml_cells": q_nexml_cells,
@@ -3134,26 +3128,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_embedding_cosine": q_dedup_embedding_cosine,
         "ann_lsh_topk": q_ann_lsh_topk,
         "pii_stats": q_pii_stats,
-        # r3 verdict: ann_ivf_topk inside the ~50-entry sampling window (it
-        # was 51st in r3 and never driver-verified).
         "ann_ivf_topk": q_ann_ivf_topk,
-        # r4: sparql_analytics exercises the new SELECT-algebra path
-        # (aggregates / HAVING / ORDER BY / LIMIT).
         "sparql_analytics": q_sparql_analytics,
-        # r5 verdict item 1: rotate tpch_q6 into the driver window — the
-        # one registry key that never had a driver-run correctness row
-        # (plan-tested + sweep-green only through r4). Displaces tpch_q5,
-        # which got its non-vacuous driver row in CORRECTNESS_r04.json
-        # (5 rows); with this rotation every one of the 69 keys has driver
-        # evidence in some round's artifact.
         "tpch_q6": q_tpch_q6,
-        # r4 training-pipeline additions X14-X20, all inside the window so
-        # every NEW operator family gets a driver-verified correctness row
-        # (the r3 lesson). Displaced to make room: language_id /
-        # quality_score / token_stats / fingerprints / frame_samples /
-        # events_* — all map-only or simple-agg keys that were driver-green
-        # in CORRECTNESS_r03.json; they stay oracle-paired below and are
-        # swept by scripts/check_correctness.py at sf0.01 + the sf1 gate.
         "dedup_clusters": q_dedup_clusters,
         "decontaminate": q_decontaminate,
         "dedup_windows": q_dedup_windows,
@@ -3161,20 +3138,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "simhash_near_dups": q_simhash_near_dups,
         "quota_sample": q_quota_sample,
         "unigram_logppl": q_unigram_logppl,
-        # r4 continuation additions X24-X27 — the training-sequence
-        # assembly + semantic-dedup families, in-window so every NEW
-        # operator family gets a driver-verified row (the r3 IVF lesson).
-        # Displaced to make room: tpch_q1 / tpch_q3 / sparql_scores /
-        # dedup_simhash — all r3-driver-green keys whose engine surface is
-        # covered by in-window siblings (tpch_q5 keeps the TPC-H join
-        # chain, sparql_analytics + the closure twins keep SPARQL,
-        # simhash_near_dups is a strictly stronger simhash key); they stay
-        # oracle-paired below and swept at both SFs.
         "pack_sequences": q_pack_sequences,
         "doc_chunks": q_doc_chunks,
         "mixture_weights": q_mixture_weights,
         "semantic_dedup": q_semantic_dedup,
-        # ---- entries below are outside the driver's ~50-entry window ----
         "tpch_q1": q_tpch_q1,
         "tpch_q3": q_tpch_q3,
         "sparql_scores": q_sparql_scores,
@@ -3188,15 +3155,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "events_sessions": q_events_sessions,
         "events_json": q_events_json,
         "events_user_stats": q_events_user_stats,
-        # displaced by the r5 tpch_q6 rotation; driver-green in r4 (5 rows)
         "tpch_q5": q_tpch_q5,
-        # brute-force ANN baseline restored as an oracle-paired key (it was
-        # registry-dropped in r2 purely for window space; keys past the
-        # driver window are swept by scripts/check_correctness.py)
         "ann_cosine_topk": q_ann_cosine_topk,
-        # displaced from the window for the four new-in-r4-close-out
-        # families above (all four displaced keys are r3-driver-green
-        # map-only/simple-agg entries, still swept at both SFs)
         "profile_sizes": q_profile_sizes,
         "annotation_status": q_annotation_status,
         "tbox_stats": q_tbox_stats,

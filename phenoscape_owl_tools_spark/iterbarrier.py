@@ -1,6 +1,7 @@
-"""Iteration barrier for driver-loop fixpoints (closure, connected
-components, chain saturation), and the driver-route rule they and
-SemDeDup share.
+"""Iteration barrier and the semi-naive Spark fixpoint loop that the
+closure, property-chain, incremental-maintenance and profile-semantics
+operators share, plus the driver-route rule the closure, connected
+components and SemDeDup share.
 
 Why not ``localCheckpoint``/``checkpoint``: measured on Spark 4.1.2, a loop
 whose iteration k+1 derives from iteration k's *checkpointed* frame shows
@@ -14,22 +15,34 @@ That is exactly the "checkpointed stage boundary" the north rule requires
 anyway — in production these barriers are Iceberg table writes; locally
 they are parquet files in a session temp dir (cleaned at exit).
 
+:func:`semi_naive` is the one Spark round loop: ``delta_i+1 =
+distinct(step(delta_i, full_i)) minus full_i`` and ``full_i+1 = full_i ∪
+delta_i+1``, one barrier and one emptiness probe per round, and a
+compaction every ``COMPACT_EVERY`` rounds. Callers own only their step.
+
+Shuffle width is left to the session and to AQE, which coalesces the
+reduce side of these small rounds; no fixpoint changes the session's
+shuffle width, so concurrent queries on one session are safe. The map side
+still writes every partition: on ``local[4]`` at width 32 a 100k-edge
+closure took 8% and a 40-level Fitch loop 5% longer than when each barrier
+was narrowed to 4 (BENCH.md §25). ``session.get_spark`` sizes the width to
+the cores, where the two coincide.
+
 Scale notes: a fixpoint whose seed fits one barrier partition
-(:func:`fits_driver`: at most ``TARGET_ROWS_PER_PARTITION`` rows, the same
-constant the width rule divides by) does not need Spark at all: every
-round costs a few jobs of planning and scheduling whatever the data size.
-So the closure and CC operators collect such a seed once (the row count
-is the one the adaptive width already takes, no extra job), run the same
-round recurrence in Python on the driver, and hand the result back
-through :meth:`IterationBarrier.from_pandas`. Anything larger keeps the
-Spark loop, so driver state never exceeds that constant. Measured on a
-cold 2k-document KB build plus its SPARQL loop (4 cores, local[4],
-BENCH.md §22): Spark jobs fell from 255 to 160, and the build's CPU time
-from 20.8 to 17.6 s (medians of 12 runs). Cascade SemDeDup
-(``operators/semdedup.py``) routes its vector set by the same rule, plus
-a cap on rows x dim (``semdedup.DRIVER_MAX_DOUBLES``): a narrow probe
-decides, then one Arrow collect, and the assignment GEMM and the pair
-tiles run on the driver, so no Python worker starts.
+(:func:`fits_driver`: at most ``TARGET_ROWS_PER_PARTITION`` rows) does not
+need Spark at all: every round costs a few jobs of planning and scheduling
+whatever the data size. So the closure and CC operators count their
+barrier'd seed (one job), collect a seed that fits, run the same round
+recurrence in Python on the driver, and hand the result back through
+:meth:`IterationBarrier.from_pandas`. Anything larger keeps the Spark
+loop, so driver state never exceeds that constant. Measured on a cold
+2k-document KB build plus its SPARQL loop (4 cores, local[4], BENCH.md
+§22): Spark jobs fell from 255 to 160, and the build's CPU time from 20.8
+to 17.6 s (medians of 12 runs). Cascade SemDeDup (``operators/semdedup.py``)
+routes its vector set by the same rule, plus a cap on rows x dim
+(``semdedup.DRIVER_MAX_DOUBLES``): a narrow probe decides, then one Arrow
+collect, and the assignment GEMM and the pair tiles run on the driver, so
+no Python worker starts.
 """
 
 from __future__ import annotations
@@ -37,6 +50,7 @@ from __future__ import annotations
 import atexit
 import shutil
 import tempfile
+from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import StructType
@@ -58,18 +72,12 @@ class IterationBarrier:
     files), directory is removed by an ``atexit`` hook.
     """
 
-    def __init__(self, name: str = "iter", local_until: int = 6,
-                 adaptive_width: bool = False):
+    def __init__(self, name: str = "iter", local_until: int = 6):
         self.root = tempfile.mkdtemp(prefix=f"sparkgraft_{name}_")
         self._seq = 0
         self._depth = 0
         self._paths: list[str] = []
         self.local_until = local_until
-        self.adaptive_width = adaptive_width
-        self._width: int | None = None
-        # row count of the first barrier'd frame (the fixpoint's seed) when
-        # ``adaptive_width`` is set; what :func:`fits_driver` routes on
-        self.seed_rows: int | None = None
         atexit.register(shutil.rmtree, self.root, True)
 
     @staticmethod
@@ -90,15 +98,8 @@ class IterationBarrier:
         self.harden(df)
         if self._depth < self.local_until:
             self._depth += 1
-            out = self._under_width(df, lambda: df.localCheckpoint(eager=True))
-        else:
-            out = self.materialize(df, tag)
-        if self.adaptive_width and self._width is None:
-            # first barrier'd frame = the fixpoint's seed; size the window
-            # from it (the count runs on materialized data — one cheap job)
-            self.seed_rows = out.count()
-            self.set_width(self.seed_rows, df.sparkSession)
-        return out
+            return df.localCheckpoint(eager=True)
+        return self.materialize(df, tag)
 
     def from_pandas(self, spark, pdf, schema: StructType, tag: str) -> DataFrame:
         """A driver-computed fixpoint result (or hand-off state) as a
@@ -106,44 +107,6 @@ class IterationBarrier:
         tuples: at 40k rows the driver spends 0.015 vs 0.1 CPU s, and the
         tuple path also unpickles every row in Python workers."""
         return self(spark.createDataFrame(pdf, schema), tag)
-
-    def set_width(self, rows: int, spark) -> None:
-        """Fix the shuffle width for subsequent barrier actions.
-
-        Driver-loop fixpoints execute O(iterations) eager actions, and
-        checkpoint materialization bypasses AQE coalescing — at the
-        session's full shuffle width every tiny action schedules 32+ tasks
-        over kB-scale frames and scheduling dominates (measured on the
-        profiles.py level loops: 14.8 s -> 8.8 s at sf0.1 by narrowing).
-
-        Adaptive, never hardcoded: width = clamp(rows /
-        TARGET_ROWS_PER_PARTITION, 4, session width). A dimension-scale
-        TBox closure gets 4 partitions; a fact-scale closure at 10^9 edges
-        keeps the session's full width — the same operator code still
-        scales on a 1000-executor cluster (the cap only ever lowers the
-        width below the user's setting, and only inside barrier actions).
-        """
-        session_width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        per_part = max(1, TARGET_ROWS_PER_PARTITION)
-        self._width = max(4, min(session_width, -(-rows // per_part)))
-
-    def _under_width(self, df: DataFrame, action):
-        # NOTE: temporarily mutates the SESSION-global shuffle width around
-        # the barrier action. This assumes one driver thread plans jobs at a
-        # time (true for this pipeline's drivers and tests); concurrent
-        # query threads sharing the SparkSession could plan under the
-        # narrowed width or race the restore. A per-plan alternative
-        # (repartition/hints on every shuffle inside the fixpoint) would
-        # obscure every operator for a setting that only matters mid-barrier.
-        if self._width is None:
-            return action()
-        conf = df.sparkSession.conf
-        old = conf.get("spark.sql.shuffle.partitions")
-        conf.set("spark.sql.shuffle.partitions", str(self._width))
-        try:
-            return action()
-        finally:
-            conf.set("spark.sql.shuffle.partitions", old)
 
     def materialize(self, df: DataFrame, tag: str = "step") -> DataFrame:
         """Force a parquet round-trip regardless of the depth counter.
@@ -157,16 +120,9 @@ class IterationBarrier:
         self._depth = 0
         path = f"{self.root}/{tag}_{self._seq}"
         self._seq += 1
-        self._under_width(df, lambda: df.write.mode("overwrite").parquet(path))
-        out = df.sparkSession.read.parquet(path)
+        df.write.mode("overwrite").parquet(path)
         self._paths.append(path)
-        if self.adaptive_width and self._width is not None:
-            # fixpoint working sets GROW (closure >> seed); refresh the
-            # width from each compaction's materialized size (parquet
-            # metadata count — cheap) so a closure that outgrows its seed
-            # regains parallelism instead of staying at the seed's width
-            self.set_width(out.count(), df.sparkSession)
-        return out
+        return df.sparkSession.read.parquet(path)
 
     def gc(self, keep: int = 2) -> None:
         """Delete all but the ``keep`` newest parquet dirs.
@@ -178,6 +134,53 @@ class IterationBarrier:
         """
         while len(self._paths) > keep:
             shutil.rmtree(self._paths.pop(0), ignore_errors=True)
+
+
+# Every COMPACT_EVERY rounds semi_naive rewrites the accumulated relation (a
+# union of all prior deltas) into one parquet scan: bounds union width —
+# the per-round anti-join otherwise scans O(rounds) branches — and lets the
+# barrier GC superseded files (superseded deltas become dead once the
+# relation and the live delta are both freshly materialized).
+COMPACT_EVERY = 8
+
+
+def semi_naive(
+    barrier: IterationBarrier,
+    full: DataFrame,
+    first: DataFrame,
+    step: Callable[[DataFrame, DataFrame], DataFrame],
+    *,
+    keys: list[str],
+    max_iterations: int,
+    what: str,
+    start: int = 0,
+) -> DataFrame:
+    """Close ``full`` under ``step`` by semi-naive rounds ``start ..
+    max_iterations - 1``; returns the accumulated relation.
+
+    ``first`` holds round ``start``'s candidate facts. Each round keeps the
+    distinct candidates whose ``keys`` are not yet in ``full`` (a NULL key
+    never matches, so a step must not emit one), barriers them as the
+    round's delta, stops when it is empty, and otherwise unions it into
+    ``full``; ``step(delta, full)`` then gives the next round's candidates.
+    Filters a caller needs on every round's facts (self-loops) belong to
+    its ``step`` and its ``first``. Raises ``RuntimeError`` naming
+    ``what`` when round ``max_iterations - 1`` still found facts.
+    """
+    candidates = first
+    for it in range(start, max_iterations):
+        delta = barrier(
+            candidates.dropDuplicates().join(full, on=keys, how="left_anti"), "delta"
+        )
+        if delta.isEmpty():
+            return full
+        full = full.unionByName(delta)
+        if (it + 1) % COMPACT_EVERY == 0:
+            full = barrier.materialize(full, "full")
+            delta = barrier.materialize(delta, "delta")
+            barrier.gc(keep=2)
+        candidates = step(delta, full)
+    raise RuntimeError(f"{what} did not converge in {max_iterations} iterations")
 
 
 TARGET_ROWS_PER_PARTITION = 50_000

@@ -44,6 +44,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from .. import iterbarrier
+
 
 def _edges(df: DataFrame, sub: str = "sub", sup: str = "sup") -> DataFrame:
     return df.select(F.col(sub).alias("sub"), F.col(sup).alias("sup")).where(
@@ -107,13 +109,18 @@ def _compose(a: DataFrame, b: DataFrame) -> DataFrame:
     )
 
 
-def _novel(step: DataFrame, known: DataFrame) -> DataFrame:
-    """The distinct non-reflexive facts of ``step`` not yet in ``known``."""
-    return (
-        step.where(F.col("sub") != F.col("sup"))
-        .dropDuplicates()
-        .join(known, on=["sub", "sup"], how="left_anti")
-    )
+def _no_loops(step: DataFrame) -> DataFrame:
+    """``step`` without self-loops: a closure holds none (``_edges`` drops
+    them from every input), and a cycle composes them."""
+    return step.where(F.col("sub") != F.col("sup"))
+
+
+def _both_sides(delta: DataFrame, rel: DataFrame, r1: DataFrame | None) -> DataFrame:
+    """One non-linear round's facts: ``delta∘rel ∪ rel∘delta`` plus the
+    monotonicity facts ``delta`` fires, without self-loops."""
+    return _no_loops(_with_monotonicity(
+        _compose(delta, rel).unionByName(_compose(rel, delta)), delta, r1
+    ))
 
 
 def _monotonicity_index(restrictions: list[tuple]):
@@ -148,8 +155,6 @@ def _driver_rounds(
     ``rounds`` rounds and the caller resumes the Spark loop from
     ``(closure, delta)``, which are exactly that loop's state at that round.
     """
-    from phenoscape_owl_tools_spark.iterbarrier import fits_driver
-
     closure = set(seed)
     delta = closure
     if restrictions is None:
@@ -174,7 +179,7 @@ def _driver_rounds(
 
         index(closure)
     for it in range(max_iterations):
-        if not fits_driver(len(closure)):
+        if not iterbarrier.fits_driver(len(closure)):
             return closure, delta, it
         if restrictions is None:
             step = {(a, c) for a, b in delta for c in succ.get(b, ())}
@@ -218,9 +223,7 @@ def transitive_closure(
     """
     import pandas as pd
 
-    from phenoscape_owl_tools_spark import iterbarrier
-
-    barrier = iterbarrier.IterationBarrier("closure", adaptive_width=True)
+    barrier = iterbarrier.IterationBarrier("closure")
     edges = barrier(_edges(edges).dropDuplicates(), "edges")
     spark = edges.sparkSession
     if restrictions is not None:
@@ -229,7 +232,7 @@ def transitive_closure(
     closure = delta = None
     start = 0
     r_rows = None
-    on_driver = iterbarrier.fits_driver(barrier.seed_rows)
+    on_driver = iterbarrier.fits_driver(edges.count())
     if on_driver and restrictions is not None:
         # one row over the threshold is enough to decide
         r_pdf = r1.limit(iterbarrier.TARGET_ROWS_PER_PARTITION + 1).toPandas()
@@ -254,7 +257,6 @@ def transitive_closure(
         closure = edges.unionByName(frame(derived, "closure")) if derived else edges
         if delta_rows is not None:
             delta = frame(delta_rows, "delta")
-            barrier.set_width(len(rows), spark)
     if not on_driver or delta is not None:
         closure = _spark_rounds(
             barrier, edges, None if restrictions is None else barrier(r1, "restrictions"),
@@ -299,38 +301,22 @@ def _spark_rounds(
             )
             closure = delta
 
-    # Every COMPACT_EVERY rounds, rewrite the accumulated closure (a union
-    # of all prior deltas) into one parquet scan: bounds union width — the
-    # per-round anti-join otherwise scans O(iterations) branches — and lets
-    # the barrier GC superseded files (superseded deltas become dead once
-    # closure and the live delta are both freshly materialized).
-    COMPACT_EVERY = 8
-    for it in range(start, max_iterations):
+    def step(delta: DataFrame, closure: DataFrame) -> DataFrame:
         if r1 is None:
             # plain transitivity over a static edge set: linear semi-naive
             # (delta ∘ base) is complete and cheapest — O(diameter) rounds
-            step = _compose(delta, edges)
-        else:
-            # monotonicity DERIVES NEW EDGES mid-fixpoint (rx ⊑ ry), so the
-            # edge set is not static: linear semi-naive against the base
-            # would never compose pre-existing facts with derived edges
-            # (e.g. a ⊑ rx asserted, rx ⊑ ry derived ⟹ a ⊑ ry — which ELK
-            # entails). Non-linear semi-naive closes over the FULL relation:
-            # delta ∘ closure ∪ closure ∘ delta (also O(log d) rounds).
-            step = _with_monotonicity(
-                _compose(delta, closure).unionByName(_compose(closure, delta)), delta, r1
-            )
-        new = barrier(_novel(step, closure), "delta")
-        if new.isEmpty():
-            return closure
-        closure = closure.unionByName(new)
-        delta = new
-        if (it + 1) % COMPACT_EVERY == 0:
-            closure = barrier.materialize(closure, "closure")
-            delta = barrier.materialize(delta, "delta")
-            barrier.gc(keep=2)
-    raise RuntimeError(
-        f"transitive_closure did not converge in {max_iterations} iterations"
+            return _no_loops(_compose(delta, edges))
+        # monotonicity DERIVES NEW EDGES mid-fixpoint (rx ⊑ ry), so the
+        # edge set is not static: linear semi-naive against the base would
+        # never compose pre-existing facts with derived edges (e.g. a ⊑ rx
+        # asserted, rx ⊑ ry derived ⟹ a ⊑ ry — which ELK entails).
+        # Non-linear semi-naive closes over the FULL relation: delta ∘
+        # closure ∪ closure ∘ delta (also O(log d) rounds).
+        return _both_sides(delta, closure, r1)
+
+    return iterbarrier.semi_naive(
+        barrier, closure, step(delta, closure), step, keys=["sub", "sup"],
+        max_iterations=max_iterations, what="transitive_closure", start=start,
     )
 
 
@@ -447,9 +433,7 @@ def property_chain_closure(
     chain positions against the accumulated set, so derived∘derived
     compositions are found (a recursive CTE could only re-join the base).
     """
-    from phenoscape_owl_tools_spark.iterbarrier import IterationBarrier
-
-    barrier = IterationBarrier("chains", adaptive_width=True)
+    barrier = iterbarrier.IterationBarrier("chains")
     base = assertions.select("p", "s", "o")
     if not keep_self_loops:
         # cycle guard for the VAHM/closure paths; rolification (r.Self
@@ -464,9 +448,10 @@ def property_chain_closure(
     if subprops is not None:
         subprops = barrier(subprops.select("sub_p", "sup_p"), "subprops")
 
-    def derive(delta: DataFrame, full: DataFrame) -> DataFrame:
+    def step(delta: DataFrame, full: DataFrame) -> DataFrame:
         if chain_df is None:
-            # role hierarchy only (legal EL ontology without chains)
+            # role hierarchy only (legal EL ontology without chains); it
+            # renames p, so it composes no self-loop
             if subprops is None:
                 return delta.limit(0)
             return delta.join(subprops, delta["p"] == subprops["sub_p"]).select(
@@ -490,34 +475,18 @@ def property_chain_closure(
                     F.col("sup_p").alias("p"), "s", "o"
                 )
             )
-        return out
+        if keep_self_loops:
+            # the DERIVED reflexive entailments must survive too
+            # (rolification: prop ∘ Top compositions land on (x, x) before
+            # extending to (x, y)); the filter is a cycle guard for the
+            # VAHM/closure paths only
+            return out
+        return out.where(F.col("s") != F.col("o"))
 
-    COMPACT_EVERY = 8  # see transitive_closure: bound union width + GC temp files
-    full = asrt
-    delta = asrt
-    for it in range(max_iterations):
-        derived = derive(delta, full)
-        if not keep_self_loops:
-            # with keep_self_loops the DERIVED reflexive entailments must
-            # survive too (rolification: prop ∘ Top compositions land on
-            # (x, x) before extending to (x, y)); the filter is a cycle
-            # guard for the VAHM/closure paths only
-            derived = derived.where(F.col("s") != F.col("o"))
-        new = barrier(
-            derived
-            .dropDuplicates()
-            .join(full, on=["p", "s", "o"], how="left_anti"),
-            "delta",
-        )
-        if new.isEmpty():
-            break
-        full = full.unionByName(new)
-        delta = new
-        if (it + 1) % COMPACT_EVERY == 0:
-            full = barrier.materialize(full, "full")
-            delta = barrier.materialize(delta, "delta")
-            barrier.gc(keep=2)
-    return full
+    return iterbarrier.semi_naive(
+        barrier, asrt, step(asrt, asrt), step, keys=["p", "s", "o"],
+        max_iterations=max_iterations, what="property_chain_closure",
+    )
 
 
 def _overdelete(
@@ -531,19 +500,14 @@ def _overdelete(
     and needs no semi-join against it; only the self-loops a cycle composes
     are dropped, as ``old`` holds none. Returns None when no deleted edge is
     an ``old`` fact."""
-    delta = barrier(deleted.join(old, on=["sub", "sup"], how="leftsemi"), "over")
-    if delta.isEmpty():
+    over = barrier(deleted.join(old, on=["sub", "sup"], how="leftsemi"), "over")
+    if over.isEmpty():
         return None
-    over = delta
-    for _ in range(max_iterations):
-        step = _with_monotonicity(
-            _compose(delta, old).unionByName(_compose(old, delta)), delta, r1
-        )
-        delta = barrier(_novel(step, over), "over_delta")
-        if delta.isEmpty():
-            return over
-        over = over.unionByName(delta)
-    raise RuntimeError("overdeletion did not converge")
+    return iterbarrier.semi_naive(
+        barrier, over, _both_sides(over, old, r1),
+        lambda delta, _: _both_sides(delta, old, r1),
+        keys=["sub", "sup"], max_iterations=max_iterations, what="overdeletion",
+    )
 
 
 def incremental_closure_apply(
@@ -588,9 +552,7 @@ def incremental_closure_apply(
     and an insert-only batch pays no overdelete pass. Result equals the
     from-scratch closure of the mutated graph (randomized tests).
     """
-    from phenoscape_owl_tools_spark.iterbarrier import IterationBarrier
-
-    barrier = IterationBarrier("closure_apply", adaptive_width=True)
+    barrier = iterbarrier.IterationBarrier("closure_apply")
     old = barrier(_edges(closure).dropDuplicates(), "closure")
     deleted = _edges(deleted_edges).dropDuplicates()
     fresh = _edges(inserted_edges).dropDuplicates()
@@ -605,7 +567,7 @@ def incremental_closure_apply(
     if over is not None:
         R = barrier(old.join(over, on=["sub", "sup"], how="left_anti"), "rem")
 
-    step = _with_monotonicity(
+    first = _with_monotonicity(
         fresh.unionByName(_compose(R, fresh))
         .unionByName(_compose(fresh, R))
         .unionByName(_compose(_compose(R, fresh), R)),
@@ -622,28 +584,17 @@ def incremental_closure_apply(
             )
             .select(F.col("t.sub").alias("sub"), F.col("t.sup").alias("sup"))
         )
-        step = step.unionByName(surviving.join(over, on=["sub", "sup"], how="leftsemi"))
-        step = step.unionByName(bridged)
+        first = first.unionByName(surviving.join(over, on=["sub", "sup"], how="leftsemi"))
+        first = first.unionByName(bridged)
         if r1 is not None:
-            step = step.unionByName(
+            first = first.unionByName(
                 _monotonicity_rule(R, r1).join(over, on=["sub", "sup"], how="leftsemi")
             )
 
-    COMPACT_EVERY = 8  # see _spark_rounds: bound union width + GC temp files
-    for it in range(max_iterations):
-        delta = barrier(_novel(step, R), "delta")
-        if delta.isEmpty():
-            return R
-        R = R.unionByName(delta)
-        if (it + 1) % COMPACT_EVERY == 0:
-            R = barrier.materialize(R, "closure")
-            delta = barrier.materialize(delta, "delta")
-            barrier.gc(keep=2)
-        step = _with_monotonicity(
-            _compose(delta, R).unionByName(_compose(R, delta)), delta, r1
-        )
-    raise RuntimeError(
-        f"incremental_closure_apply did not converge in {max_iterations} iterations"
+    return iterbarrier.semi_naive(
+        barrier, R, _no_loops(first), lambda delta, full: _both_sides(delta, full, r1),
+        keys=["sub", "sup"], max_iterations=max_iterations,
+        what="incremental_closure_apply",
     )
 
 

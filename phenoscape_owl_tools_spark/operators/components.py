@@ -63,7 +63,7 @@ def connected_components(
 
     from phenoscape_owl_tools_spark.iterbarrier import IterationBarrier, fits_driver
 
-    barrier = IterationBarrier("cc", adaptive_width=True)
+    barrier = IterationBarrier("cc")
     und = barrier(
         edges.select(F.col(a).alias("x"), F.col(b).alias("y"))
         .unionByName(edges.select(F.col(b).alias("x"), F.col(a).alias("y")))
@@ -71,7 +71,7 @@ def connected_components(
         .dropDuplicates(),
         "und",
     )
-    if fits_driver(barrier.seed_rows):
+    if fits_driver(und.count()):
         pdf = und.toPandas()
         labels = _driver_hash_to_min(zip(pdf["x"], pdf["y"]), max_iterations)
         node_type = und.schema["x"].dataType

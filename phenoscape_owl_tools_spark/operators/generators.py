@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from phenoscape_owl_tools_spark import vocab
+from phenoscape_owl_tools_spark import iterbarrier, vocab
 from phenoscape_owl_tools_spark.functions import iri as iri_fn
 
 
@@ -237,27 +237,28 @@ def expand_profile_semantics(
     reference recurses through the decoded expression the same way,
     ParseProfileSemantics.scala:20-23 ``axiomsFor`` over the signature).
 
-    ``class_assertions(individual, cls)``. Iterated leftsemi joins; depth
-    bounded by expression nesting (OBO post-compositions: ≤ ~5).
+    ``class_assertions(individual, cls)``. Semi-naive reachability over the
+    used classes, one leftsemi join per round; depth bounded by expression
+    nesting (OBO post-compositions: ≤ ~5), and a cycle in the definition
+    graph ends the rounds like any node seen before.
     """
-    from phenoscape_owl_tools_spark.iterbarrier import IterationBarrier
-
-    barrier = IterationBarrier("profsem")
+    barrier = iterbarrier.IterationBarrier("profsem")
     defs = barrier(expression_defs.select("subj", "pred", "obj").dropDuplicates(),
                    "defs")
     used = barrier(
         class_assertions.select(F.col("cls").alias("subj")).dropDuplicates(), "used"
     )
-    kept = barrier(defs.join(used, on="subj", how="leftsemi"), "kept")
-    for _ in range(32):
-        new_used = barrier(
-            kept.select(F.col("obj").alias("subj"))
-            .dropDuplicates()
-            .join(used, on="subj", how="left_anti"),
-            "new_used",
+
+    def step(delta: DataFrame, _used: DataFrame) -> DataFrame:
+        # a NULL object names no class; as a key it would be novel forever
+        return (
+            defs.join(delta, on="subj", how="leftsemi")
+            .select(F.col("obj").alias("subj"))
+            .where(F.col("subj").isNotNull())
         )
-        if new_used.isEmpty():
-            return kept
-        used = used.unionByName(new_used)
-        kept = barrier(defs.join(used, on="subj", how="leftsemi"), "kept")
-    raise RuntimeError("expression definition graph too deep (cycle?)")
+
+    used = iterbarrier.semi_naive(
+        barrier, used, step(used, used), step, keys=["subj"], max_iterations=32,
+        what="expand_profile_semantics",
+    )
+    return defs.join(used, on="subj", how="leftsemi")

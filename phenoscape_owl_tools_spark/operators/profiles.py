@@ -26,26 +26,10 @@ from phenoscape_owl_tools_spark import vocab
 from phenoscape_owl_tools_spark.iterbarrier import IterationBarrier
 
 # The taxonomy tree is dimension-scale even at 100 TB corpora (VTO ~1e5
-# nodes; corpus size only grows the fact side). The level loops run O(depth)
-# eager actions over these tiny frames, and localCheckpoint materializes
-# with the session shuffle-partition count while BYPASSING AQE coalescing —
-# at shuffle.partitions=32 that is 32 scheduled tasks per tiny action, and
-# scheduling dominates (measured: 14.8 s -> 8.8 s at sf0.1 by dropping to
-# 4). So the loops run under a temporarily lowered shuffle setting; the one
-# fact-scale aggregation (asserted state sets) happens before the window.
-TREE_SHUFFLE_PARTITIONS = 4
-
-
-class _small_shuffle:
-    def __init__(self, spark):
-        self.conf = spark.conf
-
-    def __enter__(self):
-        self.old = self.conf.get("spark.sql.shuffle.partitions")
-        self.conf.set("spark.sql.shuffle.partitions", str(TREE_SHUFFLE_PARTITIONS))
-
-    def __exit__(self, *exc):
-        self.conf.set("spark.sql.shuffle.partitions", self.old)
+# nodes; corpus size only grows the fact side), so the level loops below run
+# O(depth) small eager actions. Their shuffle width is left to the session
+# and to AQE, which coalesces each small shuffle's reads to a few tasks; no
+# loop here changes the session's shuffle width (iterbarrier.py).
 
 
 def taxonomy_depths(taxonomy_edges: DataFrame, max_depth: int = 500) -> DataFrame:
@@ -63,27 +47,26 @@ def taxonomy_depths(taxonomy_edges: DataFrame, max_depth: int = 500) -> DataFram
     deeper than that.
     """
     barrier = IterationBarrier("taxdepth")
-    with _small_shuffle(taxonomy_edges.sparkSession):
-        edges = barrier(taxonomy_edges.select("child", "parent").dropDuplicates(), "edges")
-        children = edges.select(F.col("child").alias("n"))
-        parents = edges.select(F.col("parent").alias("n"))
-        roots = parents.subtract(children).withColumn("depth", F.lit(0))
-        levels = [barrier(roots, "level")]
-        for _ in range(max_depth):
-            prev = levels[-1]
-            nxt = barrier(
-                edges.join(prev, edges["parent"] == prev["n"])
-                .select(F.col("child").alias("n"), (F.col("depth") + 1).alias("depth")),
-                "level",
-            )
-            if nxt.isEmpty():
-                break
-            levels.append(nxt)
-        else:
-            raise RuntimeError(
-                f"taxonomy_depths exceeded max_depth={max_depth}: "
-                "taxonomy_edges is not a bounded-depth tree (cycle?)"
-            )
+    edges = barrier(taxonomy_edges.select("child", "parent").dropDuplicates(), "edges")
+    children = edges.select(F.col("child").alias("n"))
+    parents = edges.select(F.col("parent").alias("n"))
+    roots = parents.subtract(children).withColumn("depth", F.lit(0))
+    levels = [barrier(roots, "level")]
+    for _ in range(max_depth):
+        prev = levels[-1]
+        nxt = barrier(
+            edges.join(prev, edges["parent"] == prev["n"])
+            .select(F.col("child").alias("n"), (F.col("depth") + 1).alias("depth")),
+            "level",
+        )
+        if nxt.isEmpty():
+            break
+        levels.append(nxt)
+    else:
+        raise RuntimeError(
+            f"taxonomy_depths exceeded max_depth={max_depth}: "
+            "taxonomy_edges is not a bounded-depth tree (cycle?)"
+        )
     out = levels[0]
     for lv in levels[1:]:
         out = out.unionByName(lv)
@@ -133,13 +116,10 @@ def evolutionary_profiles(
     # Per-level lineage truncation via IterationBarrier, NOT bare
     # localCheckpoint chains: at taxonomy depth > ~13 a checkpoint-derived
     # chain doubles per-task wall time each level (BENCH.md §5); the barrier's
-    # periodic parquet round-trip resets derivation depth. Accumulated frames
-    # (computed, profiles) are compacted every COMPACT_EVERY levels so union
-    # width stays bounded and superseded barrier files can be GC'd.
+    # periodic parquet round-trip resets derivation depth.
     barrier = IterationBarrier("evoprofiles")
     # the one fact-scale aggregation: asserted state sets from the (large)
-    # association table — runs at the session's full shuffle width, BEFORE
-    # the small-shuffle window below
+    # association table
     asserted = barrier(
         state_associations.groupBy(F.col("taxon").alias("node"), F.col("character"))
         .agg(_set_col(F.collect_set("state")).alias("states")),
@@ -181,134 +161,132 @@ def evolutionary_profiles(
         "n_children",
     )
 
-    # level loop: dimension-scale frames only -> small shuffle window
-    with _small_shuffle(spark):
-        for d in range(max_depth, -1, -1):
-            nodes_d = depths.where(F.col("depth") == d).select(F.col("n").alias("node"))
-            if d == max_depth:
-                # deepest level: all leaves -> associations are the asserted sets
-                prev_level = barrier(asserted.join(nodes_d, on="node", how="inner"), "level")
-                level_frames.append(prev_level)
-                continue
-            # children of level-d nodes live exactly one level down
-            child_assoc = (
-                edges.join(nodes_d, edges["parent"] == nodes_d["node"])
-                .select("child", "parent")
-                .join(prev_level, F.col("child") == prev_level["node"], "left")
-                .select(
-                    F.col("parent"),
-                    F.col("child"),
-                    F.col("character"),
-                    F.col("states"),
-                )
-            )
-            # per (parent, character): distinct child sets + empty-set marker
-            per_char = (
-                child_assoc.where(F.col("character").isNotNull())
-                .groupBy("parent", "character")
-                .agg(
-                    F.array_distinct(F.collect_set("states")).alias("child_sets"),
-                    F.countDistinct("child").alias("n_with"),
-                )
-                .join(n_children, on="parent", how="left")
-                .withColumn("has_empty_child", F.col("n_with") < F.col("n_children"))
-            )
-            own = asserted.join(nodes_d, on="node", how="inner").select(
-                F.col("node").alias("o_parent"),
-                F.col("character").alias("o_character"),
-                F.col("states").alias("own_states"),
-            )
-            merged = per_char.join(
-                own,
-                (per_char["parent"] == own["o_parent"])
-                & (per_char["character"] == own["o_character"]),
-                how="full",
-            ).select(
-                F.coalesce(F.col("parent"), F.col("o_parent")).alias("parent"),
-                F.coalesce(F.col("character"), F.col("o_character")).alias("character"),
-                F.coalesce("child_sets", F.array().cast("array<array<string>>")).alias("child_sets"),
-                F.coalesce("own_states", F.array().cast("array<string>")).alias("own_states"),
-                F.coalesce("has_empty_child", F.lit(False)).alias("has_empty_child"),
-                F.col("n_with").isNotNull().alias("has_child_data"),
-            )
-            # Own-only rows (no child carries the character): every child still
-            # contributes an empty set (reference: childrenStateSets has one
-            # entry per child, EvolutionaryProfiles.scala:139), so a node WITH
-            # children gets the empty-set marker.
-            merged = merged.join(
-                n_children.select(F.col("parent").alias("nc_parent"), F.col("n_children").alias("nc")),
-                merged["parent"] == F.col("nc_parent"),
-                how="left",
-            ).withColumn(
-                "has_empty_child",
-                F.when(~F.col("has_child_data") & (F.coalesce(F.col("nc"), F.lit(0)) > 0), F.lit(True))
-                .otherwise(F.col("has_empty_child")),
-            ).drop("nc_parent")
-            all_sets = F.array_distinct(
-                F.concat(
-                    F.col("child_sets"),
-                    F.array(_set_col(F.col("own_states"))),
-                    F.when(F.col("has_empty_child"), F.array(F.array().cast("array<string>")))
-                    .otherwise(F.array().cast("array<array<string>>")),
-                )
-            )
-            stepped = merged.withColumn("all_sets", all_sets).withColumn(
-                "non_empty", F.filter(F.col("all_sets"), lambda s: F.size(s) > 0)
-            ).withColumn(
-                "shared",
-                F.when(
-                    F.size("non_empty") > 0,
-                    F.aggregate(
-                        F.slice(F.col("non_empty"), 2, 100000),
-                        F.col("non_empty")[0],
-                        lambda acc, s: F.array_intersect(acc, s),
-                    ),
-                ).otherwise(F.array().cast("array<string>")),
-            ).withColumn(
-                "union_all",
-                F.aggregate(
-                    F.col("all_sets"),
-                    F.array().cast("array<string>"),
-                    lambda acc, s: F.array_union(acc, s),
-                ),
-            ).withColumn(
-                "current",
-                F.when(F.size("shared") > 0, F.col("shared"))
-                .when(F.size("all_sets") == 1, F.col("all_sets")[0])
-                .otherwise(F.col("union_all")),
-            ).withColumn(
-                "profile_states",
-                F.when(
-                    (F.size("shared") == 0) & (F.size("all_sets") >= 2) & (F.size("union_all") > 0),
-                    F.col("union_all"),
-                ),
-            )
-            # ONE eager action per level: barrier a combined frame carrying
-            # both outputs, then split with narrow filters — the old shape
-            # left the profile rows lazy, so the final action re-ran every
-            # level's join pipeline a second time.
-            combined = barrier(
-                stepped.select(
-                    F.col("parent").alias("node"),
-                    "character",
-                    F.sort_array(F.col("current")).alias("states"),
-                    F.when(
-                        F.col("profile_states").isNotNull()
-                        & (F.size("profile_states") > 0),
-                        F.sort_array(F.col("profile_states")),
-                    ).alias("p_states"),
-                ),
-                "level",
-            )
-            prev_level = combined.where(F.size("states") > 0).select(
-                "node", "character", "states"
-            )
+    for d in range(max_depth, -1, -1):
+        nodes_d = depths.where(F.col("depth") == d).select(F.col("n").alias("node"))
+        if d == max_depth:
+            # deepest level: all leaves -> associations are the asserted sets
+            prev_level = barrier(asserted.join(nodes_d, on="node", how="inner"), "level")
             level_frames.append(prev_level)
-            profile_frames.append(
-                combined.where(F.col("p_states").isNotNull()).select(
-                    "node", "character", F.col("p_states").alias("states")
-                )
+            continue
+        # children of level-d nodes live exactly one level down
+        child_assoc = (
+            edges.join(nodes_d, edges["parent"] == nodes_d["node"])
+            .select("child", "parent")
+            .join(prev_level, F.col("child") == prev_level["node"], "left")
+            .select(
+                F.col("parent"),
+                F.col("child"),
+                F.col("character"),
+                F.col("states"),
             )
+        )
+        # per (parent, character): distinct child sets + empty-set marker
+        per_char = (
+            child_assoc.where(F.col("character").isNotNull())
+            .groupBy("parent", "character")
+            .agg(
+                F.array_distinct(F.collect_set("states")).alias("child_sets"),
+                F.countDistinct("child").alias("n_with"),
+            )
+            .join(n_children, on="parent", how="left")
+            .withColumn("has_empty_child", F.col("n_with") < F.col("n_children"))
+        )
+        own = asserted.join(nodes_d, on="node", how="inner").select(
+            F.col("node").alias("o_parent"),
+            F.col("character").alias("o_character"),
+            F.col("states").alias("own_states"),
+        )
+        merged = per_char.join(
+            own,
+            (per_char["parent"] == own["o_parent"])
+            & (per_char["character"] == own["o_character"]),
+            how="full",
+        ).select(
+            F.coalesce(F.col("parent"), F.col("o_parent")).alias("parent"),
+            F.coalesce(F.col("character"), F.col("o_character")).alias("character"),
+            F.coalesce("child_sets", F.array().cast("array<array<string>>")).alias("child_sets"),
+            F.coalesce("own_states", F.array().cast("array<string>")).alias("own_states"),
+            F.coalesce("has_empty_child", F.lit(False)).alias("has_empty_child"),
+            F.col("n_with").isNotNull().alias("has_child_data"),
+        )
+        # Own-only rows (no child carries the character): every child still
+        # contributes an empty set (reference: childrenStateSets has one
+        # entry per child, EvolutionaryProfiles.scala:139), so a node WITH
+        # children gets the empty-set marker.
+        merged = merged.join(
+            n_children.select(F.col("parent").alias("nc_parent"), F.col("n_children").alias("nc")),
+            merged["parent"] == F.col("nc_parent"),
+            how="left",
+        ).withColumn(
+            "has_empty_child",
+            F.when(~F.col("has_child_data") & (F.coalesce(F.col("nc"), F.lit(0)) > 0), F.lit(True))
+            .otherwise(F.col("has_empty_child")),
+        ).drop("nc_parent")
+        all_sets = F.array_distinct(
+            F.concat(
+                F.col("child_sets"),
+                F.array(_set_col(F.col("own_states"))),
+                F.when(F.col("has_empty_child"), F.array(F.array().cast("array<string>")))
+                .otherwise(F.array().cast("array<array<string>>")),
+            )
+        )
+        stepped = merged.withColumn("all_sets", all_sets).withColumn(
+            "non_empty", F.filter(F.col("all_sets"), lambda s: F.size(s) > 0)
+        ).withColumn(
+            "shared",
+            F.when(
+                F.size("non_empty") > 0,
+                F.aggregate(
+                    F.slice(F.col("non_empty"), 2, 100000),
+                    F.col("non_empty")[0],
+                    lambda acc, s: F.array_intersect(acc, s),
+                ),
+            ).otherwise(F.array().cast("array<string>")),
+        ).withColumn(
+            "union_all",
+            F.aggregate(
+                F.col("all_sets"),
+                F.array().cast("array<string>"),
+                lambda acc, s: F.array_union(acc, s),
+            ),
+        ).withColumn(
+            "current",
+            F.when(F.size("shared") > 0, F.col("shared"))
+            .when(F.size("all_sets") == 1, F.col("all_sets")[0])
+            .otherwise(F.col("union_all")),
+        ).withColumn(
+            "profile_states",
+            F.when(
+                (F.size("shared") == 0) & (F.size("all_sets") >= 2) & (F.size("union_all") > 0),
+                F.col("union_all"),
+            ),
+        )
+        # ONE eager action per level: barrier a combined frame carrying
+        # both outputs, then split with narrow filters — the old shape
+        # left the profile rows lazy, so the final action re-ran every
+        # level's join pipeline a second time.
+        combined = barrier(
+            stepped.select(
+                F.col("parent").alias("node"),
+                "character",
+                F.sort_array(F.col("current")).alias("states"),
+                F.when(
+                    F.col("profile_states").isNotNull()
+                    & (F.size("profile_states") > 0),
+                    F.sort_array(F.col("profile_states")),
+                ).alias("p_states"),
+            ),
+            "level",
+        )
+        prev_level = combined.where(F.size("states") > 0).select(
+            "node", "character", "states"
+        )
+        level_frames.append(prev_level)
+        profile_frames.append(
+            combined.where(F.col("p_states").isNotNull()).select(
+                "node", "character", F.col("p_states").alias("states")
+            )
+        )
 
     computed = level_frames[0]
     for lf in level_frames[1:]:

@@ -97,7 +97,8 @@ def _id_array(ids: list):
     """Ids as :func:`_score_tile` orders them. Numeric ids keep their
     numpy dtype; string ids must be OBJECT arrays (np.minimum has loops for
     numeric and object dtypes, not for '<U' unicode), and so is a list
-    holding a NULL (None), which no id orders against."""
+    holding a NULL (None), which :func:`_score_tile` leaves out of every
+    pair."""
     import numpy as np
 
     arr = np.array(ids)
@@ -110,7 +111,8 @@ def _score_tile(ids_a, m_a, ids_b, m_b, diagonal: bool, threshold: float):
 
     A diagonal tile (a is b) keeps its strict upper triangle only:
     (i,j)/(j,i) canonicalize to the same pair (dedup.py lesson: compare
-    MULTISETS in tests, sets hide doubles).
+    MULTISETS in tests, sets hide doubles). A NULL id pairs with nothing,
+    as in the SQL oracle's ``a.vec_id < b.vec_id``.
     """
     import numpy as np
 
@@ -119,6 +121,9 @@ def _score_tile(ids_a, m_a, ids_b, m_b, diagonal: bool, threshold: float):
     if diagonal:
         hits = np.triu(hits, k=1)
     ia, ib = np.where(hits)
+    if ids_a.dtype == object or ids_b.dtype == object:
+        known = np.not_equal(ids_a[ia], None) & np.not_equal(ids_b[ib], None)
+        ia, ib = ia[known], ib[known]
     lo = np.minimum(ids_a[ia], ids_b[ib])
     hi = np.maximum(ids_a[ia], ids_b[ib])
     keep = lo < hi
@@ -396,8 +401,8 @@ def _driver_cascade(
     in ``orderBy`` order (NULL first, NaN last), and the assignment GEMM and
     every ``(cluster, block)`` tile run through the same kernels. Ids are
     read from Arrow as Python values, so a NULL stays None and a bigint id
-    stays exact. A NULL id is kept like any id in no pair; one that pairs
-    fails the scorer, as on the Spark route.
+    stays exact. A NULL id pairs with nothing (:func:`_score_tile`), so it
+    is kept, as on the Spark route.
     """
     import heapq
 

@@ -460,6 +460,36 @@ def test_apply_degenerate_batches_barrier_counts(spark, monkeypatch):
     assert _closure_set(dele) == pyoracle.transitive_closure(set(chain) - set(deleted))
 
 
+def test_apply_compacts_long_cascades(spark, monkeypatch):
+    """Nested restrictions (x_k = P some x_k-1, ten deep) stretch deleting
+    a ⊑ b over 12 overdelete rounds and, through the surviving path
+    a ⊑ m ⊑ b, as many rederive rounds: both loops compact mid-cascade
+    (every 8 rounds) and the result equals the from-scratch closure."""
+    edges = {("a", "m"), ("m", "b"), ("a", "b"), ("b", "c")}
+    restr = spark.createDataFrame(
+        [(f"{x}{k}", "P", f"{x}{k - 1}" if k > 1 else x) for x in "abc" for k in range(1, 11)],
+        ["iri", "prop", "filler"],
+    )
+    asserted = _edges_df(spark, edges)
+    before = closure.transitive_closure(asserted, restr).localCheckpoint(eager=True)
+    calls = _count_barriers(monkeypatch)
+    overdelete, over_compactions = closure._overdelete, []
+
+    def spy(*args):
+        out = overdelete(*args)
+        over_compactions.append(calls.count("materialize"))
+        return out
+
+    monkeypatch.setattr(closure, "_overdelete", spy)
+    got = closure.incremental_closure_apply(
+        before, asserted, _edges_df(spark, [("a", "b")]), _no_edges(spark), restr
+    )
+    want = closure.transitive_closure(_edges_df(spark, edges - {("a", "b")}), restr)
+    assert _closure_set(got) == _closure_set(want)
+    assert over_compactions[0] >= 2
+    assert calls.count("materialize") > over_compactions[0]
+
+
 _DEEP = {"width": 8, "layers": 60}
 _deep_closure_cache: dict[int, object] = {}
 

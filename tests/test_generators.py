@@ -96,26 +96,56 @@ def test_normalize_properties(spark):
     assert got == {vocab.PART_OF, "keep"}
 
 
+def _reachable_defs(assertions, defs):
+    """Naive reachability: def triples of every class reachable from an
+    asserted class through def objects."""
+    seen, todo = set(), [cls for _, cls in assertions]
+    while todo:
+        c = todo.pop()
+        if c not in seen:
+            seen.add(c)
+            todo.extend(o for s, _, o in defs if s == c)
+    return {t for t in defs if t[0] in seen}
+
+
 def test_expand_profile_semantics(spark):
-    """Only def triples of classes actually asserted survive."""
+    """Only def triples of classes reachable from an asserted one survive,
+    also when the definition graph has a cycle or a NULL object."""
     from phenoscape_owl_tools_spark.operators.generators import (
         expand_profile_semantics,
     )
 
-    assertions = spark.createDataFrame(
-        [("ind1", "expr:A"), ("ind2", "cls:plain")],
-        ["individual", "cls"],
-    )
-    defs = spark.createDataFrame(
-        [
-            ("expr:A", "rdfs:subClassOf", "cls:S"),
-            ("expr:A", "in_taxon", "t:1"),
-            ("expr:B", "rdfs:subClassOf", "cls:T"),  # unreferenced
-        ],
-        ["subj", "pred", "obj"],
-    )
-    got = {tuple(r) for r in expand_profile_semantics(assertions, defs).collect()}
-    assert got == {
+    cases = {
+        "flat": (
+            [("ind1", "expr:A"), ("ind2", "cls:plain")],
+            [
+                ("expr:A", "rdfs:subClassOf", "cls:S"),
+                ("expr:A", "in_taxon", "t:1"),
+                ("expr:B", "rdfs:subClassOf", "cls:T"),  # unreferenced
+            ],
+        ),
+        "cyclic": (
+            [("i1", "expr:X")],
+            [
+                ("expr:X", "has_part", "expr:Y"),
+                ("expr:Y", "part_of", "expr:Z"),
+                ("expr:Z", "develops_from", "expr:X"),  # back to the start
+                ("expr:Z", "in_taxon", "t:2"),
+                ("expr:Y", "label", None),  # a NULL object names no class
+                ("expr:W", "part_of", "expr:X"),  # points in, unreachable
+            ],
+        ),
+    }
+    for name, (assertions, defs) in cases.items():
+        got = {
+            tuple(r)
+            for r in expand_profile_semantics(
+                spark.createDataFrame(assertions, ["individual", "cls"]),
+                spark.createDataFrame(defs, "subj string, pred string, obj string"),
+            ).collect()
+        }
+        assert got == _reachable_defs(assertions, defs), name
+    assert _reachable_defs(*cases["flat"]) == {
         ("expr:A", "rdfs:subClassOf", "cls:S"),
         ("expr:A", "in_taxon", "t:1"),
     }

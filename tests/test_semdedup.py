@@ -7,7 +7,6 @@ from __future__ import annotations
 
 import math
 
-import pytest
 from pyspark.sql import Row
 
 from phenoscape_owl_tools_spark.operators.dedup import embedding_near_dups
@@ -361,18 +360,22 @@ def test_degenerate_inputs_on_both_routes(spark, monkeypatch):
         assert d_schema == s_schema, name
 
 
-def test_null_id_in_a_pair_fails_on_both_routes(spark, monkeypatch):
-    """A NULL id has no order against another id, so a NULL-id vector that
-    pairs fails the tile scorer. The Spark route has always failed here;
-    the driver route must not silently decide instead."""
-    from pyspark.errors import PythonException
-
-    emb = _degenerate(spark, [(None, [1.0, 0.0]), (1, [1.0, 0.0]), (2, [-1.0, 0.0])])
-    for cap in (3, 2):  # driver route, then Spark route
-        with pytest.raises(
-            (TypeError, PythonException), match="not supported between instances of"
-        ):
-            _run_at_cap(monkeypatch, emb, cap, k=2, threshold=0.9)
+def test_null_id_never_pairs_on_both_routes(spark, monkeypatch):
+    """A NULL id pairs with nothing, as in the SQL oracle's ``a.vec_id <
+    b.vec_id``: the NULL row and id 1, its identical twin, are both kept,
+    while the pair (2, 3) still drops 3. Bigint and string ids alike."""
+    rows = [(None, [1.0, 0.0]), (1, [1.0, 0.0]), (2, [-1.0, 0.0]), (3, [-1.0, 0.001])]
+    want = [(None, 0, True), (1, 0, True), (2, 0, True), (3, 0, False)]
+    for id_type, key in (("bigint", lambda i: i), ("string", str)):
+        emb = spark.createDataFrame(
+            [(None if i is None else key(i), v) for i, v in rows],
+            f"vec_id {id_type}, embedding array<float>",
+        )
+        expect = sorted(((None if i is None else key(i), c, k) for i, c, k in want), key=repr)
+        got = _on_both_routes(monkeypatch, emb, k=2, threshold=0.9)
+        (d_rows, _, d_calls, _), (s_rows, _, s_calls, _) = got["driver"], got["spark"]
+        assert d_calls == 0 and s_calls > 0, id_type
+        assert d_rows == s_rows == expect, id_type
 
 
 def test_double_ids_order_null_first_and_nan_last_on_both_routes(spark, monkeypatch):
