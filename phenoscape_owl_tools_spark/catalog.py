@@ -47,7 +47,6 @@ def write_table(
     fingerprint: str = "",
     bucket_col: str | None = None,
     n_buckets: int = 16,
-    collect_metrics: bool = True,
 ) -> dict:
     """Write ``df`` as parquet + lineage manifest; returns the manifest."""
     path = Path(path)
@@ -72,15 +71,14 @@ def write_table(
         "row_count": None,
         "checksum": None,
     }
-    if collect_metrics:
-        data_cols = [c for c in written.columns if c != "bucket"]
-        if partition_cols:
-            counts = written.groupBy("bucket").count().collect()
-            manifest["partition_counts"] = {str(r["bucket"]): r["count"] for r in counts}
-            manifest["row_count"] = sum(r["count"] for r in counts)
-        else:
-            manifest["row_count"] = written.count()
-        manifest["checksum"] = content_checksum(written.select(*data_cols))
+    data_cols = [c for c in written.columns if c != "bucket"]
+    if partition_cols:
+        counts = written.groupBy("bucket").count().collect()
+        manifest["partition_counts"] = {str(r["bucket"]): r["count"] for r in counts}
+        manifest["row_count"] = sum(r["count"] for r in counts)
+    else:
+        manifest["row_count"] = written.count()
+    manifest["checksum"] = content_checksum(written.select(*data_cols))
     manifest["wall_seconds"] = round(time.time() - t0, 3)
     path.mkdir(parents=True, exist_ok=True)
     (path / MANIFEST_NAME).write_text(json.dumps(manifest, indent=1, sort_keys=True))

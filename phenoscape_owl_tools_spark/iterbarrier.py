@@ -62,9 +62,9 @@ class IterationBarrier:
     Hybrid strategy: the task-time blowup only onsets once the chain of
     checkpoint-derived frames is ~13 deep (measured flat through depth 12 in
     every probe), so short chains use the cheap eager ``localCheckpoint``
-    (~0.1 s) and every ``local_until``-th call does a parquet round-trip
+    (~0.1 s) and every ``LOCAL_UNTIL``-th call does a parquet round-trip
     (~0.5 s) that resets the derivation depth to zero. Fixpoints that finish
-    within ``local_until`` rounds (the common case: OBO closure diameter,
+    within ``LOCAL_UNTIL`` rounds (the common case: OBO closure diameter,
     small-component CC) never pay the write.
 
     One instance per fixpoint invocation; files live until process exit
@@ -72,12 +72,13 @@ class IterationBarrier:
     files), directory is removed by an ``atexit`` hook.
     """
 
-    def __init__(self, name: str = "iter", local_until: int = 6):
+    LOCAL_UNTIL = 6
+
+    def __init__(self, name: str = "iter"):
         self.root = tempfile.mkdtemp(prefix=f"sparkgraft_{name}_")
         self._seq = 0
         self._depth = 0
         self._paths: list[str] = []
-        self.local_until = local_until
         atexit.register(shutil.rmtree, self.root, True)
 
     @staticmethod
@@ -96,7 +97,7 @@ class IterationBarrier:
 
     def __call__(self, df: DataFrame, tag: str = "step") -> DataFrame:
         self.harden(df)
-        if self._depth < self.local_until:
+        if self._depth < self.LOCAL_UNTIL:
             self._depth += 1
             return df.localCheckpoint(eager=True)
         return self.materialize(df, tag)

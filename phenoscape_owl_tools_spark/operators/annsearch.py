@@ -1,20 +1,25 @@
 """Similarity search over an embedding column (array<float>).
 
-Two paths, mirroring the reference's two-phase similarity design
+Four top-k paths, mirroring the reference's two-phase similarity design
 (exhaustive OWLsim cartesian scoring, sim/OWLsim.scala:94-139, vs its
 100-way sharding for scale, RunPairwiseOWLSim.scala:40-46):
 
 - ``brute_force_topk``: exact cosine top-k — the correctness baseline.
   Query side broadcasts (queries are small); the scan side streams, so cost
   is one pass over the corpus per query batch, no shuffle of the corpus.
+- ``matmul_topk``: the same exact answer from one numpy GEMM per Arrow
+  batch against the broadcast query matrix, plus a global top-k window.
 - ``bucket_lsh_topk``: sign-bit LSH (axis-aligned random-hyperplane family):
   bucket key = sign bits of fixed dimensions. Corpus and queries co-shuffle
   on the bucket key only, so each query scores only its bucket — the
   100-TB path. Recall is tunable via bits/multi-probe; candidates can be
   exactly re-verified downstream.
+- ``ivf_topk``: a trained inverted file. ``ivf_fit`` learns the cells
+  (deterministic k-means), SemDeDup's assigner places every vector in its
+  nearest cell, and each query scores only its ``nprobe`` nearest cells.
 
-All scoring is JVM-side column math (zip_with/aggregate, double
-precision) — no Python in the hot path.
+Pair scores outside ``matmul_topk`` are JVM-side column math
+(zip_with/aggregate over unit vectors, double precision).
 """
 
 from __future__ import annotations
@@ -253,37 +258,6 @@ def ivf_fit(embeddings: DataFrame, n_cells: int = 16, n_iters: int = 5):
     return cent
 
 
-def ivf_assign(embeddings: DataFrame, centroids) -> DataFrame:
-    """(vec_id, cell, embedding): nearest-centroid assignment, Arrow GEMM.
-
-    At scale this is the write-time partitioning: the corpus is bucketed /
-    partitioned by ``cell`` once, and every search touches only probed
-    cells' partitions (partition pruning on the equi-join key).
-    """
-    import numpy as np
-    import pandas as pd
-    from typing import Iterator
-
-    spark = embeddings.sparkSession
-    bc = spark.sparkContext.broadcast(np.asarray(centroids, dtype=np.float64))
-
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        c = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.array(list(pdf["embedding"]), dtype=np.float64)
-            n = np.linalg.norm(m, axis=1, keepdims=True)
-            mn = m / np.where(n == 0, 1.0, n)
-            pdf = pdf[["vec_id", "embedding"]].copy()
-            pdf["cell"] = np.argmax(mn @ c.T, axis=1).astype("int32")
-            yield pdf[["vec_id", "cell", "embedding"]]
-
-    return embeddings.select("vec_id", "embedding").mapInPandas(
-        assign, "vec_id long, cell int, embedding array<float>"
-    )
-
-
 def ivf_topk(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -301,11 +275,18 @@ def ivf_topk(
     of fixed hyperplanes. ``nprobe == n_cells`` degenerates to exact search
     (recall 1 by construction — the parity test uses this).
 
+    Cells come from :func:`semdedup.assign_clusters` with the trained
+    centroids: one Arrow GEMM per batch, argmax of round(cos, 6), ties to
+    the smallest cell. The JVM-fold unit vectors it returns are the scored
+    side, and neighbor ids keep the type of ``vec_id``.
+
     Scale shape: corpus shuffles ONCE on ``cell`` (or is bucketed at write
     time); queries explode to their probe list and equi-join on ``cell`` —
     no cartesian anywhere; scoring is the same JVM-side fold as LSH.
     """
     import numpy as np
+
+    from .semdedup import assign_clusters
 
     spark = embeddings.sparkSession
     # collect queries FIRST: an empty query set must not pay the k-means fit
@@ -314,12 +295,12 @@ def ivf_topk(
         return spark.createDataFrame([], MATMUL_SCHEMA)
     if centroids is None:
         centroids = ivf_fit(embeddings, n_cells=n_cells, n_iters=n_iters)
-    assigned = ivf_assign(embeddings, centroids).select(
-        F.col("vec_id").alias("neighbor_id"),
-        "cell",
-        unit_vector_col(F.col("embedding")).alias("ce"),
-    )
     c = np.asarray(centroids, dtype=np.float64)
+    assigned = assign_clusters(embeddings, centroids=list(enumerate(c))).select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("cluster").alias("cell"),
+        F.col("u").alias("ce"),
+    )
     probe_rows = []
     for r in q_rows:
         v = np.array(r["embedding"], dtype=np.float64)

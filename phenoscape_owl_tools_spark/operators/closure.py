@@ -696,13 +696,12 @@ def maintain_closure(
     inserted_edges: DataFrame | None = None,
     restrictions: DataFrame | None = None,
     max_iterations: int = 100,
-    strategy: str | None = None,
 ) -> DataFrame:
     """Single maintenance entry point: closure((asserted − deleted) ∪
     inserted), auto-selecting :func:`incremental_closure_apply` vs a
     from-scratch :func:`transitive_closure` from measured decision
     variables (:func:`choose_maintenance_strategy` — BENCH §9.2's
-    crossover, encoded). ``strategy`` forces 'incremental' or 'scratch'.
+    crossover, encoded).
 
     The reference re-materializes from scratch unconditionally
     (MaterializeInferences.scala:44-57, its only mode); this picks the
@@ -718,9 +717,7 @@ def maintain_closure(
     inserted = _edges(inserted_edges) if inserted_edges is not None else empty
     if deleted.isEmpty() and inserted.isEmpty():
         return _edges(closure)
-    if strategy is None:
-        strategy = choose_maintenance_strategy(closure, deleted)["strategy"]
-    if strategy == "incremental":
+    if choose_maintenance_strategy(closure, deleted)["strategy"] == "incremental":
         return incremental_closure_apply(
             closure,
             asserted_edges,
@@ -729,8 +726,6 @@ def maintain_closure(
             restrictions=restrictions,
             max_iterations=max_iterations,
         )
-    if strategy != "scratch":
-        raise ValueError(f"unknown maintenance strategy {strategy!r}")
     mutated = (
         _edges(asserted_edges)
         .dropDuplicates()

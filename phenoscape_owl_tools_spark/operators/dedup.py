@@ -19,9 +19,10 @@ Scale notes (100 TB):
   band-bucket collisions. Giant buckets (skew) split by AQE; candidates are
   then verified with exact Jaccard so precision is unaffected by banding.
 - SimHash is map-only per document + one groupBy on an 8-bit key.
-- Embedding near-dup here is the brute-force O(n^2) baseline used for
-  verification; the bucketed-LSH scale path lives in
-  ``operators/annsearch.py``.
+- Embedding near-dup: the brute-force O(n^2) crossJoin is the
+  verification baseline; the contract path scores exact tiles with
+  SemDeDup's kernel (``operators/semdedup.py``); approximate top-k search
+  lives in ``operators/annsearch.py``.
 """
 
 from __future__ import annotations
@@ -307,7 +308,7 @@ def simhash_dup_groups(documents: DataFrame, bits: int = 8) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# embedding-cosine near-dup (brute-force verification baseline)
+# embedding-cosine near-dup
 # ---------------------------------------------------------------------------
 
 def unit_vector_col(e) -> F.Column:
@@ -363,9 +364,6 @@ def embedding_near_dups(embeddings: DataFrame, threshold: float = 0.4) -> DataFr
     )
 
 
-GEMM_PAIR_SCHEMA = "id_a long, id_b long, cos double"
-
-
 def embedding_near_dups_gemm(
     embeddings: DataFrame, threshold: float = 0.4, n_blocks: int = 16
 ) -> DataFrame:
@@ -377,82 +375,26 @@ def embedding_near_dups_gemm(
     scheme with recall ~1 costs more bucket-join work than the full O(n^2).
     A dense-vector threshold join at a near-noise threshold is inherently
     all-pairs; the scalable design is *exact tiled evaluation*, not
-    candidate pruning:
+    candidate pruning.
 
-    - each vector hashes to one of ``n_blocks`` blocks; blocks are packed
-      into one array row each (``collect_list``) — one shuffle,
-    - a driver-enumerated (block_a <= block_b) tile list EQUI-joins the
-      packed blocks twice (BroadcastHashJoin both times: the tile list and
-      the packed side are metadata-scale relative to the fact table; no
-      CartesianProduct / BroadcastNestedLoopJoin anywhere in the plan),
-    - each of the B(B+1)/2 tiles scores its pairs with one numpy GEMM in
-      ``mapInPandas`` (Arrow-batched; ~100x the per-pair array-fold route)
-      and emits only pairs >= threshold.
-
-    Tiles are independent tasks -> embarrassingly parallel on a 1000-executor
-    cluster; shuffled bytes = n_blocks * corpus (the replication every exact
-    all-pairs scheme pays), and per-task memory is 2 blocks = 2n/B vectors —
-    pick ``n_blocks`` so a block fits executor memory. Results are bitwise
-    identical to :func:`embedding_near_dups` (same float64 math, same
-    round-6, id_a < id_b).
+    This is SemDeDup's within-cluster tiler with every vector in one
+    cluster (``semdedup._within_cluster_pairs``): ``n_blocks`` blocks by id
+    hash, B(B+1)/2 equi-joined tiles (no CartesianProduct in the plan),
+    each scored by one float64 GEMM in ``mapInArrow``. Per-task memory is
+    2 blocks, so pick ``n_blocks`` so a block fits executor memory. Unit
+    vectors are the
+    JVM-side fold of :func:`unit_vector_col`, so results are identical to
+    :func:`embedding_near_dups` (same round-6, id_a < id_b, a NULL id pairs
+    with nothing); id types follow ``vec_id``.
     """
-    from typing import Iterator
+    from .semdedup import _within_cluster_pairs
 
-    import numpy as np
-    import pandas as pd
-
-    spark = embeddings.sparkSession
-    packed = (
-        embeddings.select(
-            "vec_id",
-            F.col("embedding"),
-            F.pmod(F.xxhash64(F.col("vec_id")), F.lit(n_blocks)).alias("blk"),
-        )
-        .groupBy("blk")
-        .agg(F.collect_list(F.struct("vec_id", "embedding")).alias("vecs"))
+    units = embeddings.select(
+        "vec_id",
+        F.lit(0).alias("cluster"),
+        unit_vector_col(F.col("embedding")).alias("u"),
     )
-    tiles = spark.createDataFrame(
-        [(a, b) for a in range(n_blocks) for b in range(n_blocks) if a <= b],
-        "ba int, bb int",
-    )
-    a_side = packed.select(F.col("blk").alias("ba"), F.col("vecs").alias("vecs_a"))
-    b_side = packed.select(F.col("blk").alias("bb"), F.col("vecs").alias("vecs_b"))
-    tiled = (
-        F.broadcast(tiles)
-        .join(a_side, "ba")
-        .join(b_side, "bb")
-        .select("ba", "bb", "vecs_a", "vecs_b")
-    )
-
-    def _unit(mat: np.ndarray) -> np.ndarray:
-        nrm = np.linalg.norm(mat, axis=1, keepdims=True)
-        return mat / np.where(nrm == 0, 1.0, nrm)
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                ids_a = np.array([v["vec_id"] for v in row["vecs_a"]], dtype=np.int64)
-                m_a = _unit(np.array([v["embedding"] for v in row["vecs_a"]], dtype=np.float64))
-                if row["ba"] == row["bb"]:
-                    ids_b, m_b = ids_a, m_a
-                else:
-                    ids_b = np.array([v["vec_id"] for v in row["vecs_b"]], dtype=np.int64)
-                    m_b = _unit(np.array([v["embedding"] for v in row["vecs_b"]], dtype=np.float64))
-                sims = np.round(m_a @ m_b.T, 6)
-                hits = sims >= threshold
-                if row["ba"] == row["bb"]:
-                    # diagonal tile: (i,j) and (j,i) canonicalize to the same
-                    # pair — emit the strict upper triangle only
-                    hits = np.triu(hits, k=1)
-                ia, ib = np.where(hits)
-                lo = np.minimum(ids_a[ia], ids_b[ib])
-                hi = np.maximum(ids_a[ia], ids_b[ib])
-                keep = lo < hi  # drop self-pairs; id_a < id_b canonical order
-                yield pd.DataFrame(
-                    {"id_a": lo[keep], "id_b": hi[keep], "cos": sims[ia, ib][keep]}
-                )
-
-    return tiled.mapInPandas(score, GEMM_PAIR_SCHEMA)
+    return _within_cluster_pairs(units, threshold, n_blocks).drop("cluster")
 
 
 # ---------------------------------------------------------------------------

@@ -112,86 +112,6 @@ class _PhraseTrie:
         return out
 
 
-class _RegexMatcher:
-    """Trie-structured regex matcher — the fast path for :class:`_PhraseTrie`.
-
-    The token trie is compiled into a nested-alternation regex applied to the
-    span's space-normalized lowered token stream, so the longest-match walk
-    runs inside the C regex engine instead of a per-token Python loop
-    (measured ~5-10x on the flagship extraction stage). Semantics are
-    identical to ``_PhraseTrie.find``:
-
-    - matches start/end on token boundaries (``(?<!\\S)`` / ``(?!\\S)`` in
-      the single-space-normalized stream),
-    - at each start the longest dictionary phrase wins (continuation
-      alternatives are greedy-optional, so backtracking prefers the deepest
-      accept node),
-    - scanning resumes after a match (``finditer`` is non-overlapping),
-    - ambiguous surfaces resolve to min(iri) at build time.
-
-    Compiled once per Python worker from the broadcast entries. For
-    multi-million-label dictionaries the compile is amortized across the
-    worker's lifetime; if the pattern exceeds the ``re`` engine's limits we
-    fall back to the interpreted trie.
-    """
-
-    __slots__ = ("pattern", "surf2iri")
-
-    _END = "\x00"
-
-    def __init__(self, entries: list[tuple[str, str]]):
-        trie: dict = {}
-        self.surf2iri: dict[str, str] = {}
-        for surface, iri in entries:
-            toks = tokenize(surface)
-            if not toks:
-                continue
-            key = " ".join(toks)
-            cur = self.surf2iri.get(key)
-            if cur is None or iri < cur:
-                self.surf2iri[key] = iri
-            node = trie
-            for t in toks:
-                node = node.setdefault(t, {})
-            node[self._END] = True
-
-        def follow(node: dict) -> str:
-            conts = [
-                " " + re.escape(t) + follow(c)
-                for t, c in sorted(node.items())
-                if t != self._END
-            ]
-            if self._END in node:
-                return f"(?:{'|'.join(conts)})?" if conts else ""
-            return f"(?:{'|'.join(conts)})"
-
-        alts = [re.escape(t) + follow(c) for t, c in sorted(trie.items())]
-        body = "|".join(alts) if alts else "(?!)"  # empty dict matches nothing
-        self.pattern = re.compile(rf"(?<!\S)(?:{body})(?!\S)")
-
-    def find(self, tokens: list[str]) -> list[tuple[int, int, str, str]]:
-        """Longest non-overlapping matches: (start, n_tokens, surface, iri)."""
-        if not tokens:
-            return []
-        norm = " ".join(tokens)
-        # char offset -> token index: token i starts at starts[i]
-        starts = []
-        pos = 0
-        for t in tokens:
-            starts.append(pos)
-            pos += len(t) + 1
-        out = []
-        from bisect import bisect_right
-
-        for m in self.pattern.finditer(norm):
-            surface = m.group()
-            start_tok = bisect_right(starts, m.start()) - 1
-            out.append(
-                (start_tok, surface.count(" ") + 1, surface, self.surf2iri[surface])
-            )
-        return out
-
-
 class _WordMatcher:
     """Single-token dictionary fast path: one dict probe per token.
 
@@ -227,16 +147,13 @@ class _WordMatcher:
 
 def build_matcher(entries: list[tuple[str, str]]):
     """Compile broadcast dictionary entries into the fastest equivalent
-    matcher for their shape (all three produce identical matches):
+    matcher for their shape (both produce identical matches):
 
     - all surfaces single-token -> :class:`_WordMatcher` (hash probe/token;
       3.4x the trie at dense match rates),
     - phrases present -> :class:`_PhraseTrie` (interpreted longest-match
-      walk; beats :class:`_RegexMatcher` 2.4x when most tokens match,
-      because per-match regex bookkeeping dominates),
-    - :class:`_RegexMatcher` remains the choice for huge dictionaries with
-      SPARSE hits (C-speed scan between matches); callers with that shape
-      pass it explicitly.
+      walk; beat a compiled nested-alternation regex 2.4x when most tokens
+      match, because per-match regex bookkeeping dominates).
     """
     if all(len(tokenize(s)) == 1 for s, _ in entries):
         return _WordMatcher(entries)

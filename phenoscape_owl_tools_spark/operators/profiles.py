@@ -92,7 +92,6 @@ DRIVER_FITCH_MAX_BYTES = 512 * 1024 * 1024
 def evolutionary_profiles(
     taxonomy_edges: DataFrame,
     state_associations: DataFrame,
-    strategy: str = "auto",
 ) -> tuple[DataFrame, DataFrame]:
     """Returns (associations, profiles): (taxon, character, states array<string>).
 
@@ -106,12 +105,10 @@ def evolutionary_profiles(
     driver (``DRIVER_FITCH_MAX_ROWS``) the fold is one in-memory pass —
     the same architecture as the reference's single-JVM
     ``EvolutionaryProfiles`` — and O(depth) Spark jobs disappear. Larger
-    inputs (or ``strategy="distributed"``) use the barrier-checkpointed
-    level loop. Both paths produce identical rows (asserted by
-    tests/test_profiles.py).
+    inputs (over ``DRIVER_FITCH_MAX_ROWS`` or ``DRIVER_FITCH_MAX_BYTES``)
+    use the barrier-checkpointed level loop. Both paths produce identical
+    rows (asserted by tests/test_profiles.py).
     """
-    if strategy not in ("auto", "driver", "distributed"):
-        raise ValueError(f"unknown strategy {strategy!r}")
     spark = taxonomy_edges.sparkSession
     # Per-level lineage truncation via IterationBarrier, NOT bare
     # localCheckpoint chains: at taxonomy depth > ~13 a checkpoint-derived
@@ -125,23 +122,22 @@ def evolutionary_profiles(
         .agg(_set_col(F.collect_set("state")).alias("states")),
         "asserted",
     )
-    if strategy != "distributed":
-        stats = asserted.agg(
-            F.count("*").alias("n"),
-            F.coalesce(
-                F.sum(F.aggregate("states", F.lit(0), lambda a, x: a + F.length(x))),
-                F.lit(0),
-            ).alias("state_chars"),
-        ).collect()[0]
-        n_asserted, state_chars = stats["n"], stats["state_chars"]
-        # UTF-8 chars + per-row/driver-object overhead, conservative
-        est_bytes = state_chars * 4 + n_asserted * 120
-        n_edges = taxonomy_edges.count()
-        if strategy == "driver" or (
-            max(n_asserted, n_edges) <= DRIVER_FITCH_MAX_ROWS
-            and est_bytes <= DRIVER_FITCH_MAX_BYTES
-        ):
-            return _fitch_driver(spark, taxonomy_edges, asserted)
+    stats = asserted.agg(
+        F.count("*").alias("n"),
+        F.coalesce(
+            F.sum(F.aggregate("states", F.lit(0), lambda a, x: a + F.length(x))),
+            F.lit(0),
+        ).alias("state_chars"),
+    ).collect()[0]
+    n_asserted, state_chars = stats["n"], stats["state_chars"]
+    # UTF-8 chars + per-row/driver-object overhead, conservative
+    est_bytes = state_chars * 4 + n_asserted * 120
+    n_edges = taxonomy_edges.count()
+    if (
+        max(n_asserted, n_edges) <= DRIVER_FITCH_MAX_ROWS
+        and est_bytes <= DRIVER_FITCH_MAX_BYTES
+    ):
+        return _fitch_driver(spark, taxonomy_edges, asserted)
     depths = barrier(taxonomy_depths(taxonomy_edges), "depths")
     max_depth = depths.agg(F.max("depth")).collect()[0][0]
     edges = barrier(taxonomy_edges.select("child", "parent").dropDuplicates(), "edges")

@@ -30,12 +30,15 @@ Execution shape:
   shuffle, no per-row Python, ids passed through as Arrow values (see
   :func:`assign_clusters` for why the pure-column-expression alternative
   is the slow path, not the fast one);
-- within-cluster pairs reuse the exact tiled-GEMM shape of
-  ``dedup.embedding_near_dups_gemm`` with ``(cluster, block)`` as the
-  packing key: B(B+1)/2 tiles per cluster, each scored by one numpy GEMM
-  in ``mapInArrow``; no CartesianProduct in the plan, per-task memory =
-  2 blocks, tiles are independent tasks. Pick ``n_blocks`` so a cluster
-  block fits executor memory;
+- within-cluster pairs are exact tiles packed by ``(cluster, block)``:
+  B(B+1)/2 tiles per cluster, each scored by one numpy GEMM in
+  ``mapInArrow`` (:func:`_score_tile`); no CartesianProduct in the plan,
+  per-task memory = 2 blocks, tiles are independent tasks. Pick
+  ``n_blocks`` so a cluster block fits executor memory;
+- the two kernels are the package's only exact-cosine tiler and
+  nearest-centroid assigner: ``dedup.embedding_near_dups_gemm`` is the
+  tiler over one cluster, and ``annsearch.ivf_topk`` assigns its cells
+  with :func:`assign_clusters`;
 - route: a cascade :func:`semantic_dedup` whose vector set fits one
   barrier partition (``iterbarrier.fits_driver``, the closure's row cap)
   and holds at most ``DRIVER_MAX_DOUBLES`` unit-vector doubles needs no
@@ -188,10 +191,10 @@ def assign_clusters(
     greatest/when argmax — is NOT codegen; higher-order functions are
     interpreted per element, so k=64 centroids cost ~4096 interpreted
     lambda steps per row and assignment alone ran 9x slower than the
-    whole exact all-pairs GEMM at 100k rows. Same float contract as the
-    IVF assigner (`annsearch.py`): float64 GEMM, round-6, smallest-index
-    ties — driver-oracle-verified against the sequential-fold SQL at
-    both SFs.
+    whole exact all-pairs GEMM at 100k rows. Float contract: float64
+    GEMM, round-6, smallest-index ties — driver-oracle-verified against
+    the sequential-fold SQL at both SFs. ``annsearch.ivf_topk`` assigns
+    its cells here too, passing its trained centroids.
     """
     import numpy as np
     import pyarrow as pa
@@ -229,14 +232,10 @@ def semantic_near_dups(
     """(cluster, id_a, id_b, cos): within-cluster pairs with cosine >=
     threshold, id_a < id_b, cos in float64 rounded to 6.
 
-    Tiled exactly like ``dedup.embedding_near_dups_gemm`` (see there for
-    why exact tiles beat LSH at near-noise thresholds) but packed by
-    ``(cluster, block)`` so the quadratic work is per-cluster. The
-    machinery is deliberately NOT shared with the X5 implementation: X5
-    normalizes inside numpy from raw embeddings while this path consumes
-    the JVM-fold unit vectors the assignment already computed — merging
-    them would silently change X5's float contract under its oracle. The
-    k=1 degeneration test pins the two paths to identical pairs instead.
+    Exact tiles packed by ``(cluster, block)``, so the quadratic work is
+    per-cluster; ``dedup.embedding_near_dups_gemm`` runs the same tiler
+    over a single cluster (see there for why exact tiles beat LSH at
+    near-noise thresholds).
 
     Pass ``centroids=trained_centroids(...)`` to swap the fixed smallest-k
     seed for the k-means codebook when cluster balance matters (see
@@ -256,11 +255,13 @@ def _block_col(n_blocks: int) -> F.Column:
 def _within_cluster_pairs(
     assigned: DataFrame, threshold: float, n_blocks: int
 ) -> DataFrame:
+    """(cluster, id_a, id_b, cos) of a ``(vec_id, cluster, u)`` frame: the
+    pairs :func:`_score_tile` keeps in every ``(cluster, block)`` tile."""
     import numpy as np
     import pyarrow as pa
 
     spark = assigned.sparkSession
-    id_t = assigned.schema["vec_id"].dataType.simpleString()
+    id_t = _id_type(assigned)
     packed = (
         assigned.withColumn("blk", _block_col(n_blocks))
         .groupBy("cluster", "blk")

@@ -31,7 +31,8 @@ Scale notes: stages persist doc-id-level DECISION tables (stats, groups,
 pairs, clusters, kept ids), never a copy of the corpus text — the final
 corpus is one semi-join of ``documents`` against the kept-id table, so the
 100 TB text column is written zero times. The funnel metrics come from the
-stage manifests (row counts collected at write time), not extra actions.
+stage manifests (row counts collected at write time), not extra actions; a
+run without ``out_dir`` writes no manifests and reports an empty funnel.
 """
 
 from __future__ import annotations
@@ -75,7 +76,9 @@ class CorpusResult:
     manifests: dict[str, dict] = field(default_factory=dict)
 
     def funnel(self) -> dict[str, int | None]:
-        """Stage -> row count, from write-time manifests (no new actions)."""
+        """Stage -> row count, from write-time manifests (no new actions).
+        An in-memory run (no ``out_dir``) writes no manifests, so its
+        funnel is ``{}``."""
         return {k: m.get("row_count") for k, m in self.manifests.items()}
 
 

@@ -550,10 +550,26 @@ def test_choose_strategy_deep_structural_picks_scratch(spark):
     assert got["cone_fraction"] > closure.MAINTAIN_CONE_FRACTION_THRESHOLD
 
 
-def test_maintain_closure_auto_randomized_equals_scratch(spark):
+def test_maintain_closure_auto_randomized_equals_scratch(spark, monkeypatch):
     """The auto entry point == from-scratch closure of the mutated graph
     on seeded random DAGs, whatever strategy it picks — and both FORCED
-    strategies agree too (bit-identical maintenance guarantee)."""
+    strategies agree too (bit-identical maintenance guarantee). The
+    decision thresholds force a strategy."""
+    forced = {
+        None: {},
+        "incremental": {
+            "MAINTAIN_DEPTH_THRESHOLD": 0.0,
+            "MAINTAIN_CONE_FRACTION_THRESHOLD": float("inf"),
+        },
+        "scratch": {"MAINTAIN_DEPTH_THRESHOLD": float("inf")},
+    }
+    applied = []
+    apply = closure.incremental_closure_apply
+    monkeypatch.setattr(
+        closure,
+        "incremental_closure_apply",
+        lambda *a, **kw: applied.append(1) or apply(*a, **kw),
+    )
     for seed in (7, 31):
         rng = random.Random(seed)
         nodes = [f"a{i}" for i in range(40)]
@@ -572,18 +588,23 @@ def test_maintain_closure_auto_randomized_equals_scratch(spark):
         asserted = _edges_df(spark, edges)
         before = closure.transitive_closure(asserted)
         want = pyoracle.transitive_closure((set(edges) - deleted) | inserted)
-        for strategy in (None, "incremental", "scratch"):
-            got = closure.maintain_closure(
-                before,
-                asserted,
-                _edges_df(spark, deleted),
-                _edges_df(spark, inserted),
-                strategy=strategy,
-            )
-            assert {(r["sub"], r["sup"]) for r in got.collect()} == want, (
-                seed,
-                strategy,
-            )
+        for strategy, thresholds in forced.items():
+            applied.clear()
+            with monkeypatch.context() as m:
+                for name, value in thresholds.items():
+                    m.setattr(closure, name, value)
+                got = closure.maintain_closure(
+                    before,
+                    asserted,
+                    _edges_df(spark, deleted),
+                    _edges_df(spark, inserted),
+                )
+                assert {(r["sub"], r["sup"]) for r in got.collect()} == want, (
+                    seed,
+                    strategy,
+                )
+            if strategy is not None:
+                assert applied == ([1] if strategy == "incremental" else []), strategy
 
 
 def test_maintain_closure_empty_batch_is_identity(spark):

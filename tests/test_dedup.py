@@ -114,7 +114,9 @@ def test_embedding_near_dups(spark):
 def test_embedding_gemm_matches_brute(spark):
     """Tiled-GEMM exact path is bitwise-identical to the crossJoin baseline
     (same float64 math, same round-6), across a block count that forces
-    multi-tile coverage (n_blocks > 1 incl. diagonal + off-diagonal tiles)."""
+    multi-tile coverage (n_blocks > 1 incl. diagonal + off-diagonal tiles),
+    for long ids, string ids, a NULL id (it pairs with nothing) and ids
+    above 2^53 (they must stay exact)."""
     import random
 
     rng = random.Random(11)
@@ -124,18 +126,26 @@ def test_embedding_gemm_matches_brute(spark):
         rows.append((i, base))
         if i % 7 == 0:  # planted near-dup
             rows.append((1000 + i, [x + rng.uniform(-0.05, 0.05) for x in base]))
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    # multiset compare: an accidental double-emission (e.g. both triangle
-    # halves of a diagonal tile) must fail, not vanish into a set
-    brute = sorted(
-        (r.id_a, r.id_b, r.cos)
-        for r in dedup.embedding_near_dups(emb, threshold=0.4).collect()
-    )
-    gemm = sorted(
-        (r.id_a, r.id_b, r.cos)
-        for r in dedup.embedding_near_dups_gemm(emb, threshold=0.4, n_blocks=5).collect()
-    )
-    assert gemm == brute and len(brute) > 0
+    big = 2**53 + 1
+    cases = {
+        "long": ("long", rows),
+        "string": ("string", [(f"d{i:05d}", e) for i, e in rows]),
+        "null": ("long", [(None if i == 0 else i, e) for i, e in rows]),
+        "big": ("long", [(big + 2 * i, e) for i, e in rows]),
+    }
+    for name, (id_t, case_rows) in cases.items():
+        emb = spark.createDataFrame(case_rows, f"vec_id {id_t}, embedding array<float>")
+        # multiset compare: an accidental double-emission (e.g. both triangle
+        # halves of a diagonal tile) must fail, not vanish into a set
+        brute = sorted(
+            (r.id_a, r.id_b, r.cos)
+            for r in dedup.embedding_near_dups(emb, threshold=0.4).collect()
+        )
+        gemm = sorted(
+            (r.id_a, r.id_b, r.cos)
+            for r in dedup.embedding_near_dups_gemm(emb, threshold=0.4, n_blocks=5).collect()
+        )
+        assert gemm == brute and len(brute) > 0, name
 
 
 def test_dedup_clusters_collapses_transitive_chain(spark):

@@ -29,6 +29,8 @@ def test_no_operator_writes_shuffle_width(spark, monkeypatch):
     """Every fixpoint and level loop runs at the session's width: no
     ``RuntimeConfig.set`` of the shuffle width, on the Spark route."""
     monkeypatch.setattr(iterbarrier, "TARGET_ROWS_PER_PARTITION", 0)
+    # no Fitch table fits the driver fold: the level loop runs
+    monkeypatch.setattr(profiles, "DRIVER_FITCH_MAX_ROWS", 0)
 
     chain = {(f"c{i}", f"c{i + 1}") for i in range(6)}
     restr = spark.createDataFrame(
@@ -59,9 +61,7 @@ def test_no_operator_writes_shuffle_width(spark, monkeypatch):
             spark.createDataFrame(sorted(_random_graph(1)), ["a", "b"])
         ),
         "taxonomy_depths": lambda: profiles.taxonomy_depths(taxonomy),
-        "evolutionary_profiles": lambda: profiles.evolutionary_profiles(
-            taxonomy, states, strategy="distributed"
-        ),
+        "evolutionary_profiles": lambda: profiles.evolutionary_profiles(taxonomy, states),
     }
     writes: list[str] = []
     real_set = RuntimeConfig.set

@@ -72,52 +72,6 @@ def test_trie_ambiguous_tokenization_resolves_to_min_iri():
     assert t1.find(["big", "toe"])[0][3] == "iri:A"
 
 
-def test_regex_matcher_equivalent_to_trie():
-    """The compiled-regex fast path must reproduce _PhraseTrie.find exactly:
-    longest match, non-overlap, min(iri) ambiguity, multi-token phrases,
-    prefix-overlapping surfaces."""
-    import random
-
-    from phenoscape_owl_tools_spark.operators.mention import (
-        _PhraseTrie,
-        _RegexMatcher,
-        tokenize,
-    )
-
-    entries = [
-        ("big", "iri:big"),
-        ("big toe", "iri:bigtoe"),
-        ("big toe nail", "iri:bigtoenail"),
-        ("toe", "iri:toe"),
-        ("dorsal fin", "iri:dfin"),
-        ("fin", "iri:fin"),
-        ("big-toe", "iri:aaa"),  # tokenizes same as "big toe": min(iri) wins
-        ("x:y", "iri:colon"),
-        ("o'clock", "iri:apos"),
-    ]
-    trie, rx = _PhraseTrie(entries), _RegexMatcher(entries)
-    texts = [
-        "the big toe nail was bruised",
-        "big toe, and a dorsal fin; Big TOE again",
-        "bigger toes are not big toe s",
-        "x:y at o'clock",
-        "", "fin fin fin big",
-    ]
-    for text in texts:
-        assert rx.find(tokenize(text)) == trie.find(tokenize(text)), text
-
-    rng = random.Random(5)
-    vocab = ["alpha", "beta", "gamma", "delta", "tok", "fin", "toe"]
-    dict_entries = []
-    for i in range(40):
-        phrase = " ".join(rng.choices(vocab, k=rng.randrange(1, 4)))
-        dict_entries.append((phrase, f"iri:{i:03d}"))
-    trie, rx = _PhraseTrie(dict_entries), _RegexMatcher(dict_entries)
-    for _ in range(200):
-        toks = rng.choices(vocab + ["zzz", "qqq"], k=rng.randrange(0, 30))
-        assert rx.find(toks) == trie.find(toks)
-
-
 def test_word_matcher_equivalent_to_trie():
     from phenoscape_owl_tools_spark.operators.mention import (
         _PhraseTrie,

@@ -131,17 +131,26 @@ def test_evolutionary_profiles_deep_taxonomy(spark):
     assert got_prof == exp_prof_flat
 
 
-def test_fitch_strategies_agree(spark, corpus):
+def test_fitch_strategies_agree(spark, corpus, monkeypatch):
     """Driver fold and distributed level loop produce identical rows on the
     fixture taxonomy (and the bench tree shape: own-asserted internals,
-    multi-child intersections, union events)."""
+    multi-child intersections, union events). The row cap picks the route."""
     c, paths = corpus
     taxonomy = spark.read.parquet(paths["taxonomy_edges"])
     assoc = spark.read.parquet(paths["state_associations"])
-    a_assoc, a_prof = profiles.evolutionary_profiles(taxonomy, assoc, strategy="driver")
-    b_assoc, b_prof = profiles.evolutionary_profiles(
-        taxonomy, assoc, strategy="distributed"
+    folds = []
+    fitch_driver = profiles._fitch_driver
+    monkeypatch.setattr(
+        profiles, "_fitch_driver", lambda *a: folds.append(1) or fitch_driver(*a)
     )
+
+    def run(max_rows):
+        monkeypatch.setattr(profiles, "DRIVER_FITCH_MAX_ROWS", max_rows)
+        return profiles.evolutionary_profiles(taxonomy, assoc)
+
+    a_assoc, a_prof = run(10**12)  # driver fold
+    b_assoc, b_prof = run(0)  # level loop
+    assert folds == [1]
 
     def rows(df):
         return {(r["node"], r["character"], tuple(r["states"])) for r in df.collect()}
