@@ -554,16 +554,24 @@ def document_axiom_rows(doc: _Doc, src: str = "") -> list[tuple]:
             rows.append((src, "property_chain", chain, None, subj))
         elif not o_is_iri:
             rows.append((src, "annotation", subj, p, o))
-        elif decl_prop_kind.get(p) == "ObjectProperty":
-            rows.append((src, "object_property_assertion", subj, p, o))
-        elif decl_prop_kind.get(p) == "AnnotationProperty":
-            rows.append((src, "annotation", subj, p, o))
-        elif decl_prop_kind.get(subj) or decl_prop_kind.get(o):
-            # undeclared predicate between declared entities: annotation-ish
-            rows.append((src, "annotation", subj, p, o))
         else:
-            rows.append((src, "object_property_assertion", subj, p, o))
+            rows.append((src, _iri_object_kind(subj, p, o, decl_prop_kind), subj, p, o))
     return rows
+
+
+def _iri_object_kind(s: str, p: str, o: str, decl_kind: dict[str, str]) -> str:
+    """Axiom kind of a triple whose object is an IRI, given the document's
+    declarations (IRI -> declared kind). Turtle has no syntax that tells an
+    IRI-valued annotation from an object-property assertion, so the reader
+    decides by declarations and the writer asks the same question."""
+    if decl_kind.get(p) == "ObjectProperty":
+        return "object_property_assertion"
+    if decl_kind.get(p) == "AnnotationProperty":
+        return "annotation"
+    if decl_kind.get(s) or decl_kind.get(o):
+        # undeclared predicate between declared entities: annotation-ish
+        return "annotation"
+    return "object_property_assertion"
 
 
 def parse_document(text: str, src: str = "") -> list[tuple]:
@@ -653,13 +661,18 @@ def _term_ttl(expr: str) -> str:
     raise TtlParseError(f"cannot render expression constructor {ctor!r}")
 
 
-def _value_ttl(s: str) -> str:
-    """Annotation value: absolute IRI -> <iri>, else quoted literal (same
-    heuristic as ``ofn._render_value`` so both writers agree)."""
+def _value_ttl(s: str, as_iri: bool) -> str:
+    """Annotation value: absolute IRI -> <iri> (same heuristic as
+    ``ofn._render_value`` so both writers agree), else a quoted literal.
+    An IRI value the reader would take for an object-property assertion
+    (``as_iri`` False) is written as an ``xsd:anyURI`` literal, which keeps
+    the lexical form and reads back as an annotation."""
     from .ofn import _ABS_IRI_RE
 
     if _ABS_IRI_RE.match(s) and " " not in s and '"' not in s:
-        return f"<{s}>"
+        if as_iri:
+            return f"<{s}>"
+        return f"{_quote_ttl(s)}^^<http://www.w3.org/2001/XMLSchema#anyURI>"
     return _quote_ttl(s)
 
 
@@ -670,7 +683,9 @@ def render_turtle_document(rows) -> str:
     every kind the reader emits (the OFN parity test exercises this on the
     reference's own fixture)."""
     lines = [_TTL_HEADER]
-    for row in sorted(tuple(r[1:]) if len(r) == 5 else tuple(r) for r in rows):
+    rows = sorted(tuple(r[1:]) if len(r) == 5 else tuple(r) for r in rows)
+    decl_kind = {s: o for kind, s, _, o in rows if kind == "declaration"}
+    for row in rows:
         kind, s, p, o = row
         if kind == "declaration":
             lines.append(f"<{s}> a {_DECL_TYPE_TERM[o]} .")
@@ -686,7 +701,8 @@ def render_turtle_document(rows) -> str:
             chain = " ".join(f"<{x}>" for x in s.split(" "))
             lines.append(f"<{o}> owl:propertyChainAxiom ( {chain} ) .")
         elif kind == "annotation":
-            lines.append(f"<{s}> <{p}> {_value_ttl(o)} .")
+            as_iri = _iri_object_kind(s, p, o, decl_kind) == "annotation"
+            lines.append(f"<{s}> <{p}> {_value_ttl(o, as_iri)} .")
         elif kind == "class_assertion":
             lines.append(f"<{s}> a {_term_ttl(o)} .")
         elif kind == "object_property_assertion":

@@ -207,3 +207,22 @@ def test_axioms_from_triples_classification(spark):
     assert ("object_property_assertion", "http://e/i", "http://e/p", "http://e/j") in got
     # ontology-header and bnode rows are excluded
     assert not any(s == "_:b1" or o == ttl.OWL + "Ontology" for _, s, _, o in got)
+
+
+def test_iri_valued_annotation_reads_back_as_annotation():
+    """An IRI-valued annotation whose predicate the reader cannot tell from
+    an object property is written so it still reads back as an annotation;
+    a declared annotation property keeps the plain <iri> object."""
+    undeclared = [("annotation", "http://ex.org/0", "http://ex.org/0", "A:")]
+    text = ttl.render_turtle_document(undeclared)
+    assert "<A:>" not in text
+    assert [r[1:] for r in ttl.parse_document(text, src="x")] == undeclared
+
+    declared = [
+        ("declaration", "http://ex.org/p", None, "AnnotationProperty"),
+        ("annotation", "http://ex.org/s", "http://ex.org/p", "http://ex.org/o"),
+    ]
+    text = ttl.render_turtle_document(declared)
+    assert "<http://ex.org/o>" in text
+    again = [r[1:] for r in ttl.parse_document(text, src="x")]
+    assert sorted(again, key=repr) == sorted(declared, key=repr)
