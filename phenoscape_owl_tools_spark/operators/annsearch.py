@@ -117,7 +117,12 @@ def bucket_lsh_topk(
     )
 
 
-MATMUL_SCHEMA = "query_id long, neighbor_id long, cos double, rank int"
+def _topk_schema(embeddings: DataFrame, queries: DataFrame) -> str:
+    """(query_id, neighbor_id, cos, rank), each id keeping its input type."""
+    from .semdedup import _id_type
+
+    q_t = queries.schema["query_id"].dataType.simpleString()
+    return f"query_id {q_t}, neighbor_id {_id_type(embeddings)}, cos double, rank int"
 
 
 def matmul_topk(
@@ -130,51 +135,66 @@ def matmul_topk(
     folds; ~10-100x the interpreted higher-order-function route).
 
     The (small) query matrix broadcasts to every executor; the corpus
-    streams through ``mapInPandas`` partition-by-partition, each batch
+    streams through ``mapInArrow`` partition-by-partition, each batch
     scoring against all queries at once and emitting only its local top-k
     candidates. A final window over (queries x per-partition candidates)
-    yields the global top-k — identical results to :func:`brute_force_topk`
-    (same double math, same (cos desc, neighbor_id) tie-break).
+    yields the global top-k — the answer of :func:`brute_force_topk`
+    (JVM-fold unit vectors, round(cos, 6), (cos desc, neighbor_id)
+    tie-break). Ids stay Arrow, so string ids and ids past 2^53 keep
+    their values and types; a NULL ``vec_id`` is never a neighbor and a
+    NULL ``query_id`` has none, as ``query_id != neighbor_id`` decides in
+    :func:`brute_force_topk`.
     """
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
     from typing import Iterator
 
+    from .semdedup import _id_array, _unit_matrix
+
     spark = embeddings.sparkSession
-    q_rows = queries.select("query_id", "embedding").collect()
-    if not q_rows:
-        return spark.createDataFrame([], MATMUL_SCHEMA)
-    qids = np.array([r["query_id"] for r in q_rows], dtype=np.int64)
-    qm = np.array([r["embedding"] for r in q_rows], dtype=np.float64)
-    qn = np.linalg.norm(qm, axis=1, keepdims=True)
-    qm /= np.where(qn == 0, 1.0, qn)  # zero vectors stay zero, not NaN
-    bc = spark.sparkContext.broadcast((qids, qm))
+    schema = _topk_schema(embeddings, queries)
+    q_tbl = queries.where(F.col("query_id").isNotNull()).select(
+        "query_id", unit_vector_col(F.col("embedding")).alias("u")
+    ).toArrow()
+    if not q_tbl.num_rows:
+        return spark.createDataFrame([], schema)
+    bc = spark.sparkContext.broadcast(
+        (q_tbl.column("query_id").combine_chunks(), _unit_matrix(q_tbl.column("u")))
+    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qids_, qm_ = bc.value
-        for pdf in batches:
-            if not len(pdf):
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        q_ids, q_units = bc.value
+        qids = _id_array(q_ids.to_pylist())
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            nids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            cm = np.array(list(pdf["embedding"]), dtype=np.float64)
-            cn = np.linalg.norm(cm, axis=1, keepdims=True)
-            cm /= np.where(cn == 0, 1.0, cn)
-            sims = qm_ @ cm.T  # (n_queries, batch)
-            out = {"query_id": [], "neighbor_id": [], "cos": [], "rank": []}
-            top = min(k, sims.shape[1])
-            for qi in range(len(qids_)):
-                row = np.round(sims[qi], 6)
-                mask = nids != qids_[qi]
-                cand_ids, cand_cos = nids[mask], row[mask]
-                # local top-k: sort by (-cos, neighbor_id) for determinism
-                order = np.lexsort((cand_ids, -cand_cos))[:top]
-                out["query_id"].extend([qids_[qi]] * len(order))
-                out["neighbor_id"].extend(cand_ids[order])
-                out["cos"].extend(cand_cos[order])
-                out["rank"].extend([0] * len(order))
-            yield pd.DataFrame(out)
+            vec_ids = batch.column("vec_id")
+            nids = _id_array(vec_ids.to_pylist())
+            sims = np.round(q_units @ _unit_matrix(batch.column("u")).T, 6)
+            known = np.flatnonzero(vec_ids.is_valid().to_numpy(zero_copy_only=False))
+            by_id = known[np.argsort(nids[known], kind="stable")]
+            q_idx, n_idx = [], []
+            for qi, qid in enumerate(qids):
+                cand = by_id[nids[by_id] != qid]
+                # local top-k by (cos desc, neighbor_id): stable on by_id
+                top = cand[np.argsort(-sims[qi, cand], kind="stable")[:k]]
+                q_idx.extend([qi] * len(top))
+                n_idx.extend(top)
+            q_idx = np.asarray(q_idx, dtype=np.int64)
+            n_idx = np.asarray(n_idx, dtype=np.int64)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    q_ids.take(pa.array(q_idx)),
+                    vec_ids.take(pa.array(n_idx)),
+                    pa.array(sims[q_idx, n_idx], pa.float64()),
+                    pa.array(np.zeros(len(q_idx), np.int32)),
+                ],
+                names=["query_id", "neighbor_id", "cos", "rank"],
+            )
 
-    local = embeddings.select("vec_id", "embedding").mapInPandas(run, MATMUL_SCHEMA)
+    local = embeddings.select(
+        "vec_id", unit_vector_col(F.col("embedding")).alias("u")
+    ).mapInArrow(run, schema)
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
     return (
         local.withColumn("rank", F.row_number().over(w))
@@ -292,7 +312,7 @@ def ivf_topk(
     # collect queries FIRST: an empty query set must not pay the k-means fit
     q_rows = queries.select("query_id", "embedding").collect()
     if not q_rows:
-        return spark.createDataFrame([], MATMUL_SCHEMA)
+        return spark.createDataFrame([], _topk_schema(embeddings, queries))
     if centroids is None:
         centroids = ivf_fit(embeddings, n_cells=n_cells, n_iters=n_iters)
     c = np.asarray(centroids, dtype=np.float64)

@@ -332,13 +332,6 @@ def dot_col(a, b) -> F.Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
 
 
-def cosine_col(a, b) -> F.Column:
-    """Cosine similarity between two array<float> columns, in double math:
-    zip_with product + aggregate fold — JVM-side, no UDF. Prefer
-    ``unit_vector_col`` + ``dot_col`` when one side is reused across pairs."""
-    return dot_col(unit_vector_col(a), unit_vector_col(b))
-
-
 def embedding_near_dups(embeddings: DataFrame, threshold: float = 0.4) -> DataFrame:
     """(id_a, id_b, cos) for pairs with cosine >= threshold; id_a < id_b.
 

@@ -608,44 +608,3 @@ def score_triples(medians: DataFrame) -> DataFrame:
             )
         )
     )
-
-
-def shard_queries(
-    query_profiles: DataFrame, shard: int, n_shards: int = 100
-) -> DataFrame:
-    """Deterministic query-profile sharding (RunPairwiseOWLSim.scala:40-46):
-    profiles sorted by IRI and split into ``n_shards`` near-equal groups;
-    shard k processes group k. The reference runs this as a 100-task SLURM
-    array (pipeline/kb-owlsim-taxa.sh:7-17); here each shard is an
-    independent job over the same broadcast closure/IC, so the union of all
-    shards' outputs equals the unsharded result exactly.
-
-    Shard assignment needs the exact global sorted rank of each profile
-    owner. A bare ``Window.orderBy`` computes that in ONE task (a global
-    sort bottleneck); instead the owners are range-partitioned, ranked
-    locally per sorted range, and offset by the per-range counts (a
-    dimension-scale collect) — the distributed textbook global rank.
-    ``global_rank`` materializes the ranged frame before counting, so one
-    frozen placement defines both counts and local ranks and re-executions
-    of the returned frame cannot reshuffle assignments.
-    """
-    if not (0 <= shard < n_shards):
-        raise ValueError(f"shard {shard} out of range [0, {n_shards})")
-    owners = query_profiles.select("individual").dropDuplicates()
-    ranked = global_rank(owners, ["individual"], "rank")
-    total = ranked.count()
-    # ntile bucket math: N rows, n buckets -> first N%n buckets get one extra
-    q, m = divmod(total, n_shards)
-    threshold = m * (q + 1)
-    rank = F.col("rank")  # 1-based
-    shard_col = F.when(
-        rank <= threshold, ((rank - 1) / (q + 1)).cast("int")
-    ).otherwise(
-        (F.lit(m) + ((rank - 1 - threshold) / F.greatest(F.lit(q), F.lit(1)))).cast("int")
-    )
-    assigned = (
-        ranked.withColumn("shard", shard_col)
-        .where(F.col("shard") == shard)
-        .select("individual")
-    )
-    return query_profiles.join(F.broadcast(assigned), on="individual", how="leftsemi")

@@ -45,7 +45,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from .ofn import AXIOM_SCHEMA
-from .ttl import OWL, RDF, RDFS, _Doc, document_axiom_rows
+from .ttl import OWL, RDF, RDFS, _Doc, _iri_object_kind, document_axiom_rows
 
 XML_NS = "http://www.w3.org/XML/1998/namespace"
 
@@ -325,8 +325,9 @@ def render_rdfxml_document(rows) -> str:
     from .ofn import _ABS_IRI_RE
 
     root = ET.Element(f"{{{RDF}}}RDF")
-    for row in sorted(tuple(r[1:]) if len(r) == 5 else tuple(r) for r in rows):
-        kind, s, p, o = row
+    rows = sorted(tuple(r[1:]) if len(r) == 5 else tuple(r) for r in rows)
+    decl_kind = {s: o for kind, s, _, o in rows if kind == "declaration"}
+    for kind, s, p, o in rows:
         if kind == "declaration":
             el = ET.SubElement(root, _DECL_TYPE_ELEM[o])
             el.set(f"{{{RDF}}}about", s)
@@ -344,7 +345,8 @@ def render_rdfxml_document(rows) -> str:
             )
         elif kind == "annotation":
             node = _rx_subject(root, s)
-            if _ABS_IRI_RE.match(o) and " " not in o and '"' not in o:
+            if (_ABS_IRI_RE.match(o) and " " not in o and '"' not in o
+                    and _iri_object_kind(s, p, o, decl_kind) == "annotation"):
                 _rx_prop(node, p, o)
             else:
                 ET.SubElement(node, _pred_tag(p)).text = o

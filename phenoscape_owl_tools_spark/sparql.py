@@ -114,7 +114,9 @@ this module covers the language subset its shipped queries actually use
 - SPARQL 1.1 Update statements (:func:`update`): ``INSERT DATA``,
   ``DELETE DATA``, ``DELETE WHERE``, ``DELETE {..} INSERT {..} WHERE {..}``
   — functional (the updated graph is returned), covering the reference's
-  ``RunSPARQLUpdate`` tool.
+  ``RunSPARQLUpdate`` tool; a property path in a ``DELETE WHERE`` pattern
+  is rejected, as SPARQL 1.1 forbids it (paths stay legal in the
+  ``WHERE`` block of ``DELETE {..} WHERE {..}``).
 
 Path semantics follow the engine's KB-build convention rather than strict
 SPARQL 1.1 zero-length-path semantics: a *bare* starred pattern
@@ -1594,11 +1596,11 @@ class _Parser:
                 elif pat.path.op == "iri":
                     pred = Term("iri", pat.path.iri)
                 else:
-                    # engine extension (SPARQL 1.1 forbids paths in quad
-                    # patterns): keep the PathNode — update() deletes the
-                    # base triples the path traverses between matched
-                    # endpoints (see _path_traversed_edges)
-                    pred = pat.path
+                    # SPARQL 1.1 quad patterns forbid property paths
+                    raise ValueError(
+                        "SPARQL parse: DELETE WHERE takes no property path "
+                        "(use DELETE { template } WHERE { path pattern })"
+                    )
                 delete_template.append((pat.subj, pred, pat.obj))
             return Query("update", [], [], patterns, filters, delete_template, None)
         if form == "delete":
@@ -1737,184 +1739,6 @@ def _path_relation(triples: DataFrame, node: PathNode) -> DataFrame:
                 rel = composed
     assert rel is not None
     return rel
-
-
-def _path_traversed_edges(
-    triples: DataFrame, node: PathNode, pairs: DataFrame
-) -> DataFrame:
-    """Base triples traversed by some match of ``node`` between an
-    endpoint pair in ``pairs`` (columns ``s``, ``o``).
-
-    This is the CONSTRUCT-then-diff support for DELETE WHERE with
-    property paths (an engine EXTENSION — SPARQL 1.1 quad patterns
-    forbid paths, so there is no standard semantics to follow): a
-    deleted "path triple" means every base triple lying on at least one
-    successful derivation of the path between matched endpoints.
-    Zero-length arms (mid-sequence ``p*``/``p?`` skips) traverse
-    nothing; alternation deletes every branch that matches, not just
-    one; ``^p`` traverses the underlying forward triple.
-
-    All work is joins + the closure operator already used by
-    ``_path_relation`` — no driver iteration; updates are not a hot
-    path, and every recursion narrows by a semi-join on the demanded
-    endpoint pairs.
-    """
-    from phenoscape_owl_tools_spark.operators.closure import transitive_closure
-
-    pairs = pairs.select("s", "o").dropDuplicates()
-    leaves = _alt_leaf_iris(node)
-    if leaves is not None:
-        t = triples.where(F.col("pred").isin(*leaves)).alias("t")
-        pr = pairs.alias("pr")
-        return t.join(
-            pr,
-            (F.col("t.subj") == F.col("pr.s")) & (F.col("t.obj") == F.col("pr.o")),
-            "left_semi",
-        ).select("subj", "pred", "obj")
-    if node.op == "nps":
-        fwd = [k.iri for k in node.kids if k.op == "iri"]
-        inv = [k.kids[0].iri for k in node.kids if k.op == "inv"]
-        arms: list[DataFrame] = []
-        pr = pairs.alias("pr")
-        if fwd or not node.kids:
-            t = (triples if not fwd else triples.where(~F.col("pred").isin(*fwd))).alias("t")
-            arms.append(
-                t.join(
-                    pr,
-                    (F.col("t.subj") == F.col("pr.s"))
-                    & (F.col("t.obj") == F.col("pr.o")),
-                    "left_semi",
-                ).select("subj", "pred", "obj")
-            )
-        if inv:
-            t = triples.where(~F.col("pred").isin(*inv)).alias("t")
-            arms.append(
-                t.join(
-                    pr,
-                    (F.col("t.subj") == F.col("pr.o"))
-                    & (F.col("t.obj") == F.col("pr.s")),
-                    "left_semi",
-                ).select("subj", "pred", "obj")
-            )
-        out = arms[0]
-        for a in arms[1:]:
-            out = out.unionByName(a)
-        return out.dropDuplicates() if len(arms) > 1 else out
-    if node.op == "alt":
-        out = _path_traversed_edges(triples, node.kids[0], pairs)
-        for k in node.kids[1:]:
-            out = out.unionByName(_path_traversed_edges(triples, k, pairs))
-        return out.dropDuplicates()
-    if node.op == "inv":
-        swapped = pairs.select(F.col("o").alias("s"), F.col("s").alias("o"))
-        return _path_traversed_edges(triples, node.kids[0], swapped)
-    if node.op == "opt":
-        # bare p? = R_p (zero arm dropped, KB-build convention)
-        return _path_traversed_edges(triples, node.kids[0], pairs)
-    if node.op in ("star", "plus"):
-        kid = node.kids[0]
-        sub = _path_relation(triples, kid)  # (s, o), one hop of the closure
-        tc = transitive_closure(
-            sub.withColumnRenamed("s", "sub").withColumnRenamed("o", "sup")
-        ).select(F.col("sub").alias("s"), F.col("sup").alias("o"))
-        # sub-edge (u, v) is used iff some (s, o) in pairs has s ->* u
-        # and v ->* o (lengths >= 0, via tc or equality), with s and o
-        # coupled through the SAME pair row.
-        ss = pairs.select("s").dropDuplicates()
-        fwd = (  # (a = demanded source, u = node it reaches, incl. itself)
-            ss.select(F.col("s").alias("a"), F.col("s").alias("u"))
-            .unionByName(
-                ss.join(tc, ss["s"] == tc["s"]).select(
-                    ss["s"].alias("a"), tc["o"].alias("u")
-                )
-            )
-            .dropDuplicates()
-            .alias("fw")
-        )
-        oo = pairs.select("o").dropDuplicates()
-        bwd = (  # (v = node reaching b, b = demanded sink, incl. itself)
-            oo.select(F.col("o").alias("v"), F.col("o").alias("b"))
-            .unionByName(
-                oo.join(tc, oo["o"] == tc["o"]).select(
-                    tc["s"].alias("v"), oo["o"].alias("b")
-                )
-            )
-            .dropDuplicates()
-            .alias("bw")
-        )
-        pr = pairs.alias("pp")
-        cand = (
-            pr.join(fwd, F.col("pp.s") == F.col("fw.a"))
-            .join(bwd, F.col("pp.o") == F.col("bw.b"))
-            .select(F.col("fw.u").alias("u"), F.col("bw.v").alias("v"))
-            .dropDuplicates()
-        )
-        used = (
-            sub.alias("sb")
-            .join(
-                cand.alias("cd"),
-                (F.col("sb.s") == F.col("cd.u")) & (F.col("sb.o") == F.col("cd.v")),
-                "left_semi",
-            )
-            .select("s", "o")
-            .dropDuplicates()
-        )
-        return _path_traversed_edges(triples, kid, used)
-    assert node.op == "seq", node.op
-    kids = node.kids
-
-    def steprel(kid: PathNode) -> DataFrame:
-        return _path_relation(triples, kid.kids[0] if kid.op == "opt" else kid)
-
-    steps = [steprel(k) for k in kids]
-    n = len(kids)
-    # prefix[i] = (s, m): s reaches m via kids[0..i-1]; prefix[0] = identity
-    ident_s = pairs.select("s").dropDuplicates().select(
-        F.col("s"), F.col("s").alias("m")
-    )
-    prefixes = [ident_s]
-    cur = ident_s
-    for i, kid in enumerate(kids):
-        nxt = steps[i].select(F.col("s").alias("m"), F.col("o").alias("m2"))
-        comp = cur.join(nxt, "m").select("s", F.col("m2").alias("m"))
-        zero_ok = i > 0 and kid.op in ("star", "opt")
-        cur = comp.unionByName(cur).dropDuplicates() if zero_ok else comp
-        prefixes.append(cur)
-    # suffix[i] = (m, o): m reaches o via kids[i..n-1]; suffix[n] = identity
-    ident_o = pairs.select("o").dropDuplicates().select(
-        F.col("o").alias("m"), F.col("o")
-    )
-    suffixes = [None] * (n + 1)
-    suffixes[n] = ident_o
-    cur = ident_o
-    for i in range(n - 1, -1, -1):
-        stp = steps[i].select(F.col("s").alias("m2"), F.col("o").alias("m"))
-        comp = stp.join(cur, "m").select(F.col("m2").alias("m"), "o")
-        zero_ok = i > 0 and kids[i].op in ("star", "opt")
-        cur = comp.unionByName(cur).dropDuplicates() if zero_ok else comp
-        suffixes[i] = cur
-    out: DataFrame | None = None
-    for i, kid in enumerate(kids):
-        pre = prefixes[i].select(F.col("s"), F.col("m").alias("m1"))
-        suf = suffixes[i + 1].select(F.col("m").alias("m2"), F.col("o"))
-        cand = (
-            pairs.join(pre, "s").join(suf, "o").select("m1", "m2").dropDuplicates()
-        )
-        demanded = (
-            steps[i]
-            .alias("sp")
-            .join(
-                cand.alias("cd"),
-                (F.col("sp.s") == F.col("cd.m1")) & (F.col("sp.o") == F.col("cd.m2")),
-                "left_semi",
-            )
-            .select("s", "o")
-        )
-        sub_kid = kid  # opt handled inside the recursion
-        part = _path_traversed_edges(triples, sub_kid, demanded)
-        out = part if out is None else out.unionByName(part)
-    assert out is not None
-    return out.dropDuplicates()
 
 
 def _bindings(triples: DataFrame, pat: Pattern) -> DataFrame:
@@ -2600,12 +2424,10 @@ def update(triples: DataFrame, statement: Query | str) -> DataFrame:
     Blazegraph store in place; DataFrames are immutable, so the updated
     graph is returned (set semantics — the result is distinct, as an RDF
     graph is a set of triples). Supported: INSERT DATA, DELETE DATA,
-    DELETE WHERE, and DELETE/INSERT(/WHERE) with templates. Engine
-    extension: a property path in a DELETE WHERE pattern deletes every
-    base triple the path traverses between matched endpoint bindings
-    (CONSTRUCT-then-diff over the SELECT path engine,
-    :func:`_path_traversed_edges`); standard SPARQL 1.1 forbids this
-    form outright.
+    DELETE WHERE, and DELETE/INSERT(/WHERE) with templates. A property
+    path in a DELETE WHERE pattern is rejected at :func:`parse`, as
+    SPARQL 1.1 forbids it; paths stay legal in the WHERE block of
+    DELETE/INSERT … WHERE.
     """
     if isinstance(statement, str):
         statement = parse(statement)
@@ -2618,32 +2440,12 @@ def update(triples: DataFrame, statement: Query | str) -> DataFrame:
         rows = [(s.value, p.value, o.value) for s, p, o in template]
         return spark.createDataFrame(rows, schema="subj string, pred string, obj string")
 
-    def _endpoint_pairs(bound: DataFrame, s: Term, o: Term) -> DataFrame:
-        out = bound
-        for term in (s, o):
-            if term.kind == "var":
-                out = out.where(F.col(term.value).isNotNull())
-        sc = F.col(s.value) if s.kind == "var" else F.lit(s.value)
-        oc = F.col(o.value) if o.kind == "var" else F.lit(o.value)
-        return out.select(sc.alias("s"), oc.alias("o")).dropDuplicates()
-
     if statement.patterns or statement.unions or statement.optionals:
         bound = _solve(triples, statement)
-        plain_tmpl = [
-            e for e in (statement.delete_template or [])
-            if not isinstance(e[1], PathNode)
-        ]
-        path_tmpl = [
-            e for e in (statement.delete_template or [])
-            if isinstance(e[1], PathNode)
-        ]
-        delete_df = _instantiate(bound, plain_tmpl) if plain_tmpl else None
-        base = triples.select(*cols).dropDuplicates()
-        for s, pnode, o in path_tmpl:
-            trav = _path_traversed_edges(base, pnode, _endpoint_pairs(bound, s, o))
-            delete_df = trav if delete_df is None else (
-                delete_df.unionByName(trav).dropDuplicates()
-            )
+        delete_df = (
+            _instantiate(bound, statement.delete_template)
+            if statement.delete_template else None
+        )
         insert_df = (
             _instantiate(bound, statement.insert_template)
             if statement.insert_template else None
@@ -2659,11 +2461,6 @@ def update(triples: DataFrame, statement: Query | str) -> DataFrame:
     if insert_df is not None:
         out = out.unionByName(insert_df.select(*cols)).dropDuplicates()
     return out
-
-
-def run_update_file(triples: DataFrame, path: str) -> DataFrame:
-    with open(path, "r", encoding="utf-8") as fh:
-        return update(triples, fh.read())
 
 
 def run_file(triples: DataFrame, path: str) -> DataFrame:

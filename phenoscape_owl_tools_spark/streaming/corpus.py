@@ -50,7 +50,7 @@ from pyspark.sql import functions as F
 from phenoscape_owl_tools_spark import catalog
 from phenoscape_owl_tools_spark.operators import dedup
 from phenoscape_owl_tools_spark.plans.corpus_build import CorpusConfig, doc_stats
-from phenoscape_owl_tools_spark.streaming.ingest import read_document_stream
+from phenoscape_owl_tools_spark.streaming.ingest import drain, read_document_stream
 
 DECISIONS = "decisions"
 # Read with this schema, never inferred: partition type inference turns an
@@ -205,13 +205,7 @@ def run_streaming_corpus(
             fingerprint=key,
         )
 
-    (
-        docs.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(docs, sink, checkpoint_path)
 
 
 def read_corpus_decisions(spark: SparkSession, out_path: str) -> DataFrame:

@@ -46,24 +46,15 @@ def read_document_stream(
     return reader.parquet(path)
 
 
-def streaming_mention_triples(
-    spark: SparkSession,
-    documents_stream: DataFrame,
-    dictionary: DataFrame,
-    predicate: str,
-) -> DataFrame:
-    """The batch extraction stage, unchanged, on a streaming DataFrame.
-
-    No per-stream dedup state: each micro-batch deduplicates internally in
-    the sink (idempotent batch partition); global dedup belongs to the
-    downstream batch materialize, as unbounded dropDuplicates state would
-    grow with the corpus.
-    """
-    mentions = mention_op.detect_mentions(spark, documents_stream, dictionary)
-    return mentions.select(
-        F.col("doc_id").alias("subj"),
-        F.lit(predicate).alias("pred"),
-        F.col("term").alias("obj"),
+def drain(stream: DataFrame, sink, checkpoint_path: str) -> None:
+    """Run ``sink`` over every micro-batch ``stream`` has now, then return
+    (``Trigger.AvailableNow``; the checkpoint records what was drained)."""
+    (
+        stream.writeStream.foreachBatch(sink)
+        .option("checkpointLocation", checkpoint_path)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
     )
 
 
@@ -125,13 +116,7 @@ def _drive_extraction_stream(
         triples = mention_op.mention_triples(mentions, predicate)
         triples.write.mode("overwrite").parquet(f"{out_path}/batch={key}")
 
-    (
-        docs.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(docs, sink, checkpoint_path)
 
 
 def run_incremental_ingest(
@@ -526,13 +511,7 @@ def _drive_closure_stream(
         updated.write.mode("overwrite").parquet(version_path)
         commit(version_path)
 
-    (
-        edges.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(edges, sink, checkpoint_path)
     if not os.path.exists(latest_file):
         # legitimate 'nothing ingested yet': commit an empty snapshot so
         # callers always get a readable closure path

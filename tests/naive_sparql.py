@@ -103,81 +103,6 @@ def n_path(triples: list[Triple], node: PathNode) -> set[tuple[str, str]]:
     return rel
 
 
-def n_path_edges(
-    triples: list[Triple], node: PathNode, pairs: set[tuple[str, str]]
-) -> set[Triple]:
-    """Naive twin of sparql._path_traversed_edges: the base triples lying
-    on some match of ``node`` between an endpoint pair in ``pairs`` (the
-    engine-extension DELETE WHERE path semantics — zero-length arms
-    traverse nothing, every matching alternation branch is traversed,
-    ^p traverses the forward triple)."""
-    pairs = set(pairs)
-    if node.op == "iri":
-        return {(s, p, o) for s, p, o in triples
-                if p == node.iri and (s, o) in pairs}
-    if node.op == "nps":
-        fwd = [k.iri for k in node.kids if k.op == "iri"]
-        inv = [k.kids[0].iri for k in node.kids if k.op == "inv"]
-        out: set[Triple] = set()
-        if fwd or not node.kids:
-            out |= {(s, p, o) for s, p, o in triples
-                    if p not in fwd and (s, o) in pairs}
-        if inv:
-            out |= {(s, p, o) for s, p, o in triples
-                    if p not in inv and (o, s) in pairs}
-        return out
-    if node.op == "alt":
-        out = set()
-        for k in node.kids:
-            out |= n_path_edges(triples, k, pairs)
-        return out
-    if node.op == "inv":
-        return n_path_edges(triples, node.kids[0], {(o, s) for s, o in pairs})
-    if node.op == "opt":
-        return n_path_edges(triples, node.kids[0], pairs)
-    if node.op in ("star", "plus"):
-        sub = n_path(triples, node.kids[0])
-        tc = _tc(sub)
-        used = {
-            (u, v) for (u, v) in sub
-            if any((s == u or (s, u) in tc) and (v == o or (v, o) in tc)
-                   for (s, o) in pairs)
-        }
-        return n_path_edges(triples, node.kids[0], used)
-    assert node.op == "seq", node.op
-    kids = node.kids
-    steps = [n_path(triples, k.kids[0] if k.op == "opt" else k) for k in kids]
-    n = len(kids)
-    prefixes = [{(s, s) for s, _ in pairs}]
-    cur = prefixes[0]
-    for i, k in enumerate(kids):
-        comp = {(s, m2) for (s, m) in cur for (m1, m2) in steps[i] if m == m1}
-        if i > 0 and k.op in ("star", "opt"):
-            comp |= cur
-        cur = comp
-        prefixes.append(cur)
-    suffixes: list = [None] * (n + 1)
-    cur = {(o, o) for _, o in pairs}
-    suffixes[n] = cur
-    for i in range(n - 1, -1, -1):
-        comp = {(m1, o) for (m1, m2) in steps[i] for (m, o) in cur if m2 == m}
-        if i > 0 and kids[i].op in ("star", "opt"):
-            comp |= cur
-        cur = comp
-        suffixes[i] = cur
-    out: set[Triple] = set()
-    for i, k in enumerate(kids):
-        cand = {
-            (m1, m2)
-            for (s, o) in pairs
-            for (s2, m1) in prefixes[i] if s2 == s
-            for (m2, o2) in suffixes[i + 1] if o2 == o
-        }
-        demanded = {(a, b) for (a, b) in steps[i] if (a, b) in cand}
-        out |= n_path_edges(triples, k, demanded)
-    return out
-
-
 def n_bindings(triples: list[Triple], pat: Pattern) -> NFrame:
     if isinstance(pat.path, Term):  # variable predicate
         rel3 = [(s, p, o) for s, p, o in triples]

@@ -74,20 +74,38 @@ def test_bucket_lsh_is_bucket_restricted_brute_force(spark, emb):
 
 
 def test_matmul_topk_matches_brute_force(spark, emb):
+    """matmul_topk returns brute_force_topk's rows for long ids, string
+    ids, a NULL vec_id (never a neighbor; here it holds a query's own
+    vector, so it would rank first) and ids past 2^53 next to a NULL."""
     from pyspark.sql import functions as FF
 
-    queries = emb.where(FF.col("vec_id") < 8).select(
-        FF.col("vec_id").alias("query_id"), "embedding"
+    def check(vecs):
+        queries = vecs.where(FF.col("vec_id").isin(*qids)).select(
+            FF.col("vec_id").alias("query_id"), "embedding"
+        )
+        bf = annsearch.brute_force_topk(vecs, queries, k=5).collect()
+        mm = annsearch.matmul_topk(vecs, queries, k=5).collect()
+        key = lambda r: (r["query_id"], r["rank"])
+        bf_s, mm_s = sorted(bf, key=key), sorted(mm, key=key)
+        assert len(bf_s) == 5 * len(qids)
+        assert [(r["query_id"], r["neighbor_id"], r["rank"]) for r in bf_s] == [
+            (r["query_id"], r["neighbor_id"], r["rank"]) for r in mm_s
+        ]
+        for a, b in zip(bf_s, mm_s):
+            assert a["cos"] == pytest.approx(b["cos"], abs=2e-6)
+
+    qids = list(range(8))
+    check(emb)
+    null_row = emb.where(FF.col("vec_id") == 0).select(
+        FF.lit(None).cast("long").alias("vec_id"), "embedding"
     )
-    bf = annsearch.brute_force_topk(emb, queries, k=5).collect()
-    mm = annsearch.matmul_topk(emb, queries, k=5).collect()
-    key = lambda r: (r["query_id"], r["rank"])
-    bf_s, mm_s = sorted(bf, key=key), sorted(mm, key=key)
-    assert [(r["query_id"], r["neighbor_id"], r["rank"]) for r in bf_s] == [
-        (r["query_id"], r["neighbor_id"], r["rank"]) for r in mm_s
-    ]
-    for a, b in zip(bf_s, mm_s):
-        assert a["cos"] == pytest.approx(b["cos"], abs=2e-6)
+    with_null = emb.select("vec_id", "embedding").unionByName(null_row)
+    check(with_null)
+    big = 2**53 + 1
+    qids = [big + i for i in range(8)]
+    check(with_null.select((FF.col("vec_id") + big).alias("vec_id"), "embedding"))
+    qids = [f"d{i}" for i in range(8)]
+    check(emb.select(FF.concat(FF.lit("d"), "vec_id").alias("vec_id"), "embedding"))
 
 
 def test_matmul_topk_empty_queries(spark, emb):

@@ -14,7 +14,7 @@ import os
 
 import pytest
 
-from phenoscape_owl_tools_spark.sources import ofn, ttl
+from phenoscape_owl_tools_spark.sources import ofn, rdfxml, ttl
 
 REF_OFN = "/root/reference/src/test/resources/NegationHierarchyAsserterTest.ofn"
 
@@ -226,3 +226,13 @@ def test_iri_valued_annotation_reads_back_as_annotation():
     assert "<http://ex.org/o>" in text
     again = [r[1:] for r in ttl.parse_document(text, src="x")]
     assert sorted(again, key=repr) == sorted(declared, key=repr)
+
+    # the RDF/XML writer asks the same rule before writing rdf:resource
+    iri_valued = [
+        ("annotation", "http://ex.org/a", "http://ex.org/p", "http://ex.org/b")
+    ]
+    for rows in (iri_valued, declared):
+        text = rdfxml.render_rdfxml_document(rows)
+        again = [r[1:] for r in rdfxml.parse_document(text, src="x")]
+        assert sorted(again, key=repr) == sorted(rows, key=repr), text
+    assert 'resource="http://ex.org/o"' in rdfxml.render_rdfxml_document(declared)
