@@ -26,6 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 from pyspark.sql.window import Window
 
 from phenoscape_owl_tools_spark.operators.dedup import dot_col, unit_vector_col
@@ -305,6 +306,7 @@ def ivf_topk(
     no cartesian anywhere; scoring is the same JVM-side fold as LSH.
     """
     import numpy as np
+    import pandas as pd
 
     from .semdedup import assign_clusters
 
@@ -321,14 +323,23 @@ def ivf_topk(
         F.col("cluster").alias("cell"),
         F.col("u").alias("ce"),
     )
-    probe_rows = []
+    probe_ids, probe_cells = [], []
     for r in q_rows:
         v = np.array(r["embedding"], dtype=np.float64)
         n = np.linalg.norm(v)
         v = v / (n if n else 1.0)
         order = np.argsort(-(c @ v), kind="stable")[: min(nprobe, len(c))]
-        probe_rows.extend((r["query_id"], int(cell)) for cell in order)
-    probes = spark.createDataFrame(probe_rows, "query_id long, cell int")
+        probe_ids.extend([r["query_id"]] * len(order))
+        probe_cells.append(order)
+    # a pandas frame over Arrow, typed from the queries: ids keep their type
+    # (strings, longs past 2^53) and no Python worker runs
+    probes = spark.createDataFrame(
+        pd.DataFrame({
+            "query_id": pd.Series(probe_ids, dtype=object),
+            "cell": np.concatenate(probe_cells).astype(np.int32),
+        }),
+        StructType([queries.schema["query_id"], StructField("cell", IntegerType())]),
+    )
     q = queries.select("query_id", unit_vector_col(F.col("embedding")).alias("qe"))
     scored = (
         F.broadcast(probes.join(q, "query_id"))

@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from phenoscape_owl_tools_spark.operators.textstats import word_windows
+
 
 # ---------------------------------------------------------------------------
 # exact dedup
@@ -69,19 +71,16 @@ def exact_dedup(documents: DataFrame, text_col: str = "text") -> DataFrame:
 def word_shingles(documents: DataFrame, n: int = 3, text_col: str = "text") -> DataFrame:
     """Distinct word n-gram shingles per document: (doc_id, shingle).
 
-    Pure column expressions: split -> sliding windows via
-    transform(sequence(...)) -> explode. No Python.
+    Pure column expressions: split -> ``textstats.word_windows`` ->
+    explode -> render. No Python and no lambda.
     """
-    toks = F.split(F.col(text_col), " ")
-    shingles = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0))),
-        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-    )
+    windows, render = word_windows(F.split(F.col(text_col), " "), n)
     return (
         documents.select(
             F.col("doc_id").cast("string").alias("doc_id"),
-            F.explode(shingles).alias("shingle"),
+            F.explode(windows).alias("w"),
         )
+        .select("doc_id", render(F.col("w")).alias("shingle"))
         .where(F.col("shingle") != "")
         .dropDuplicates(["doc_id", "shingle"])
     )
@@ -479,15 +478,15 @@ def positional_windows(
     """All word ``k``-gram windows WITH position: (doc_id, pos, gram).
     Unlike ``word_shingles`` duplicates are kept — position identity matters
     for substring-dedup bookkeeping."""
-    toks = F.split(F.col(text_col), " ")
-    grams = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(toks) - k, F.lit(0))),
-        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k)),
+    windows, render = word_windows(F.split(F.col(text_col), " "), k)
+    return (
+        documents.select(
+            F.col("doc_id").cast("string").alias("doc_id"),
+            F.posexplode(windows).alias("pos", "w"),
+        )
+        .select("doc_id", "pos", render(F.col("w")).alias("gram"))
+        .where(F.col("gram") != "")
     )
-    return documents.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.posexplode(grams).alias("pos", "gram"),
-    ).where(F.col("gram") != "")
 
 
 def duplicated_windows(

@@ -1,12 +1,18 @@
 """Text analysis over the document corpus: language-ID, quality scoring,
 BPE-ish token counting, rolling-window fingerprinting.
 
-Everything here is pure column expressions (whole-stage codegen, map-only,
-no shuffle, no Python) — at 100 TB these run at scan speed with filters
-and column pruning pushed into the parquet/Iceberg reader.
+Everything here is pure column expressions (map-only, no shuffle, no
+Python) — at 100 TB these run at scan speed with filters and column pruning
+pushed into the parquet/Iceberg reader. Word windows are built from
+code-generated array functions (:func:`word_windows`), never from a
+``transform`` lambda, which Spark evaluates interpreted, per element. Two
+lambdas remain: ``repetition_stats``' one ``aggregate`` pass over the sorted
+tokens, and ``rolling_fingerprint``'s ``transform`` over character windows.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -29,6 +35,23 @@ LANG_PROFILES: dict[str, tuple[str, ...]] = {
 BPE_PATTERN = "[A-Za-z]+|[0-9]|[^A-Za-z0-9 ]"
 
 STOPWORDS = ("the", "a", "and", "of")
+
+
+def word_windows(toks: F.Column, n: int) -> tuple[F.Column, Callable[[F.Column], F.Column]]:
+    """Sliding word ``n``-gram windows of the token array ``toks``, with no
+    lambda: ``arrays_zip(slice(toks, 1, m), ..., slice(toks, n, m))`` with
+    ``m = greatest(size(toks) - n + 1, 1)``, so element ``i`` is the struct
+    of tokens ``i .. i+n-1``. A document shorter than ``n`` gives ONE
+    window of all its tokens (the missing fields are NULL); NULL ``toks``
+    gives NULL. Returns the window array and ``render``, which turns one
+    window struct into its space-joined string."""
+    m = F.greatest(F.size(toks) - (n - 1), F.lit(1))
+    windows = F.arrays_zip(*(F.slice(toks, j, m) for j in range(1, n + 1)))
+
+    def render(window: F.Column) -> F.Column:
+        return F.concat_ws(" ", *(window[str(j)] for j in range(n)))
+
+    return windows, render
 
 
 def _occurrences(padded, marker: str) -> F.Column:
@@ -59,10 +82,13 @@ def quality_score(documents: DataFrame, text_col: str = "text") -> DataFrame:
     length saturation x (1 - stopword ratio) x (1 - non-alnum char ratio)."""
     toks = F.split(F.col(text_col), " ")
     n_tokens = F.size(toks)
-    stop = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS)))
-    stop_ratio = stop / n_tokens
+    rest = toks
+    for w in STOPWORDS:
+        rest = F.array_remove(rest, w)
+    stop_ratio = (n_tokens - F.size(rest)) / n_tokens
     stripped = F.regexp_replace(F.col(text_col), "[A-Za-z0-9 ]", "")
-    punct_ratio = F.length(stripped) / F.length(F.col(text_col))
+    # empty text has no characters to score: NULL q, which the gate drops
+    punct_ratio = F.try_divide(F.length(stripped), F.length(F.col(text_col)))
     q = F.least(F.lit(1.0), n_tokens / F.lit(50.0)) * (1.0 - stop_ratio) * (1.0 - punct_ratio)
     return documents.select(
         F.col("doc_id").cast("string").alias("doc_id"),
@@ -105,26 +131,29 @@ def repetition_stats(documents: DataFrame, text_col: str = "text") -> DataFrame:
     same for word 2-grams, and the frequency share of the most common token.
 
     Map-only: pure array expressions per row, no shuffle — scan-speed at
-    100 TB. ``top_word_frac`` is O(len × distinct) per row (filter-count per
-    distinct token), the right trade for bounded-length documents; for
-    multi-MB documents switch to the explode + groupBy(doc, token) path,
-    which pays one shuffle but is O(len) per row.
+    100 TB. The 2-grams are :func:`word_windows` structs cast to strings
+    (``{a, b}``), so ``array_distinct`` hashes them instead of comparing
+    structs pairwise; tokens hold no space, so the cast is one-to-one.
+    ``top_word_frac`` is the longest run in the sorted tokens, found in one
+    ``aggregate`` pass: O(len log len) per row. NULL text gives
+    ``dup_2gram_frac`` 0.0 and NULL elsewhere.
     """
     toks = F.split(F.col(text_col), " ")
     n = F.size(toks)
     dup_word = (n - F.size(F.array_distinct(toks))) / n
-    grams2 = F.transform(
-        F.sequence(F.lit(0), F.greatest(n - 2, F.lit(0))),
-        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, 2)),
-    )
+    grams2 = word_windows(toks, 2)[0]
     n2 = F.size(grams2)
-    dup_2gram = (n2 - F.size(F.array_distinct(grams2))) / n2
-    top = F.array_max(
-        F.transform(
-            F.array_distinct(toks),
-            lambda t: F.size(F.filter(toks, lambda x: x == t)),
-        )
+    distinct2 = F.size(F.array_distinct(grams2.cast("array<string>")))
+    dup_2gram = F.coalesce((n2 - distinct2) / n2, F.lit(0.0))
+
+    def step(acc, t):
+        run = F.when(t == acc["prev"], acc["run"] + 1).otherwise(1)
+        return F.struct(t.alias("prev"), run.alias("run"), F.greatest(acc["best"], run).alias("best"))
+
+    start = F.struct(
+        F.lit(None).cast("string").alias("prev"), F.lit(0).alias("run"), F.lit(0).alias("best")
     )
+    top = F.aggregate(F.sort_array(toks), start, step, lambda acc: acc["best"])
     return documents.select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.round(dup_word, 6).alias("dup_word_frac"),

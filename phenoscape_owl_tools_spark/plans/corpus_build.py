@@ -83,9 +83,12 @@ class CorpusResult:
 
 
 def doc_stats(documents: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per-document quality + repetition metrics in ONE map-only pass
-    (both operators are pure column math over the same split — Catalyst
-    fuses them into a single projection over the scan)."""
+    """Per-document quality + repetition metrics. Both operators are
+    map-only column math, but the plan joins two scans on ``doc_id`` (a
+    ``BroadcastHashJoin`` while one side fits the broadcast threshold), not
+    one projection: the join pairs each quality row with every repetition
+    row of the same id, which a single select would not do for duplicate
+    doc ids."""
     q = textstats.quality_score(documents, text_col)
     r = textstats.repetition_stats(documents, text_col)
     return q.join(r, "doc_id")

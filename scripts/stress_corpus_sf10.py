@@ -4,18 +4,23 @@ for the eight-stage pipeline (gates -> exact -> LSH clusters -> SemDeDup
 embeddings, plus full-resume wall. One JSON line for BENCH.md §20."""
 import json
 import shutil
+import os
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+# Spark's Python workers import the package through PYTHONPATH, not sys.path
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [str(ROOT), os.environ.get("PYTHONPATH")]))
+sys.path.insert(0, str(ROOT))
 
 from pyspark.sql import functions as F
 
 from phenoscape_owl_tools_spark.session import get_spark
 from phenoscape_owl_tools_spark.plans import corpus_build
 
-SF10 = "/root/repo/.scratch/sf10"
-OUT = "/root/repo/.scratch/corpus_sf10"
+SF10 = ROOT / ".scratch" / "sf10"
+OUT = ROOT / ".scratch" / "corpus_sf10"
 
 
 def main():

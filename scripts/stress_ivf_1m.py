@@ -3,10 +3,15 @@ brute-force on the SAME queries (exact side = matmul_topk over the full
 corpus, feasible because queries are few). Completes the r4 verdict's
 IVF-at-1M ask alongside stress_semdedup_1m. One JSON line for BENCH §20."""
 import json
+import os
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+# Spark's Python workers import the package through PYTHONPATH, not sys.path
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [str(ROOT), os.environ.get("PYTHONPATH")]))
+sys.path.insert(0, str(ROOT))
 
 from pyspark.sql import functions as F
 
@@ -21,7 +26,7 @@ N_QUERIES = 40
 
 def main():
     spark = get_spark("stress-ivf-1m")
-    base = spark.read.parquet("/root/repo/.scratch/sf1/embeddings.parquet")
+    base = spark.read.parquet(str(ROOT / ".scratch" / "sf1" / "embeddings.parquet"))
     reps = spark.range(REPS).select(F.col("id").cast("int").alias("rep"))
     emb = (
         base.crossJoin(F.broadcast(reps))

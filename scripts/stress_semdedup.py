@@ -7,10 +7,15 @@ see realistic near-dup structure. Reports wall + pair counts + the
 within-cluster recall of the exact pair set (the documented SemDeDup
 approximation: pairs split across cells are missed).
 """
+import os
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+# Spark's Python workers import the package through PYTHONPATH, not sys.path
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [str(ROOT), os.environ.get("PYTHONPATH")]))
+sys.path.insert(0, str(ROOT))
 
 from pyspark.sql import functions as F
 
@@ -23,7 +28,7 @@ THRESH = 0.95  # tight threshold: the SemDeDup regime (near-identical docs)
 
 def main():
     spark = get_spark("stress-semdedup")
-    base = spark.read.parquet("/root/repo/.scratch/sf1/embeddings.parquet")
+    base = spark.read.parquet(str(ROOT / ".scratch" / "sf1" / "embeddings.parquet"))
     reps = spark.range(REPS).select(F.col("id").cast("int").alias("rep"))
     emb = (
         base.crossJoin(F.broadcast(reps))

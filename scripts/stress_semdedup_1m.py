@@ -19,10 +19,15 @@ make_sf.py):
 Emits one JSON line for BENCH.md §20.
 """
 import json
+import os
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+# Spark's Python workers import the package through PYTHONPATH, not sys.path
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [str(ROOT), os.environ.get("PYTHONPATH")]))
+sys.path.insert(0, str(ROOT))
 
 from pyspark.sql import functions as F
 
@@ -38,7 +43,7 @@ SLICE = 50_000
 
 def main():
     spark = get_spark("stress-semdedup-1m")
-    base = spark.read.parquet("/root/repo/.scratch/sf1/embeddings.parquet")
+    base = spark.read.parquet(str(ROOT / ".scratch" / "sf1" / "embeddings.parquet"))
     reps = spark.range(REPS).select(F.col("id").cast("int").alias("rep"))
     emb = (
         base.crossJoin(F.broadcast(reps))

@@ -6,10 +6,15 @@ per-key scaling exponents log10(t10/t1).
 Emits one JSON line for BENCH.md §20.
 """
 import json
+import os
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+# Spark's Python workers import the package through PYTHONPATH, not sys.path
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [str(ROOT), os.environ.get("PYTHONPATH")]))
+sys.path.insert(0, str(ROOT))
 
 from phenoscape_owl_tools_spark.session import get_spark
 
@@ -24,8 +29,8 @@ def main():
     out = {"keys": {}}
     # warmup: fork python workers + pandas import at full width
     spark.range(10**6).selectExpr("sum(id)").collect()
-    for sf_name, sf_dir in (("sf1", "/root/repo/.scratch/sf1"),
-                            ("sf10", "/root/repo/.scratch/sf10")):
+    for sf_name, sf_dir in (("sf1", str(ROOT / ".scratch" / "sf1")),
+                            ("sf10", str(ROOT / ".scratch" / "sf10"))):
         for k in KEYS:
             t0 = time.perf_counter()
             n = qs[k](spark, sf_dir).count()

@@ -4,10 +4,15 @@ DOCUMENTED scale path for near-dup at clone density where the exact
 n-gram verifier's co-occurrence relation exceeds local disk).
 Same-boot sf1 + sf10, JSON to stdout."""
 import json
+import os
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+# Spark's Python workers import the package through PYTHONPATH, not sys.path
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [str(ROOT), os.environ.get("PYTHONPATH")]))
+sys.path.insert(0, str(ROOT))
 
 from phenoscape_owl_tools_spark.session import get_spark
 
@@ -20,8 +25,8 @@ def main():
     qs = e.queries()
     out = {"keys": {}}
     spark.range(10**6).selectExpr("sum(id)").collect()
-    for sf_name, sf_dir in (("sf1", "/root/repo/.scratch/sf1"),
-                            ("sf10", "/root/repo/.scratch/sf10")):
+    for sf_name, sf_dir in (("sf1", str(ROOT / ".scratch" / "sf1")),
+                            ("sf10", str(ROOT / ".scratch" / "sf10"))):
         for k in KEYS:
             t0 = time.perf_counter()
             n = qs[k](spark, sf_dir).count()

@@ -168,3 +168,21 @@ def test_ivf_fit_deterministic(spark):
     c1 = annsearch.ivf_fit(emb, n_cells=4, n_iters=2)
     c2 = annsearch.ivf_fit(emb.repartition(7), n_cells=4, n_iters=2)
     assert np.allclose(c1, c2, atol=1e-12)
+
+
+def test_ivf_full_probe_keeps_query_id_type(spark, emb):
+    """String ids and long ids past 2^53 (neighbours differ only in bits a
+    double drops) come back as brute_force_topk returns them."""
+    big = 2**53 + 1
+    for ids in (F.col("vec_id") + big, F.concat(F.lit("d"), "vec_id")):
+        vecs = emb.select(ids.alias("vec_id"), "embedding")
+        queries = vecs.orderBy("vec_id").limit(4).select(
+            F.col("vec_id").alias("query_id"), "embedding"
+        )
+        exact = {(r["query_id"], r["rank"]): (r["neighbor_id"], r["cos"])
+                 for r in annsearch.brute_force_topk(vecs, queries, k=5).collect()}
+        ivf = annsearch.ivf_topk(vecs, queries, k=5, n_cells=8, nprobe=8, n_iters=3)
+        assert ivf.schema["query_id"].dataType == vecs.schema["vec_id"].dataType
+        got = {(r["query_id"], r["rank"]): (r["neighbor_id"], r["cos"])
+               for r in ivf.collect()}
+        assert len(exact) == 20 and got == exact

@@ -187,3 +187,30 @@ def test_trained_mode_with_no_embedded_survivors_falls_back(spark):
     assert res.stages["semantic_kept"].count() == 0
     got = {r["doc_id"] for r in res.corpus.select("doc_id").collect()}
     assert got == _expected_ids(spark, docs, None, corpus_build.CorpusConfig())
+
+
+def test_empty_text_gets_null_quality_and_is_dropped(spark):
+    """An empty document has no characters to score: its q is NULL, as in
+    the DuckDB oracle (no divide-by-zero under ANSI), and the quality gate
+    drops it while the build completes."""
+    import duckdb
+    import pandas as pd
+
+    import __spark_entry__ as entrymod
+
+    texts = {
+        1: "",
+        2: "graph nodes carry typed labels across seven shards",
+        3: "vector search ranks nearby embeddings within probed cells",
+        4: "stream batches append fresh rows into partitioned tables",
+    }
+    pdf = pd.DataFrame({"doc_id": list(texts), "text": list(texts.values())})
+    docs = spark.createDataFrame(pdf)
+    got = {tuple(r) for r in textstats.quality_score(docs.where("doc_id = 1")).collect()}
+    assert got == {("1", 1, 0.0, None)}
+    con = duckdb.connect()
+    con.register("documents", pdf[pdf["doc_id"] == 1])
+    assert {tuple(r) for r in con.execute(entrymod.SQL_QUALITY_SCORE).fetchall()} == got
+
+    res = corpus_build.run(spark, docs, config=corpus_build.CorpusConfig())
+    assert {r["doc_id"] for r in res.corpus.select("doc_id").collect()} == {"2", "3", "4"}

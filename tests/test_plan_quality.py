@@ -365,3 +365,25 @@ def test_unigram_logppl_stays_jvm_side(spark):
     plan = _plan(spark, "unigram_logppl")
     assert "Python" not in plan, plan
     assert "CartesianProduct" not in plan, plan
+
+
+def test_word_windows_and_text_stats_have_no_per_element_lambdas(spark):
+    # higher-order functions run interpreted, per element: word windows,
+    # stopword and repetition counts are built from code-generated array
+    # functions, and only repetition_stats' one aggregate pass remains
+    from phenoscape_owl_tools_spark.operators import dedup, textstats
+
+    docs = spark.read.parquet(f"{SF001}/documents.parquet")
+    plans = {
+        "word_shingles": dedup.word_shingles(docs, 3),
+        "positional_windows": dedup.positional_windows(docs, 8),
+        "quality_score": textstats.quality_score(docs),
+        "repetition_stats": textstats.repetition_stats(docs),
+    }
+    for name, df in plans.items():
+        plan = df._jdf.queryExecution().analyzed().toString()
+        assert "transform(" not in plan and "filter(" not in plan, (name, plan)
+        # the aggregate's merge and finish functions are its two lambdas
+        n_agg = 1 if name == "repetition_stats" else 0
+        assert plan.count("aggregate(") == n_agg, (name, plan)
+        assert plan.count("lambdafunction(") == 2 * n_agg, (name, plan)

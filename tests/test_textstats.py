@@ -4,11 +4,15 @@ count, rolling fingerprint."""
 from __future__ import annotations
 
 import hashlib
+import re
+from collections import Counter
+from functools import reduce
 
 import pytest
-from pyspark.sql import Row
+from hypothesis import given, settings, strategies as st
+from pyspark.sql import DataFrame, Row, functions as F
 
-from phenoscape_owl_tools_spark.operators import textstats
+from phenoscape_owl_tools_spark.operators import dedup, textstats
 
 
 def _docs(spark, rows):
@@ -149,3 +153,80 @@ def test_pii_stats_map_only_plan(spark):
     d = _docs(spark, [(1, "a@b.io x")])
     plan = textstats.pii_stats(d)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan  # map-only: zero shuffle
+
+
+# ---------------------------------------------------------------------------
+# parity with a pure-Python statement of the window and repetition rules
+# ---------------------------------------------------------------------------
+
+# "" tokens joined by " " give double, leading and trailing spaces; "a" is
+# drawn twice as often, so texts repeat words
+_TEXTS = st.one_of(
+    st.none(),
+    st.lists(st.sampled_from(["a", "b", "a", "the", "of", "x,y", ""]), max_size=12).map(" ".join),
+)
+_BATCHES = st.lists(_TEXTS, min_size=20, max_size=60)
+_NS = (1, 2, 3, 8)
+
+
+def _ref_windows(text, n):
+    """Window i is tokens i..i+n-1; a text shorter than n is one window."""
+    if text is None:
+        return []
+    toks = text.split(" ")
+    return [" ".join(toks[i : i + n]) for i in range(max(len(toks) - n, 0) + 1)]
+
+
+def _ref_stats(text):
+    """(n_tokens, stop_ratio, q, dup_word, dup_2gram, top_word), unrounded."""
+    if text is None:
+        return (None, None, None, None, 0.0, None)
+    toks = text.split(" ")
+    n = len(toks)
+    stop = sum(t in textstats.STOPWORDS for t in toks) / n
+    punct = len(re.sub("[A-Za-z0-9 ]", "", text)) / len(text) if text else None
+    q = None if punct is None else min(1.0, n / 50.0) * (1.0 - stop) * (1.0 - punct)
+    g2 = _ref_windows(text, 2)
+    return (n, stop, q, (n - len(set(toks))) / n, (len(g2) - len(set(g2))) / len(g2),
+            max(Counter(toks).values()) / n)
+
+
+def _batch(spark, texts):
+    return spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+
+
+@settings(max_examples=3, deadline=None)
+@given(_BATCHES)
+def test_windows_match_reference(spark, texts):
+    docs = _batch(spark, texts)
+    parts = []
+    for n in _NS:
+        parts.append(dedup.word_shingles(docs, n).select(
+            F.lit(n).alias("n"), "doc_id", F.lit(-1).alias("pos"), F.col("shingle").alias("gram")))
+        parts.append(dedup.positional_windows(docs, n).select(
+            F.lit(n).alias("n"), "doc_id", "pos", "gram"))
+    got = Counter(tuple(r) for r in reduce(DataFrame.unionByName, parts).collect())
+    expect = Counter()
+    for i, text in enumerate(texts):
+        for n in _NS:
+            grams = _ref_windows(text, n)
+            expect.update((n, str(i), -1, g) for g in set(grams) if g != "")
+            expect.update((n, str(i), p, g) for p, g in enumerate(grams) if g != "")
+    assert got == expect
+
+
+@settings(max_examples=3, deadline=None)
+@given(_BATCHES)
+def test_repetition_and_quality_match_reference(spark, texts):
+    docs = _batch(spark, texts)
+    rows = textstats.quality_score(docs).join(
+        textstats.repetition_stats(docs), "doc_id"
+    ).collect()
+    cols = ("n_tokens", "stop_ratio", "q", "dup_word_frac", "dup_2gram_frac", "top_word_frac")
+    got = {r["doc_id"]: tuple(r[c] for c in cols) for r in rows}
+    assert set(got) == {str(i) for i in range(len(texts))}
+    for i, text in enumerate(texts):
+        for c, g, e in zip(cols, got[str(i)], _ref_stats(text)):
+            assert (g is None) == (e is None), (text, c, g, e)
+            if e is not None:
+                assert g == pytest.approx(e, abs=1e-6), (text, c)
