@@ -45,7 +45,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from .ofn import AXIOM_SCHEMA
-from .ttl import OWL, RDF, RDFS, _Doc, _iri_object_kind, document_axiom_rows
+from .ttl import OWL, RDF, RDFS, _Doc, axiom_triples, document_axiom_rows
 
 XML_NS = "http://www.w3.org/XML/1998/namespace"
 
@@ -216,28 +216,21 @@ def read_rdfxml(spark: SparkSession, path: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Writer: axiom frame -> RDF/XML document (round-trips the reader).
-# Completes the serialization matrix: readers cover .ofn/.ttl/.nt/.owl, and
-# with this, so do the writers (ofn.write_ofn, ttl.write_turtle,
-# catalog.to_ntriples, rdfxml.write_rdfxml). The reference emits RDF/XML
-# through OWLAPI's default renderer (KnowledgeBaseBuilder.scala's saved
-# ontologies are .owl files); this renderer produces the same element
-# shapes the reader above consumes (typed node elements, rdf:resource
-# object attributes, parseType="Collection" lists, nested owl:Restriction
-# blank nodes).
+# The axiom-row -> triple mapping is ttl.axiom_triples, shared with the
+# Turtle writer; this only serializes its triples, one rdf:Description per
+# subject (rdf:about, or rdf:nodeID for a blank node) holding one property
+# element per triple (rdf:resource, rdf:nodeID, or literal text) — shapes
+# the reader above consumes. The reference emits RDF/XML through OWLAPI
+# (KnowledgeBaseBuilder.scala's saved ontologies are .owl files).
 # ---------------------------------------------------------------------------
-
-_DECL_TYPE_ELEM = {
-    "Class": f"{{{OWL}}}Class",
-    "ObjectProperty": f"{{{OWL}}}ObjectProperty",
-    "DataProperty": f"{{{OWL}}}DatatypeProperty",
-    "AnnotationProperty": f"{{{OWL}}}AnnotationProperty",
-    "NamedIndividual": f"{{{OWL}}}NamedIndividual",
-}
 
 # longest NCName suffix of a predicate IRI — the element local name; the
 # remainder is its namespace (ns + local always re-concatenates to the IRI,
 # so ANY valid split point round-trips through _qname()).
 _NCNAME_SUFFIX = re.compile(r"[A-Za-z_][A-Za-z0-9_.\-]*$")
+
+# characters outside XML 1.0's Char production (no escape can carry them)
+_NOT_XML_CHAR = re.compile("[\x00-\x08\x0b\x0c\x0e-\x1f\ud800-\udfff\ufffe\uffff]")
 
 
 def _pred_tag(iri: str) -> str:
@@ -250,116 +243,43 @@ def _pred_tag(iri: str) -> str:
     return f"{{{iri[: m.start()]}}}{iri[m.start():]}"
 
 
-def _rx_prop(parent: ET.Element, pred_iri: str, obj_expr: str) -> None:
-    """Append a property element for an object that is a class/property
-    expression or a named IRI (named -> rdf:resource attribute; expression
-    -> nested node element)."""
-    prop = ET.SubElement(parent, _pred_tag(pred_iri))
-    from .ofn import _CTOR_RE
-
-    if _CTOR_RE.match(obj_expr):
-        prop.append(_rx_node(obj_expr))
-    else:
-        prop.set(f"{{{RDF}}}resource", obj_expr)
-
-
-def _rx_collection(parent: ET.Element, pred_iri: str, items: list[str]) -> None:
-    prop = ET.SubElement(parent, _pred_tag(pred_iri))
-    prop.set(f"{{{RDF}}}parseType", "Collection")
-    for item in items:
-        prop.append(_rx_node(item))
-
-
-def _rx_node(expr: str) -> ET.Element:
-    """Canonical expression string -> RDF/XML node element. Named IRIs
-    become ``<rdf:Description rdf:about=.../>``; constructed expressions
-    become blank node elements (``<owl:Restriction>...`` etc.), nesting
-    naturally — the exact shapes ``_parse_node`` consumes."""
-    from .ofn import _CTOR_RE, _split_args
-
-    m = _CTOR_RE.match(expr)
-    if not m:
-        el = ET.Element(f"{{{RDF}}}Description")
-        el.set(f"{{{RDF}}}about", expr)
-        return el
-    ctor, body = m.group(1), m.group(2)
-    args = _split_args(body) if body else []
-    if ctor in ("ObjectSomeValuesFrom", "ObjectAllValuesFrom", "ObjectHasValue"):
-        el = ET.Element(f"{{{OWL}}}Restriction")
-        _rx_prop(el, OWL + "onProperty", args[0])
-        filler = {
-            "ObjectSomeValuesFrom": "someValuesFrom",
-            "ObjectAllValuesFrom": "allValuesFrom",
-            "ObjectHasValue": "hasValue",
-        }[ctor]
-        _rx_prop(el, OWL + filler, args[1])
-        return el
-    el = ET.Element(f"{{{RDF}}}Description")
-    if ctor == "ObjectComplementOf":
-        _rx_prop(el, OWL + "complementOf", args[0])
-    elif ctor == "ObjectInverseOf":
-        _rx_prop(el, OWL + "inverseOf", args[0])
-    elif ctor == "ObjectIntersectionOf":
-        _rx_collection(el, OWL + "intersectionOf", args)
-    elif ctor == "ObjectUnionOf":
-        _rx_collection(el, OWL + "unionOf", args)
-    elif ctor == "ObjectOneOf":
-        _rx_collection(el, OWL + "oneOf", args)
-    else:
-        raise RdfXmlParseError(f"cannot render expression constructor {ctor!r}")
-    return el
-
-
-def _rx_subject(root: ET.Element, expr: str) -> ET.Element:
-    node = _rx_node(expr)
-    root.append(node)
-    return node
+def _node_attr(term: str, iri_attr: str) -> dict[str, str]:
+    if term.startswith("_:"):
+        return {f"{{{RDF}}}nodeID": term[2:]}
+    return {f"{{{RDF}}}{iri_attr}": term}
 
 
 def render_rdfxml_document(rows) -> str:
     """Render axiom rows (kind, s, p, o) — or 5-tuples with a leading src —
-    to an RDF/XML document. Inverse of :func:`parse_document`:
-    ``parse_document(render_rdfxml_document(rows))`` is row-stable for
-    every kind the reader emits (parity-tested against the reference's own
-    OFN fixture, like the Turtle writer)."""
-    from .ofn import _ABS_IRI_RE
-
+    to an RDF/XML document of the :func:`ttl.axiom_triples` triples.
+    ``parse_document(render_rdfxml_document(rows))`` is ``rows`` plus a
+    ``declaration(p, ObjectProperty)`` for each object-property-assertion
+    predicate not so declared, and a second round trip is exact. Raises
+    ``ValueError`` for a value holding a character XML 1.0 cannot carry."""
     root = ET.Element(f"{{{RDF}}}RDF")
-    rows = sorted(tuple(r[1:]) if len(r) == 5 else tuple(r) for r in rows)
-    decl_kind = {s: o for kind, s, _, o in rows if kind == "declaration"}
-    for kind, s, p, o in rows:
-        if kind == "declaration":
-            el = ET.SubElement(root, _DECL_TYPE_ELEM[o])
-            el.set(f"{{{RDF}}}about", s)
-        elif kind == "subclass_of":
-            _rx_prop(_rx_subject(root, s), RDFS + "subClassOf", o)
-        elif kind == "equivalent_classes":
-            _rx_prop(_rx_subject(root, s), OWL + "equivalentClass", o)
-        elif kind == "disjoint_classes":
-            _rx_prop(_rx_subject(root, s), OWL + "disjointWith", o)
-        elif kind == "sub_object_property":
-            _rx_prop(_rx_subject(root, s), RDFS + "subPropertyOf", o)
-        elif kind == "property_chain":
-            _rx_collection(
-                _rx_subject(root, o), OWL + "propertyChainAxiom", s.split(" ")
+    nodes: dict[str, ET.Element] = {}
+    for s, p, o, o_is_iri in axiom_triples(rows):
+        for value in (s, p, o):
+            if _NOT_XML_CHAR.search(value):
+                raise ValueError(
+                    f"{value!r} holds a character XML 1.0 cannot carry"
+                )
+        if s not in nodes:
+            nodes[s] = ET.SubElement(
+                root, f"{{{RDF}}}Description", _node_attr(s, "about")
             )
-        elif kind == "annotation":
-            node = _rx_subject(root, s)
-            if (_ABS_IRI_RE.match(o) and " " not in o and '"' not in o
-                    and _iri_object_kind(s, p, o, decl_kind) == "annotation"):
-                _rx_prop(node, p, o)
-            else:
-                ET.SubElement(node, _pred_tag(p)).text = o
-        elif kind == "class_assertion":
-            _rx_prop(_rx_subject(root, s), RDF + "type", o)
-        elif kind == "object_property_assertion":
-            _rx_prop(_rx_subject(root, s), p, o)
+        if o_is_iri:
+            ET.SubElement(nodes[s], _pred_tag(p), _node_attr(o, "resource"))
         else:
-            raise RdfXmlParseError(f"cannot render axiom kind {kind!r}")
+            ET.SubElement(nodes[s], _pred_tag(p)).text = o
     ET.register_namespace("rdf", RDF)
     ET.register_namespace("rdfs", RDFS)
     ET.register_namespace("owl", OWL)
-    return ET.tostring(root, encoding="unicode", xml_declaration=True)
+    # a raw CR in text would read back as LF (XML end-of-line handling);
+    # ElementTree already writes CR in attribute values as &#13;
+    return ET.tostring(root, encoding="unicode", xml_declaration=True).replace(
+        "\r", "&#13;"
+    )
 
 
 def write_rdfxml(axioms: DataFrame, path: str) -> None:

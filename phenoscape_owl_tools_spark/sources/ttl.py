@@ -1,4 +1,5 @@
-"""Turtle / N-Triples ontology readers.
+"""Turtle / N-Triples ontology readers, and the axiom-row -> RDF mapping
+behind both RDF writers.
 
 The reference's real TBox load path is OWLAPI parsing web ontologies in
 RDF serializations (``KnowledgeBaseBuilder.scala:56-68``,
@@ -25,6 +26,13 @@ formats a user actually has on disk (``uberon.ttl``, ``.nt`` exports):
   with set-valued operators sorted — so every downstream extractor
   (``subclass_edges``, ``negation_hierarchy_axioms``, ...) works on either
   reader's output unchanged.
+- :func:`axiom_triples` — the inverse mapping, axiom rows -> RDF triples
+  with expressions as blank nodes. :func:`render_turtle_document` and
+  ``rdfxml.render_rdfxml_document`` only serialize its triples. RDF tells
+  an IRI-valued annotation from an object-property assertion only by
+  declarations; the readers decide with :func:`_iri_object_kind` and
+  ``axiom_triples`` applies the same rule on the way out, adding an
+  ``ObjectProperty`` declaration where an assertion's predicate lacks one.
 
 Blank-node expression scaffolding is TBox-scale (thousands of rows per
 ontology), orders of magnitude smaller than instance data; it is resolved
@@ -42,6 +50,7 @@ assertion rows rather than being dropped.
 
 from __future__ import annotations
 
+import itertools
 import re
 from typing import Iterator
 
@@ -440,9 +449,26 @@ def _rdf_list(node: str, by_s: dict) -> list[str]:
     return out
 
 
+# OWL class/property expression constructor -> the predicate that carries it
+# on its blank node; the reader and the writer both read this table.
+_CTOR_PRED = {
+    "ObjectComplementOf": OWL + "complementOf",
+    "ObjectSomeValuesFrom": OWL + "someValuesFrom",
+    "ObjectAllValuesFrom": OWL + "allValuesFrom",
+    "ObjectHasValue": OWL + "hasValue",
+    "ObjectIntersectionOf": OWL + "intersectionOf",
+    "ObjectUnionOf": OWL + "unionOf",
+    "ObjectInverseOf": OWL + "inverseOf",
+    "ObjectOneOf": OWL + "oneOf",
+}
+_RESTRICTION_CTORS = {"ObjectSomeValuesFrom", "ObjectAllValuesFrom", "ObjectHasValue"}
+_LIST_CTORS = {"ObjectIntersectionOf", "ObjectUnionOf", "ObjectOneOf"}
+
+
 def _expr(node: str, by_s: dict, depth: int = 0) -> str:
     """Canonical expression string for a node (IRI = itself; bnode =
-    reconstructed OWL expression, same canonical form as ``ofn._Node``).
+    reconstructed OWL expression, same canonical form as ``ofn._Node``,
+    with the list constructors' operands sorted).
     A bnode with no recognized expression vocabulary (e.g. an anonymous
     individual) resolves to its document-scoped label rather than raising."""
     if not node.startswith("_:"):
@@ -452,39 +478,27 @@ def _expr(node: str, by_s: dict, depth: int = 0) -> str:
     props: dict[str, str] = {}
     for p, o, _ in by_s.get(node, []):
         props[p] = o
-    if OWL + "complementOf" in props:
-        return f"ObjectComplementOf({_expr(props[OWL + 'complementOf'], by_s, depth + 1)})"
-    if OWL + "someValuesFrom" in props:
-        prop = _expr(props[OWL + "onProperty"], by_s, depth + 1)
-        filler = _expr(props[OWL + "someValuesFrom"], by_s, depth + 1)
-        return f"ObjectSomeValuesFrom({prop} {filler})"
-    if OWL + "allValuesFrom" in props:
-        prop = _expr(props[OWL + "onProperty"], by_s, depth + 1)
-        filler = _expr(props[OWL + "allValuesFrom"], by_s, depth + 1)
-        return f"ObjectAllValuesFrom({prop} {filler})"
-    if OWL + "hasValue" in props:
-        prop = _expr(props[OWL + "onProperty"], by_s, depth + 1)
-        return f"ObjectHasValue({prop} {props[OWL + 'hasValue']})"
-    if OWL + "intersectionOf" in props:
-        parts = sorted(
-            _expr(m, by_s, depth + 1)
-            for m in _rdf_list(props[OWL + "intersectionOf"], by_s)
-        )
-        return f"ObjectIntersectionOf({' '.join(parts)})"
-    if OWL + "unionOf" in props:
-        parts = sorted(
-            _expr(m, by_s, depth + 1) for m in _rdf_list(props[OWL + "unionOf"], by_s)
-        )
-        return f"ObjectUnionOf({' '.join(parts)})"
-    if OWL + "inverseOf" in props:
-        return f"ObjectInverseOf({_expr(props[OWL + 'inverseOf'], by_s, depth + 1)})"
-    if OWL + "oneOf" in props:
-        parts = sorted(
-            _expr(m, by_s, depth + 1) for m in _rdf_list(props[OWL + "oneOf"], by_s)
-        )
-        return f"ObjectOneOf({' '.join(parts)})"
+    for ctor, pred in _CTOR_PRED.items():
+        if pred not in props:
+            continue
+        if ctor in _LIST_CTORS:
+            args = sorted(_expr(m, by_s, depth + 1) for m in _rdf_list(props[pred], by_s))
+        else:
+            args = [_expr(props[pred], by_s, depth + 1)]
+        if ctor in _RESTRICTION_CTORS:
+            args.insert(0, _expr(props[OWL + "onProperty"], by_s, depth + 1))
+        return f"{ctor}({' '.join(args)})"
     return node
 
+
+# the four axiom kinds that are one triple between two class/property terms;
+# the writer and both readers read this dict
+_PRED_KIND = {
+    RDFS + "subClassOf": "subclass_of",
+    OWL + "equivalentClass": "equivalent_classes",
+    OWL + "disjointWith": "disjoint_classes",
+    RDFS + "subPropertyOf": "sub_object_property",
+}
 
 _META_TYPES = set(_DECL_KINDS) | {
     OWL + "Ontology",
@@ -499,10 +513,10 @@ def document_axiom_rows(doc: _Doc, src: str = "") -> list[tuple]:
     """Map one document's raw triples to normalized axiom rows
     (``ofn.AXIOM_SCHEMA`` conventions — see ``ofn._axiom_rows``)."""
     by_s = _index(doc.triples)
-    decl_prop_kind: dict[str, str] = {}
+    decls: dict[str, set[str]] = {}
     for s, p, o, _ in doc.triples:
         if p == RDF + "type" and o in _DECL_KINDS and not s.startswith("_:"):
-            decl_prop_kind[s] = _DECL_KINDS[o]
+            decls.setdefault(s, set()).add(_DECL_KINDS[o])
 
     rows: list[tuple] = []
     _EXPR_VOCAB = {
@@ -541,34 +555,30 @@ def document_axiom_rows(doc: _Doc, src: str = "") -> list[tuple]:
                 continue
             else:
                 rows.append((src, "class_assertion", subj, None, _expr(o, by_s)))
-        elif p == RDFS + "subClassOf":
-            rows.append((src, "subclass_of", subj, None, _expr(o, by_s)))
-        elif p == OWL + "equivalentClass":
-            rows.append((src, "equivalent_classes", subj, None, _expr(o, by_s)))
-        elif p == OWL + "disjointWith":
-            rows.append((src, "disjoint_classes", subj, None, _expr(o, by_s)))
-        elif p == RDFS + "subPropertyOf":
-            rows.append((src, "sub_object_property", subj, None, _expr(o, by_s)))
+        elif p in _PRED_KIND:
+            rows.append((src, _PRED_KIND[p], subj, None, _expr(o, by_s)))
         elif p == OWL + "propertyChainAxiom":
             chain = " ".join(_expr(m, by_s) for m in _rdf_list(o, by_s))
             rows.append((src, "property_chain", chain, None, subj))
         elif not o_is_iri:
             rows.append((src, "annotation", subj, p, o))
         else:
-            rows.append((src, _iri_object_kind(subj, p, o, decl_prop_kind), subj, p, o))
+            rows.append((src, _iri_object_kind(subj, p, o, decls), subj, p, o))
     return rows
 
 
-def _iri_object_kind(s: str, p: str, o: str, decl_kind: dict[str, str]) -> str:
+def _iri_object_kind(s: str, p: str, o: str, decls: dict[str, set[str]]) -> str:
     """Axiom kind of a triple whose object is an IRI, given the document's
-    declarations (IRI -> declared kind). Turtle has no syntax that tells an
-    IRI-valued annotation from an object-property assertion, so the reader
-    decides by declarations and the writer asks the same question."""
-    if decl_kind.get(p) == "ObjectProperty":
+    declarations (IRI -> the set of kinds it is declared as; a punned IRI
+    has several). RDF has no syntax that tells an IRI-valued annotation
+    from an object-property assertion, so the readers decide by
+    declarations and :func:`axiom_triples` asks the same question.
+    ``axioms_from_triples`` states the same rule as a column expression."""
+    if "ObjectProperty" in decls.get(p, ()):
         return "object_property_assertion"
-    if decl_kind.get(p) == "AnnotationProperty":
+    if "AnnotationProperty" in decls.get(p, ()):
         return "annotation"
-    if decl_kind.get(s) or decl_kind.get(o):
+    if s in decls or o in decls:
         # undeclared predicate between declared entities: annotation-ish
         return "annotation"
     return "object_property_assertion"
@@ -602,22 +612,107 @@ def read_turtle(spark: SparkSession, path: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Writer: axiom frame -> Turtle document (round-trips the reader)
+# Writers: axiom rows -> RDF triples (the inverse of document_axiom_rows),
+# serialized by render_turtle_document here and rdfxml.render_rdfxml_document
 # ---------------------------------------------------------------------------
 
-_DECL_TYPE_TERM = {
-    "Class": "owl:Class",
-    "ObjectProperty": "owl:ObjectProperty",
-    "DataProperty": "owl:DatatypeProperty",
-    "AnnotationProperty": "owl:AnnotationProperty",
-    "NamedIndividual": "owl:NamedIndividual",
-}
+_DECL_IRI = {kind: iri for iri, kind in _DECL_KINDS.items()}
+_KIND_PRED = {kind: pred for pred, kind in _PRED_KIND.items()}
 
-_TTL_HEADER = (
-    "@prefix rdf: <http://www.w3.org/1999/02/22-rdf-syntax-ns#> .\n"
-    "@prefix rdfs: <http://www.w3.org/2000/01/rdf-schema#> .\n"
-    "@prefix owl: <http://www.w3.org/2002/07/owl#> .\n"
-)
+# an annotation value every RDF reader here keeps verbatim as an IRI object
+# (rdfxml._resolve takes only "scheme://..." and "urn:..." as absolute)
+_IRI_VALUE_RE = re.compile(r"(?:[A-Za-z][A-Za-z0-9+.-]*://|urn:)[^\s<>\"{}|^`\\]*")
+
+
+def axiom_triples(rows) -> list[tuple[str, str, str, bool]]:
+    """Axiom rows (kind, s, p, o) — or 5-tuples with a leading src — to RDF
+    triples (s, p, o, o_is_iri), the exact inverse of
+    :func:`document_axiom_rows`. Class and property expressions become
+    ``_:bN`` blank nodes and operand lists ``rdf:first``/``rdf:rest``
+    cells.
+
+    RDF tells an IRI-valued annotation from an object-property assertion
+    only by declarations (:func:`_iri_object_kind`), so this is the one
+    place that rule is applied on the way out: every object-property
+    assertion predicate not declared ``ObjectProperty`` gets that
+    declaration added, and an IRI-valued annotation is written as an IRI
+    only when the reader would read it back as an annotation against the
+    declarations (added ones included); otherwise it is a plain literal.
+    Hence ``document_axiom_rows(axiom_triples(rows))`` is ``rows`` plus
+    the added declarations, and a second round trip is exact. Raises
+    ``ValueError`` for an object-property assertion through a property
+    declared ``AnnotationProperty`` and not ``ObjectProperty``."""
+    from .ofn import _CTOR_RE, _split_args
+
+    rows = sorted(tuple(r[1:]) if len(r) == 5 else tuple(r) for r in rows)
+    decls: dict[str, set[str]] = {}
+    for kind, s, _, o in rows:
+        if kind == "declaration":
+            decls.setdefault(s, set()).add(o)
+    undeclared = sorted({
+        p for kind, _, p, _ in rows
+        if kind == "object_property_assertion" and "ObjectProperty" not in decls.get(p, ())
+    })
+    for p in undeclared:
+        if "AnnotationProperty" in decls.get(p, ()):
+            raise ValueError(
+                f"object_property_assertion through {p!r}, which is declared "
+                "an AnnotationProperty: RDF keeps the assertion only by "
+                "declaring it an ObjectProperty too"
+            )
+        decls.setdefault(p, set()).add("ObjectProperty")
+        rows.append(("declaration", p, None, "ObjectProperty"))
+
+    triples: list[tuple[str, str, str, bool]] = []
+    labels = itertools.count()
+
+    def bnode() -> str:
+        return f"_:b{next(labels)}"
+
+    def rdf_list(items: list[str]) -> str:
+        head = RDF + "nil"
+        for item in reversed(items):
+            cell = bnode()
+            triples.append((cell, RDF + "first", item, True))
+            triples.append((cell, RDF + "rest", head, True))
+            head = cell
+        return head
+
+    def node(expr: str) -> str:
+        m = _CTOR_RE.match(expr)
+        if not m:
+            return expr
+        ctor = m.group(1)
+        if ctor not in _CTOR_PRED:
+            raise ValueError(f"cannot write expression constructor {ctor!r}")
+        args = [node(a) for a in _split_args(m.group(2))]
+        obj = rdf_list(args) if ctor in _LIST_CTORS else args[-1]
+        b = bnode()
+        if ctor in _RESTRICTION_CTORS:
+            triples.append((b, RDF + "type", OWL + "Restriction", True))
+            triples.append((b, OWL + "onProperty", args[0], True))
+        triples.append((b, _CTOR_PRED[ctor], obj, True))
+        return b
+
+    for kind, s, p, o in rows:
+        if kind == "declaration":
+            triples.append((s, RDF + "type", _DECL_IRI[o], True))
+        elif kind in _KIND_PRED:
+            triples.append((node(s), _KIND_PRED[kind], node(o), True))
+        elif kind == "property_chain":
+            chain = rdf_list([node(x) for x in _split_args(s)])
+            triples.append((o, OWL + "propertyChainAxiom", chain, True))
+        elif kind == "class_assertion":
+            triples.append((s, RDF + "type", node(o), True))
+        elif kind == "object_property_assertion":
+            triples.append((s, p, o, True))
+        elif kind == "annotation":
+            as_iri = bool(_IRI_VALUE_RE.fullmatch(o)) and (
+                _iri_object_kind(s, p, o, decls) == "annotation")
+            triples.append((s, p, o, as_iri))
+        else:
+            raise ValueError(f"cannot write axiom kind {kind!r}")
+    return triples
 
 
 def _quote_ttl(s: str) -> str:
@@ -628,88 +723,23 @@ def _quote_ttl(s: str) -> str:
     return f'"{esc}"'
 
 
-def _term_ttl(expr: str) -> str:
-    """Canonical expression string -> Turtle term. Named IRIs become
-    ``<iri>``; constructed expressions become inline blank-node property
-    lists (``[ a owl:Restriction ; ... ]``), nesting naturally."""
-    from .ofn import _CTOR_RE, _split_args  # same canonical grammar
-
-    m = _CTOR_RE.match(expr)
-    if not m:
-        return f"<{expr}>"
-    ctor, body = m.group(1), m.group(2)
-    args = _split_args(body) if body else []
-    if ctor == "ObjectSomeValuesFrom":
-        return (f"[ a owl:Restriction ; owl:onProperty {_term_ttl(args[0])} ; "
-                f"owl:someValuesFrom {_term_ttl(args[1])} ]")
-    if ctor == "ObjectAllValuesFrom":
-        return (f"[ a owl:Restriction ; owl:onProperty {_term_ttl(args[0])} ; "
-                f"owl:allValuesFrom {_term_ttl(args[1])} ]")
-    if ctor == "ObjectHasValue":
-        return (f"[ a owl:Restriction ; owl:onProperty {_term_ttl(args[0])} ; "
-                f"owl:hasValue {_term_ttl(args[1])} ]")
-    if ctor == "ObjectComplementOf":
-        return f"[ owl:complementOf {_term_ttl(args[0])} ]"
-    if ctor == "ObjectIntersectionOf":
-        return f"[ owl:intersectionOf ( {' '.join(_term_ttl(a) for a in args)} ) ]"
-    if ctor == "ObjectUnionOf":
-        return f"[ owl:unionOf ( {' '.join(_term_ttl(a) for a in args)} ) ]"
-    if ctor == "ObjectOneOf":
-        return f"[ owl:oneOf ( {' '.join(_term_ttl(a) for a in args)} ) ]"
-    if ctor == "ObjectInverseOf":
-        return f"[ owl:inverseOf {_term_ttl(args[0])} ]"
-    raise TtlParseError(f"cannot render expression constructor {ctor!r}")
-
-
-def _value_ttl(s: str, as_iri: bool) -> str:
-    """Annotation value: absolute IRI -> <iri> (same heuristic as
-    ``ofn._render_value`` so both writers agree), else a quoted literal.
-    An IRI value the reader would take for an object-property assertion
-    (``as_iri`` False) is written as an ``xsd:anyURI`` literal, which keeps
-    the lexical form and reads back as an annotation."""
-    from .ofn import _ABS_IRI_RE
-
-    if _ABS_IRI_RE.match(s) and " " not in s and '"' not in s:
-        if as_iri:
-            return f"<{s}>"
-        return f"{_quote_ttl(s)}^^<http://www.w3.org/2001/XMLSchema#anyURI>"
-    return _quote_ttl(s)
-
-
 def render_turtle_document(rows) -> str:
     """Render axiom rows (kind, s, p, o) — or 5-tuples with a leading src —
-    to a Turtle document. Inverse of :func:`parse_document`:
-    ``parse_document(render_turtle_document(rows))`` is row-stable for
-    every kind the reader emits (the OFN parity test exercises this on the
-    reference's own fixture)."""
-    lines = [_TTL_HEADER]
-    rows = sorted(tuple(r[1:]) if len(r) == 5 else tuple(r) for r in rows)
-    decl_kind = {s: o for kind, s, _, o in rows if kind == "declaration"}
-    for row in rows:
-        kind, s, p, o = row
-        if kind == "declaration":
-            lines.append(f"<{s}> a {_DECL_TYPE_TERM[o]} .")
-        elif kind == "subclass_of":
-            lines.append(f"{_term_ttl(s)} rdfs:subClassOf {_term_ttl(o)} .")
-        elif kind == "equivalent_classes":
-            lines.append(f"{_term_ttl(s)} owl:equivalentClass {_term_ttl(o)} .")
-        elif kind == "disjoint_classes":
-            lines.append(f"{_term_ttl(s)} owl:disjointWith {_term_ttl(o)} .")
-        elif kind == "sub_object_property":
-            lines.append(f"<{s}> rdfs:subPropertyOf <{o}> .")
-        elif kind == "property_chain":
-            chain = " ".join(f"<{x}>" for x in s.split(" "))
-            lines.append(f"<{o}> owl:propertyChainAxiom ( {chain} ) .")
-        elif kind == "annotation":
-            as_iri = _iri_object_kind(s, p, o, decl_kind) == "annotation"
-            lines.append(f"<{s}> <{p}> {_value_ttl(o, as_iri)} .")
-        elif kind == "class_assertion":
-            lines.append(f"<{s}> a {_term_ttl(o)} .")
-        elif kind == "object_property_assertion":
-            lines.append(f"<{s}> <{p}> <{o}> .")
-        else:
-            raise TtlParseError(f"cannot render axiom kind {kind!r}")
-    return "\n".join(lines) + "\n"
+    to a Turtle document of one N-Triples-compatible line per
+    :func:`axiom_triples` triple. ``parse_document(render_turtle_document(
+    rows))`` is ``rows`` plus a ``declaration(p, ObjectProperty)`` for each
+    object-property-assertion predicate not so declared, and a second
+    round trip is exact."""
+
+    def term(x: str, is_iri: bool) -> str:
+        if not is_iri:
+            return _quote_ttl(x)
+        return x if x.startswith("_:") else f"<{x}>"
+
+    return "".join(
+        f"{term(s, True)} <{p}> {term(o, is_iri)} .\n"
+        for s, p, o, is_iri in axiom_triples(rows)
+    )
 
 
 def write_turtle(axioms: DataFrame, path: str) -> None:
@@ -735,28 +765,45 @@ def axioms_from_triples(triples: DataFrame, src: str = "") -> DataFrame:
 
     Works purely relationally on NAMED nodes (whole-stage codegen ``when``
     chains, no Python): subclass/equivalent/disjoint/subproperty edges,
-    declarations, class assertions, annotations (literal objects), object
-    property assertions. Blank-node expression scaffolding — TBox-scale —
-    must come through :func:`read_turtle`/:func:`parse_document`; rows
-    whose subject or object is a bnode are excluded here.
+    declarations, class assertions, annotations and object property
+    assertions. A triple with an IRI object is classified by the frame's
+    declarations with the rule of :func:`_iri_object_kind`: each IRI's
+    declared kinds are one ``collect_set`` (TBox-scale), broadcast-joined
+    on the predicate, subject and object. Blank-node expression
+    scaffolding — TBox-scale — must come through
+    :func:`read_turtle`/:func:`parse_document`; rows whose subject or
+    object is a bnode are excluded here.
     """
     t = triples.where(
         ~F.col("subj").startswith("_:")
         & ~(F.col("obj_is_iri") & F.col("obj").startswith("_:"))
     )
     is_type = F.col("pred") == RDF + "type"
-    decl_kind = F.create_map(
-        *[F.lit(x) for kv in _DECL_KINDS.items() for x in kv]
-    )[F.col("obj")]
+
+    def lookup(d: dict) -> Column:
+        return F.create_map(*[F.lit(x) for kv in d.items() for x in kv])
+
+    decl_kind = lookup(_DECL_KINDS)[F.col("obj")]
+    decls = t.where(is_type & decl_kind.isNotNull()).groupBy("subj").agg(
+        F.collect_set(decl_kind).alias("kinds")
+    )
+    for col in ("pred", "subj", "obj"):
+        d = F.broadcast(decls.select(
+            F.col("subj").alias("_key"), F.col("kinds").alias(f"{col}_kinds")
+        ))
+        t = t.join(d, F.col(col) == F.col("_key"), "left").drop("_key")
+    pred_kind = lookup(_PRED_KIND)[F.col("pred")]
     kind = (
         F.when(is_type & decl_kind.isNotNull(), F.lit("declaration"))
         .when(is_type & (F.col("obj") == OWL + "Ontology"), F.lit(None))
         .when(is_type, F.lit("class_assertion"))
-        .when(F.col("pred") == RDFS + "subClassOf", F.lit("subclass_of"))
-        .when(F.col("pred") == OWL + "equivalentClass", F.lit("equivalent_classes"))
-        .when(F.col("pred") == OWL + "disjointWith", F.lit("disjoint_classes"))
-        .when(F.col("pred") == RDFS + "subPropertyOf", F.lit("sub_object_property"))
+        .when(pred_kind.isNotNull(), pred_kind)
         .when(~F.col("obj_is_iri"), F.lit("annotation"))
+        .when(F.array_contains("pred_kinds", "ObjectProperty"),
+              F.lit("object_property_assertion"))
+        .when(F.array_contains("pred_kinds", "AnnotationProperty"), F.lit("annotation"))
+        .when(F.col("subj_kinds").isNotNull() | F.col("obj_kinds").isNotNull(),
+              F.lit("annotation"))
         .otherwise(F.lit("object_property_assertion"))
     )
     p_col = F.when(

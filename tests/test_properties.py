@@ -4,6 +4,7 @@ sessionization fold against a single-pass reference."""
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from phenoscape_owl_tools_spark.operators.mention import _PhraseTrie, tokenize
@@ -128,22 +129,99 @@ def _expr(draw, depth=0):
     return f"ObjectIntersectionOf({' '.join(args)})"
 
 
-_axiom_row = st.one_of(
-    st.builds(lambda s, k: ("declaration", s, None, k), _iri,
-              st.sampled_from(["Class", "ObjectProperty", "AnnotationProperty",
-                               "NamedIndividual"])),
-    st.builds(lambda s, o: ("subclass_of", s, None, o), _expr(), _expr()),
-    st.builds(lambda s, o: ("equivalent_classes", s, None, o), _iri, _expr()),
-    st.builds(lambda s, o: ("disjoint_classes", s, None, o), _iri, _expr()),
-    st.builds(lambda s, o: ("sub_object_property", s, None, o), _iri, _iri),
-    st.builds(lambda a, b, o: ("property_chain", f"{a} {b}", None, o),
-              _iri, _iri, _iri),
-    st.builds(lambda s, p, o: ("annotation", s, p, o), _iri, _iri,
-              st.text(alphabet=st.characters(blacklist_categories=("Cs",),
-                                             blacklist_characters="\x00"),
-                      max_size=20)),
-    st.builds(lambda s, o: ("class_assertion", s, None, o), _iri, _expr()),
+_DECL_KIND = st.sampled_from(
+    ["Class", "ObjectProperty", "AnnotationProperty", "NamedIndividual"])
+_TEXT = st.text(alphabet=st.characters(blacklist_categories=("Cs",),
+                                       blacklist_characters="\x00"),
+                max_size=20)
+
+
+def _axiom_rows(pred, text):
+    """Rows of every kind but object-property assertions, with annotation
+    predicates drawn from ``pred`` and literal values from ``text``."""
+    return st.one_of(
+        st.builds(lambda s, k: ("declaration", s, None, k), _iri, _DECL_KIND),
+        st.builds(lambda s, o: ("subclass_of", s, None, o), _expr(), _expr()),
+        st.builds(lambda s, o: ("equivalent_classes", s, None, o), _iri, _expr()),
+        st.builds(lambda s, o: ("disjoint_classes", s, None, o), _iri, _expr()),
+        st.builds(lambda s, o: ("sub_object_property", s, None, o), _iri, _iri),
+        st.builds(lambda a, b, o: ("property_chain", f"{a} {b}", None, o),
+                  _iri, _iri, _iri),
+        st.builds(lambda s, p, o: ("annotation", s, p, o), _iri, pred, text),
+        st.builds(lambda s, o: ("class_assertion", s, None, o), _iri, _expr()),
+    )
+
+
+_axiom_row = _axiom_rows(_iri, _TEXT)
+
+# RDF/XML names a predicate by an XML element, so its IRI needs an NCName
+# suffix, and a literal must be made of XML 1.0 characters.
+_ncname_iri = st.builds(lambda s: f"http://ex.org/{s}",
+                        st.from_regex(r"[a-z_][a-z0-9_]{0,7}", fullmatch=True))
+_XML_TEXT = st.text(
+    alphabet=st.characters(blacklist_categories=("Cs",)).filter(
+        lambda c: c in "\t\n\r" or " " <= c <= "\ud7ff"
+        or "\ue000" <= c <= "\ufffd" or c >= "\U00010000"),
+    max_size=20,
 )
+
+# Object-property assertions and IRI-valued annotations over three IRIs,
+# each IRI declared as up to two kinds (punned when two), so declarations
+# collide with subjects, predicates and objects.
+_NAME = st.sampled_from(["http://ex.org/a", "http://ex.org/b", "http://ex.org/c"])
+_colliding_decls = st.builds(
+    lambda d: [("declaration", s, None, k) for s, kinds in d.items() for k in kinds],
+    st.dictionaries(_NAME, st.sets(_DECL_KIND, min_size=1, max_size=2)),
+)
+_colliding_row = st.one_of(
+    st.builds(lambda s, p, o: ("object_property_assertion", s, p, o),
+              _NAME, _NAME, _NAME),
+    st.builds(lambda s, p, o: ("annotation", s, p, o), _NAME, _NAME, _NAME),
+)
+
+
+def _with_collisions(rows):
+    return st.builds(
+        lambda a, b, c: a + b + c, st.lists(rows, max_size=6), _colliding_decls,
+        st.lists(_colliding_row, min_size=1, max_size=4),
+    )
+
+
+_rdf_rows = _with_collisions(_axiom_row)
+_xml_rows = _with_collisions(_axiom_rows(_ncname_iri, _XML_TEXT))
+
+
+def _added_declarations(rows):
+    """The declarations an RDF writer adds to ``rows``: one
+    ``ObjectProperty`` declaration per object-property-assertion predicate
+    not so declared; None when one lands on a declared annotation property
+    (the writer raises)."""
+    decls = {}
+    for kind, s, _, o in rows:
+        if kind == "declaration":
+            decls.setdefault(s, set()).add(o)
+    added = set()
+    for kind, _, p, _ in rows:
+        if kind == "object_property_assertion" and "ObjectProperty" not in decls.get(p, ()):
+            if "AnnotationProperty" in decls.get(p, ()):
+                return None
+            added.add(("declaration", p, None, "ObjectProperty"))
+    return sorted(added)
+
+
+def _check_rdf_writer(rows, render, parse):
+    """parse(render(rows)) is rows plus the added declarations, and a
+    second round trip is exact."""
+    added = _added_declarations(rows)
+    if added is None:
+        with pytest.raises(ValueError, match="AnnotationProperty"):
+            render(rows)
+        return
+    want = sorted([tuple(r) for r in rows] + added, key=repr)
+    once = [r[1:] for r in parse(render(rows), src="x")]
+    assert sorted(once, key=repr) == want
+    twice = [r[1:] for r in parse(render(once), src="x")]
+    assert sorted(twice, key=repr) == want
 
 
 @settings(max_examples=60, deadline=None)
@@ -169,14 +247,36 @@ def test_ttl_render_parse_roundtrip(rows):
 
 
 @settings(max_examples=60, deadline=None)
-@given(st.lists(_axiom_row, min_size=1, max_size=10))
+@given(_rdf_rows)
 def test_ofn_ttl_cross_serialization_agree(rows):
     """OFN and Turtle renderings of the same axiom frame parse back to the
-    SAME rows — the serialization-agnostic contract both readers share."""
+    SAME rows — the serialization-agnostic contract both readers share —
+    apart from the object-property declarations the Turtle writer adds.
+    OFN is exact."""
     from phenoscape_owl_tools_spark.sources import ofn, ttl
 
-    via_ofn = sorted(r[1:] for r in ofn.parse_document(
-        ofn.render_document(rows), src="x"))
-    via_ttl = sorted(r[1:] for r in ttl.parse_document(
-        ttl.render_turtle_document(rows), src="x"))
-    assert via_ofn == via_ttl
+    added = _added_declarations(rows)
+    via_ofn = sorted((r[1:] for r in ofn.parse_document(
+        ofn.render_document(rows), src="x")), key=repr)
+    assert via_ofn == sorted(map(tuple, rows), key=repr)
+    if added is None:
+        return  # the Turtle writer refuses; test_turtle_writer_contract
+    via_ttl = sorted((r[1:] for r in ttl.parse_document(
+        ttl.render_turtle_document(rows), src="x")), key=repr)
+    assert sorted(via_ofn + added, key=repr) == via_ttl
+
+
+@settings(max_examples=200, deadline=None)
+@given(_rdf_rows)
+def test_turtle_writer_contract(rows):
+    from phenoscape_owl_tools_spark.sources import ttl
+
+    _check_rdf_writer(rows, ttl.render_turtle_document, ttl.parse_document)
+
+
+@settings(max_examples=200, deadline=None)
+@given(_xml_rows)
+def test_rdfxml_writer_contract(rows):
+    from phenoscape_owl_tools_spark.sources import rdfxml
+
+    _check_rdf_writer(rows, rdfxml.render_rdfxml_document, rdfxml.parse_document)

@@ -5,6 +5,8 @@ reference's ~25 web ontologies)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from phenoscape_owl_tools_spark.sources import rdfxml, ttl
@@ -301,6 +303,63 @@ def _all_kinds_rows():
         ("x", "subclass_of", E + "F", None,
          f"ObjectHasValue(<{E}p> <{E}i1>)"),
     ]
+
+
+def _all_kinds_canonical_rows():
+    """Twin of _all_kinds_rows in the readers' canonical form: bare IRIs
+    inside expressions, operands of set-valued constructors sorted."""
+    E = "http://example.org/o#"
+    return [
+        ("declaration", E + "A", None, "Class"),
+        ("declaration", E + "p", None, "ObjectProperty"),
+        ("declaration", E + "lbl", None, "AnnotationProperty"),
+        ("declaration", E + "i1", None, "NamedIndividual"),
+        ("subclass_of", E + "A", None, f"ObjectSomeValuesFrom({E}p {E}B)"),
+        ("subclass_of",
+         f"ObjectIntersectionOf(ObjectSomeValuesFrom({E}p "
+         f"ObjectComplementOf({E}B)) {E}A)", None, E + "C"),
+        ("equivalent_classes", E + "D", None,
+         f"ObjectUnionOf(ObjectOneOf({E}i1 {E}i2) {E}A)"),
+        ("disjoint_classes", E + "A", None, E + "B"),
+        ("sub_object_property", E + "p", None, E + "q"),
+        ("property_chain", f"{E}p {E}q", None, E + "r"),
+        ("annotation", E + "A", E + "lbl",
+         'a "quoted" label\nwith newline & <angle>'),
+        ("annotation", E + "A",
+         "http://purl.org/dc/elements/1.1/source", E + "B"),
+        ("class_assertion", E + "i1", None, E + "A"),
+        ("class_assertion", E + "i1", None, f"ObjectSomeValuesFrom({E}p {E}A)"),
+        ("object_property_assertion", E + "i1", E + "p", E + "i2"),
+        ("subclass_of", E + "E", None,
+         f"ObjectAllValuesFrom(ObjectInverseOf({E}p) {E}A)"),
+        ("subclass_of", E + "F", None, f"ObjectHasValue({E}p {E}i1)"),
+    ]
+
+
+def test_all_kinds_canonical_through_every_writer():
+    """The canonical all-kinds fixture survives the OFN, Turtle and RDF/XML
+    writers exactly (every object-property assertion predicate is
+    declared, so the RDF writers add nothing)."""
+    from phenoscape_owl_tools_spark.sources import ofn
+
+    rows = sorted(_all_kinds_canonical_rows(), key=repr)
+    for render, parse in ((ofn.render_document, ofn.parse_document),
+                          (ttl.render_turtle_document, ttl.parse_document),
+                          (rdfxml.render_rdfxml_document, rdfxml.parse_document)):
+        got = sorted((r[1:] for r in parse(render(rows), src="x")), key=repr)
+        assert got == rows, render.__name__
+
+
+def test_rdfxml_writer_literal_fidelity():
+    """A carriage return survives as &#13; (raw, XML would read it back as
+    a newline); a character XML 1.0 cannot carry fails at render, naming
+    the value, instead of writing a document the reader rejects."""
+    s, p = "http://ex.org/s", "http://ex.org/p"
+    rows = [("annotation", s, p, "a\rb\r\nc")]
+    text = rdfxml.render_rdfxml_document(rows)
+    assert [r[1:] for r in rdfxml.parse_document(text)] == rows
+    with pytest.raises(ValueError, match=re.escape(repr("a\x01b"))):
+        rdfxml.render_rdfxml_document([("annotation", s, p, "a\x01b")])
 
 
 def test_rdfxml_writer_roundtrips_every_kind():

@@ -236,3 +236,66 @@ def test_iri_valued_annotation_reads_back_as_annotation():
         again = [r[1:] for r in rdfxml.parse_document(text, src="x")]
         assert sorted(again, key=repr) == sorted(rows, key=repr), text
     assert 'resource="http://ex.org/o"' in rdfxml.render_rdfxml_document(declared)
+
+
+def test_punned_property_declarations_in_either_order():
+    """An IRI declared both ObjectProperty and Class keeps both kinds, so
+    the reader's answer does not hang on which declaration comes last."""
+    decls = [
+        "<http://ex.org/p> a owl:ObjectProperty .",
+        "<http://ex.org/p> a owl:Class .",
+    ]
+    rest = (
+        "<http://ex.org/s> a owl:NamedIndividual .\n"
+        "<http://ex.org/s> <http://ex.org/p> <http://ex.org/o> .\n"
+    )
+    header = "@prefix owl: <http://www.w3.org/2002/07/owl#> .\n"
+    for order in (decls, decls[::-1]):
+        rows = ttl.parse_document(header + "\n".join(order) + "\n" + rest)
+        assert ("", "object_property_assertion", "http://ex.org/s",
+                "http://ex.org/p", "http://ex.org/o") in rows
+
+
+def test_ntriples_axioms_match_turtle_reader(spark, tmp_path):
+    """The N-Triples path classifies IRI-object triples by the file's
+    declarations, the same way parse_document does on the same text."""
+    E, T = "http://ex.org/", ttl.RDF + "type"
+    lines = [
+        f"<{E}p> <{T}> <{ttl.OWL}AnnotationProperty> .",
+        f"<{E}s> <{E}p> <{E}o> .",
+        f"<{E}C> <{T}> <{ttl.OWL}Class> .",
+        f"<{E}C> <{E}q> <{E}D> .",
+        f"<{E}r> <{T}> <{ttl.OWL}ObjectProperty> .",
+        f"<{E}r> <{T}> <{ttl.OWL}Class> .",
+        f"<{E}C> <{E}r> <{E}D> .",
+        f"<{E}i> <{E}u> <{E}j> .",
+        f"<{E}C> <{RDFS}subClassOf> <{E}D> .",
+        f'<{E}C> <{RDFS}label> "see" .',
+    ]
+    f = tmp_path / "probe.nt"
+    f.write_text("\n".join(lines) + "\n")
+    got = sorted(
+        tuple(r) for r in ttl.axioms_from_triples(
+            ttl.read_ntriples(spark, str(f)), src="x").collect()
+    )
+    want = sorted(ttl.parse_document(f.read_text(), src="x"))
+    assert got == want
+    assert ("x", "annotation", E + "s", E + "p", E + "o") in got
+    assert ("x", "object_property_assertion", E + "C", E + "r", E + "D") in got
+
+
+def test_object_property_assertion_keeps_its_kind():
+    """Both RDF writers declare an object-property assertion's predicate,
+    so a declared subject does not turn it into an annotation; through a
+    declared annotation property it cannot be written at all."""
+    s, p, o = "http://ex.org/s", "http://ex.org/p", "http://ex.org/o"
+    rows = [("declaration", s, None, "Class"),
+            ("object_property_assertion", s, p, o)]
+    want = sorted(rows + [("declaration", p, None, "ObjectProperty")], key=repr)
+    clash = [("declaration", p, None, "AnnotationProperty"),
+             ("object_property_assertion", s, p, o)]
+    for render, parse in ((ttl.render_turtle_document, ttl.parse_document),
+                          (rdfxml.render_rdfxml_document, rdfxml.parse_document)):
+        assert sorted((r[1:] for r in parse(render(rows))), key=repr) == want
+        with pytest.raises(ValueError, match="AnnotationProperty"):
+            render(clash)
