@@ -31,9 +31,10 @@ the cores, where the two coincide.
 Scale notes: a fixpoint whose seed fits one barrier partition
 (:func:`fits_driver`: at most ``TARGET_ROWS_PER_PARTITION`` rows) does not
 need Spark at all: every round costs a few jobs of planning and scheduling
-whatever the data size. So the closure and CC operators count their
-barrier'd seed (one job), collect a seed that fits, run the same round
-recurrence in Python on the driver, and hand the result back through
+whatever the data size. So the closure and CC operators collect their
+barrier'd seed up to one row over that cap (one job), route on the number
+of rows that came back, run the same round recurrence in Python on the
+driver over a seed that fits, and hand the result back through
 :meth:`IterationBarrier.from_pandas`. Anything larger keeps the Spark
 loop, so driver state never exceeds that constant. Measured on a cold
 2k-document KB build plus its SPARQL loop (4 cores, local[4], BENCH.md

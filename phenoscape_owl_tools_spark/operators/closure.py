@@ -232,14 +232,15 @@ def transitive_closure(
     closure = delta = None
     start = 0
     r_rows = None
-    on_driver = iterbarrier.fits_driver(edges.count())
+    # one row over the threshold is enough to decide, and a seed that fits
+    # is already collected
+    pdf = edges.limit(iterbarrier.TARGET_ROWS_PER_PARTITION + 1).toPandas()
+    on_driver = iterbarrier.fits_driver(len(pdf))
     if on_driver and restrictions is not None:
-        # one row over the threshold is enough to decide
         r_pdf = r1.limit(iterbarrier.TARGET_ROWS_PER_PARTITION + 1).toPandas()
         r_rows = list(zip(r_pdf["r_prop"], r_pdf["r_filler"], r_pdf["r_iri"]))
         on_driver = iterbarrier.fits_driver(len(r_rows))
     if on_driver:
-        pdf = edges.toPandas()
         seed = list(zip(pdf["sub"], pdf["sup"]))
         rows, delta_rows, start = _driver_rounds(seed, r_rows, max_iterations)
         schema = StructType([

@@ -61,9 +61,9 @@ def connected_components(
     """
     import pandas as pd
 
-    from phenoscape_owl_tools_spark.iterbarrier import IterationBarrier, fits_driver
+    from phenoscape_owl_tools_spark import iterbarrier
 
-    barrier = IterationBarrier("cc")
+    barrier = iterbarrier.IterationBarrier("cc")
     und = barrier(
         edges.select(F.col(a).alias("x"), F.col(b).alias("y"))
         .unionByName(edges.select(F.col(b).alias("x"), F.col(a).alias("y")))
@@ -71,8 +71,10 @@ def connected_components(
         .dropDuplicates(),
         "und",
     )
-    if fits_driver(und.count()):
-        pdf = und.toPandas()
+    # one row over the threshold is enough to decide; a set that fits is
+    # already collected
+    pdf = und.limit(iterbarrier.TARGET_ROWS_PER_PARTITION + 1).toPandas()
+    if iterbarrier.fits_driver(len(pdf)):
         labels = _driver_hash_to_min(zip(pdf["x"], pdf["y"]), max_iterations)
         node_type = und.schema["x"].dataType
         schema = StructType([StructField("node", node_type, True),

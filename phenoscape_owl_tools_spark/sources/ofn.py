@@ -70,8 +70,8 @@ _TOKEN = re.compile(
 # class-expression constructors with set semantics (args order-insensitive
 # in OWLAPI) — canonicalized by sorting; SomeValuesFrom/ComplementOf keep
 # positional order.
-_SET_CTORS = {"ObjectIntersectionOf", "ObjectUnionOf", "DisjointClasses",
-              "EquivalentClasses"}
+_SET_CTORS = {"ObjectIntersectionOf", "ObjectUnionOf", "ObjectOneOf",
+              "DisjointClasses", "EquivalentClasses"}
 
 
 class OfnParseError(ValueError):

@@ -292,6 +292,11 @@ def _tokenize(text: str) -> list[tuple[str, str]]:
     return toks
 
 
+# an IRI that opens with an RFC 3986 scheme is absolute; @base resolves
+# only the others
+_SCHEME_RE = re.compile(r"[A-Za-z][A-Za-z0-9+.-]*:")
+
+
 class _Doc:
     """One Turtle document: prefix scope + raw (s, p, o, o_is_iri) triples
     with document-scoped blank-node ids."""
@@ -310,7 +315,7 @@ class _Doc:
         kind, val = tok
         if kind == "iri":
             iri = val[1:-1]
-            if self.base and "://" not in iri and not iri.startswith("urn:"):
+            if self.base and not _SCHEME_RE.match(iri):
                 return self.base + iri
             return iri
         if kind == "pname":

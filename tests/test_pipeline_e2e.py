@@ -98,3 +98,55 @@ def test_resume_invalidated_by_input_change(spark, corpus, tmp_path_factory):
                if isinstance(m, dict) and m.get("resumed")]
     assert resumed == [], f"stages wrongly resumed: {resumed}"
     assert res2.triples.count() != n1
+
+
+def test_dimension_inputs_read_once(spark, tmp_path):
+    """Each dimension input is read exactly once per run, in memory, with
+    ``out_dir`` and on a fully resumed run, even when it is a lazy
+    derivation of the documents (as the benchmark builds ``terms``).
+    Each wrapped input adds every row it yields to an accumulator."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from phenoscape_owl_tools_spark.sources import tpch_kg as KG
+
+    vocab = ("a agg batch big column customer data fast filter group hash join "
+             "key line merge order part query row scan slow small sort spark "
+             "stream table the value vector window").split()
+    rng = random.Random(7)
+    flat = spark.createDataFrame(
+        [(i, " ".join(rng.choice(vocab) for _ in range(rng.randint(10, 40))),
+          "en", f"src{i % 20}") for i in range(60)],
+        "doc_id long, text string, lang string, source string",
+    )
+    derive = {"terms": KG.terms, "subclass_edges": KG.subclass_edges,
+              "equiv_edges": KG.equiv_edges}
+    sizes = {name: d(flat).count() for name, d in derive.items()}
+
+    def counted(df, acc):
+        def rows(part):
+            for r in part:
+                acc.add(1)
+                yield r
+        return spark.createDataFrame(df.rdd.mapPartitions(rows), df.schema)
+
+    def run(out_dir):
+        accs = {name: spark.sparkContext.accumulator(0) for name in derive}
+        dims = {name: counted(d(flat), accs[name]) for name, d in derive.items()}
+        res = kb_build.run(spark, kb_build.KBInputs(
+            documents=KG.span_documents(flat),
+            synonyms=dims["terms"].limit(0).select(
+                "iri", F.col("label").alias("synonym")),
+            **dims,
+        ), out_dir=out_dir, n_buckets=4)
+        assert res.triples.count() > 0
+        return res, {name: acc.value for name, acc in accs.items()}
+
+    _, reads = run(None)
+    assert reads == sizes
+    _, reads = run(tmp_path)
+    assert reads == sizes
+    res, reads = run(tmp_path)
+    assert res.manifests["triples"].get("resumed")
+    assert reads == sizes

@@ -299,3 +299,52 @@ def test_object_property_assertion_keeps_its_kind():
         assert sorted((r[1:] for r in parse(render(rows))), key=repr) == want
         with pytest.raises(ValueError, match="AnnotationProperty"):
             render(clash)
+
+
+def test_base_leaves_absolute_iris_of_any_scheme():
+    """``@base`` resolves relative IRIs only: an IRI opening with an RFC
+    3986 scheme is absolute whether or not it has an authority."""
+    doc = """
+@base <http://b.org/> .
+<http://ex.org/s> <http://ex.org/p> <mailto:x@y.org> .
+<http://ex.org/s> <http://ex.org/p> <doi:10.1000/182> .
+<http://ex.org/s> <http://ex.org/p> <rel/o> .
+"""
+    rows = ttl.parse_document(doc, src="b")
+    objs = {r[4] for r in rows}
+    assert objs == {"mailto:x@y.org", "doi:10.1000/182", "http://b.org/rel/o"}, rows
+
+
+def test_object_one_of_reads_alike_in_every_format():
+    """``ObjectOneOf`` is a set of individuals: OFN, Turtle and RDF/XML
+    give one canonical string for it, operands sorted."""
+    E, OWL = "http://e/", ttl.OWL
+    ofn_doc = (
+        "Ontology(<http://e/o>\n"
+        f"EquivalentClasses(<{E}C> ObjectOneOf(<{E}b> <{E}a>))\n)"
+    )
+    ttl_doc = (
+        f"<{E}C> <{OWL}equivalentClass> [ <{OWL}oneOf> ( <{E}b> <{E}a> ) ] ."
+    )
+    rdf_doc = f"""<rdf:RDF xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#"
+         xmlns:owl="{OWL}">
+  <owl:Class rdf:about="{E}C">
+    <owl:equivalentClass>
+      <owl:Class>
+        <owl:oneOf rdf:parseType="Collection">
+          <rdf:Description rdf:about="{E}b"/>
+          <rdf:Description rdf:about="{E}a"/>
+        </owl:oneOf>
+      </owl:Class>
+    </owl:equivalentClass>
+  </owl:Class>
+</rdf:RDF>"""
+
+    def one_of(rows):
+        return {x for r in rows if r[1] == "equivalent_classes"
+                for x in (r[2], r[4]) if x.startswith("ObjectOneOf(")}
+
+    want = {f"ObjectOneOf({E}a {E}b)"}
+    assert one_of(ofn.parse_document(ofn_doc, src="o")) == want
+    assert one_of(ttl.parse_document(ttl_doc, src="t")) == want
+    assert one_of(rdfxml.parse_document(rdf_doc, src="r")) == want
