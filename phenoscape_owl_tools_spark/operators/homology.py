@@ -85,39 +85,45 @@ def homology_axioms(homology: DataFrame) -> DataFrame:
     ).withColumn(
         "expr2", _structure_in_taxon_expr(F.col("s2"), F.col("t2"))
     )
-    def t(subj, pred, obj):
-        return [subj.alias("subj"), pred.alias("pred"), obj.alias("obj")]
+    # one struct per triple shape, NULL where the row does not emit it (a
+    # NULL field, say a missing structure, still emits its triple)
+    pos, ev = ~F.col("negated"), F.col("evidence_code").isNotNull()
+    ann = F.col("ann")
+    ev_ind = F.concat(ann, F.lit("#evidence"))
+    s1_ind = F.concat(ann, F.lit("#structure1"))
+    s2_ind = F.concat(ann, F.lit("#structure2"))
+    shapes = [
+        # reciprocal homology edges between the composed expressions (J13)
+        (pos, F.col("expr1"), F.col("prop"), F.col("expr2")),
+        (pos, F.col("expr2"), F.col("prop"), F.col("expr1")),
+        # expression definition triples: expr -> structure / taxon
+        (None, F.col("expr1"), F.lit(vocab.RDFS_SUBCLASS_OF), F.col("s1")),
+        (None, F.col("expr1"), F.lit(vocab.IN_TAXON), F.col("t1")),
+        (None, F.col("expr2"), F.lit(vocab.RDFS_SUBCLASS_OF), F.col("s2")),
+        (None, F.col("expr2"), F.lit(vocab.IN_TAXON), F.col("t2")),
+        # OBAN association subgraph for evidence-bearing rows (:71-93)
+        (ev, ann, F.lit(vocab.RDF_TYPE), F.lit(ASSOCIATION)),
+        (ev, ann, F.lit(vocab.HAS_EVIDENCE), ev_ind),
+        (ev, ann, F.lit(IS_NEGATED), F.col("negated").cast("string")),
+        (ev, s1_ind, F.lit(vocab.RDF_TYPE), F.col("expr1")),
+        (ev, s2_ind, F.lit(vocab.RDF_TYPE), F.col("expr2")),
+        (ev, ann, F.lit(HAS_SUBJECT), s1_ind),
+        (ev, ann, F.lit(HAS_OBJECT), s2_ind),
+        (ev, ann, F.lit(HAS_PREDICATE), F.col("prop")),
+        (ev, ev_ind, F.lit(vocab.RDF_TYPE), iri_fn.obo_iri_for_term_id(F.col("evidence_code"))),
+        (ev, ev_ind, F.lit("http://purl.org/dc/terms/source"), F.col("publication")),
+    ]
 
-    pos = h.where(~F.col("negated"))
-    # reciprocal homology edges between the composed expressions (J13)
-    fwd = pos.select(*t(F.col("expr1"), F.col("prop"), F.col("expr2")))
-    rev = pos.select(*t(F.col("expr2"), F.col("prop"), F.col("expr1")))
-    # expression definition triples: expr -> structure / taxon
-    defs = (
-        h.select(*t(F.col("expr1"), F.lit(vocab.RDFS_SUBCLASS_OF), F.col("s1")))
-        .unionByName(h.select(*t(F.col("expr1"), F.lit(vocab.IN_TAXON), F.col("t1"))))
-        .unionByName(h.select(*t(F.col("expr2"), F.lit(vocab.RDFS_SUBCLASS_OF), F.col("s2"))))
-        .unionByName(h.select(*t(F.col("expr2"), F.lit(vocab.IN_TAXON), F.col("t2"))))
+    def shape(cond, subj, pred, obj):
+        t = F.struct(subj.alias("subj"), pred.alias("pred"), obj.alias("obj"))
+        return t if cond is None else F.when(cond, t)
+
+    return (
+        h.select(F.explode(F.array(*[shape(*x) for x in shapes])).alias("t"))
+        .where(F.col("t").isNotNull())
+        .select("t.subj", "t.pred", "t.obj")
+        .dropDuplicates()
     )
-    # OBAN association subgraph for evidence-bearing rows (:71-93)
-    ev = h.where(F.col("evidence_code").isNotNull())
-    ev_ind = F.concat(F.col("ann"), F.lit("#evidence"))
-    s1_ind = F.concat(F.col("ann"), F.lit("#structure1"))
-    s2_ind = F.concat(F.col("ann"), F.lit("#structure2"))
-    oban = (
-        ev.select(*t(F.col("ann"), F.lit(vocab.RDF_TYPE), F.lit(ASSOCIATION)))
-        .unionByName(ev.select(*t(F.col("ann"), F.lit(vocab.HAS_EVIDENCE), ev_ind)))
-        .unionByName(ev.select(*t(F.col("ann"), F.lit(IS_NEGATED), F.col("negated").cast("string"))))
-        .unionByName(ev.select(*t(s1_ind, F.lit(vocab.RDF_TYPE), F.col("expr1"))))
-        .unionByName(ev.select(*t(s2_ind, F.lit(vocab.RDF_TYPE), F.col("expr2"))))
-        .unionByName(ev.select(*t(F.col("ann"), F.lit(HAS_SUBJECT), s1_ind)))
-        .unionByName(ev.select(*t(F.col("ann"), F.lit(HAS_OBJECT), s2_ind)))
-        .unionByName(ev.select(*t(F.col("ann"), F.lit(HAS_PREDICATE), F.col("prop"))))
-        .unionByName(ev.select(*t(ev_ind, F.lit(vocab.RDF_TYPE),
-                                  iri_fn.obo_iri_for_term_id(F.col("evidence_code")))))
-        .unionByName(ev.select(*t(ev_ind, F.lit("http://purl.org/dc/terms/source"), F.col("publication"))))
-    )
-    return fwd.unionByName(rev).unionByName(defs).unionByName(oban).dropDuplicates()
 
 
 DERIVED_BY_DESCENT_FROM = "http://purl.obolibrary.org/obo/RO_0002156"

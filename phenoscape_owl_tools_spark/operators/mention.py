@@ -3,10 +3,20 @@
 The reference links matrix cells / TSV rows to ontology classes by exact
 term-ID reference (PhenexToOWL.scala:370, OBOUtil.iriForTermID); our
 interleaved-document input instead carries free text, so the engine performs
-dictionary-based mention detection: ontology labels + synonyms are broadcast
-to every executor, compiled once per Python worker into a token-level
-longest-match trie (Aho-Corasick-style phrase table), and applied to Arrow
-batches via ``mapInPandas`` — no per-row Python dispatch, no shuffle.
+dictionary-based mention detection over ontology labels + synonyms. Text and
+dictionary surfaces go through one tokenizer (:func:`tokenize`: ASCII word
+tokens, lowercased), and matching is token-level longest match. The
+dictionary is collected once on the driver, which picks one of two routes
+from its shape:
+
+- **every surface is a single token** -> the match is a lookup per token,
+  planned in the JVM: ``posexplode(regexp_extract_all(text))`` tokenizes,
+  an ASCII ``translate`` lowercases (equal to ``str.lower`` on these
+  tokens), and a broadcast hash join against the (surface, term) table
+  links them. No Python worker starts;
+- **some surface is a phrase** -> the entries are broadcast, compiled once
+  per Python worker into a token-level longest-match trie
+  (:class:`_PhraseTrie`), and applied to Arrow batches via ``mapInPandas``.
 
 Scale notes (100 TB): the dictionary (~10^6 labels, tens of MB) broadcasts;
 documents never shuffle — extraction is map-only, so throughput scales
@@ -17,6 +27,7 @@ linearly with executors. Ambiguous surfaces resolve deterministically to
 from __future__ import annotations
 
 import re
+import string
 from typing import Iterator
 
 import pandas as pd
@@ -24,7 +35,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-_TOKEN_RE = re.compile(r"[A-Za-z0-9_:']+")
+_TOKEN_PATTERN = r"[A-Za-z0-9_:']+"
+_TOKEN_RE = re.compile(_TOKEN_PATTERN)
 
 MENTION_SCHEMA = T.StructType(
     [
@@ -43,17 +55,16 @@ def tokenize(text: str) -> list[str]:
 
 
 def build_dictionary(terms: DataFrame, synonyms: DataFrame | None = None) -> DataFrame:
-    """(surface, iri) pairs from labels + synonyms, lowercased.
+    """(surface, iri) pairs from labels + synonyms.
 
     Mirrors the reference's vocabulary maps built from rdfs:label +
     oboInOwl exact/related synonyms (Vocab.scala:57-58, PhenoscapeKB ontology
-    loads).
+    loads). Surfaces keep their case: matching lowercases them through
+    :func:`tokenize`, the tokenizer the text goes through.
     """
-    d = terms.select(F.lower(F.col("label")).alias("surface"), F.col("iri"))
+    d = terms.select(F.col("label").alias("surface"), F.col("iri"))
     if synonyms is not None:
-        d = d.unionByName(
-            synonyms.select(F.lower(F.col("synonym")).alias("surface"), F.col("iri"))
-        )
+        d = d.unionByName(synonyms.select(F.col("synonym").alias("surface"), F.col("iri")))
     # deterministic ambiguity resolution: min(iri) per surface
     return d.groupBy("surface").agg(F.min("iri").alias("iri"))
 
@@ -112,54 +123,6 @@ class _PhraseTrie:
         return out
 
 
-class _WordMatcher:
-    """Single-token dictionary fast path: one dict probe per token.
-
-    When every surface tokenizes to exactly one token, the longest-match
-    walk degenerates to a hash lookup; skipping the trie's child-probe +
-    accept-check per token measures 3.4x the trie on the flagship corpus
-    (11.8M vs 3.4M mentions/s single-threaded at sf0.1's ~100% match
-    density). Ambiguity resolves to min(iri) at build time like the trie.
-    """
-
-    __slots__ = ("map",)
-
-    def __init__(self, entries: list[tuple[str, str]]):
-        self.map: dict[str, str] = {}
-        for surface, iri in entries:
-            toks = tokenize(surface)
-            if len(toks) != 1:
-                raise ValueError("surface is not single-token")
-            t = toks[0]
-            cur = self.map.get(t)
-            if cur is None or iri < cur:
-                self.map[t] = iri
-
-    def find(self, tokens: list[str]) -> list[tuple[int, int, str, str]]:
-        get = self.map.get
-        out = []
-        for i, t in enumerate(tokens):
-            iri = get(t)
-            if iri is not None:
-                out.append((i, 1, t, iri))
-        return out
-
-
-def build_matcher(entries: list[tuple[str, str]]):
-    """Compile broadcast dictionary entries into the fastest equivalent
-    matcher for their shape (both produce identical matches):
-
-    - all surfaces single-token -> :class:`_WordMatcher` (hash probe/token;
-      3.4x the trie at dense match rates),
-    - phrases present -> :class:`_PhraseTrie` (interpreted longest-match
-      walk; beat a compiled nested-alternation regex 2.4x when most tokens
-      match, because per-match regex bookkeeping dominates).
-    """
-    if all(len(tokenize(s)) == 1 for s, _ in entries):
-        return _WordMatcher(entries)
-    return _PhraseTrie(entries)
-
-
 def explode_text_spans(documents: DataFrame) -> DataFrame:
     """documents(doc_id, spans[]) -> one row per span, order-preserving.
 
@@ -189,6 +152,42 @@ def broadcast_dictionary(spark: SparkSession, dictionary: DataFrame):
     return spark.sparkContext.broadcast(entries)
 
 
+def _single_token_surfaces(entries: list[tuple[str, str]]) -> dict[str, str] | None:
+    """token -> min(iri) when no surface tokenizes to more than one token
+    (the trie's answer for such a dictionary is a lookup per token), else
+    None. Surfaces with no token never match and are left out."""
+    words: dict[str, str] = {}
+    for surface, iri in entries:
+        toks = tokenize(surface)
+        if len(toks) > 1:
+            return None
+        if toks and (toks[0] not in words or iri < words[toks[0]]):
+            words[toks[0]] = iri
+    return words
+
+
+def _word_mentions(spark: SparkSession, spans: DataFrame, words: dict[str, str]) -> DataFrame:
+    """The single-token route: every token of every span joined to the
+    broadcast (surface, term) table, in the JVM."""
+    table = spark.createDataFrame(
+        pd.DataFrame({"surface": list(words), "term": list(words.values())}, dtype=object),
+        "surface string, term string",
+    )
+    tokens = spans.select(
+        "doc_id", "span_idx",
+        F.posexplode(F.regexp_extract_all("text", F.lit(_TOKEN_PATTERN), 0))
+        .alias("start_token", "token"),
+    ).select(
+        "doc_id", "span_idx", "start_token",
+        F.translate("token", string.ascii_uppercase, string.ascii_lowercase).alias("surface"),
+    )
+    return tokens.join(F.broadcast(table), on="surface").select(
+        F.col("doc_id").cast("string").alias("doc_id"),
+        "span_idx", "term", "surface", "start_token",
+        F.lit(1).alias("n_tokens"),
+    )
+
+
 def detect_mentions(
     spark: SparkSession,
     documents: DataFrame,
@@ -198,16 +197,22 @@ def detect_mentions(
 
     ``dictionary`` is a (surface, iri) DataFrame or a prebuilt broadcast from
     :func:`broadcast_dictionary`. Returns
-    ``(doc_id, span_idx, term, surface, start_token, n_tokens)``.
+    ``(doc_id, span_idx, term, surface, start_token, n_tokens)``, the same
+    rows on both routes (module docstring) as ``_PhraseTrie.find`` over
+    ``tokenize(text)``.
     """
     bc = (
         dictionary
         if not isinstance(dictionary, DataFrame)
         else broadcast_dictionary(spark, dictionary)
     )
+    spans = explode_text_spans(documents).where(F.col("kind") == "text")
+    words = _single_token_surfaces(bc.value)
+    if words is not None:
+        return _word_mentions(spark, spans, words)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        trie = build_matcher(bc.value)
+        trie = _PhraseTrie(bc.value)
         for pdf in batches:
             rows: dict[str, list] = {
                 "doc_id": [], "span_idx": [], "term": [],
@@ -225,7 +230,6 @@ def detect_mentions(
                     rows["n_tokens"].append(ntok)
             yield pd.DataFrame(rows)
 
-    spans = explode_text_spans(documents).where(F.col("kind") == "text")
     return spans.select("doc_id", "span_idx", "text").mapInPandas(run, MENTION_SCHEMA)
 
 

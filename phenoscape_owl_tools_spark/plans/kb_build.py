@@ -3,13 +3,28 @@
 Mirrors PhenoscapeKB.scala's 13-step object initializer as a staged Spark
 job graph:
 
-    ingest docs -> mention/link (Arrow UDF) -> EQ axiom-gen (projections)
-    -> TBox generators -> EL closure (fixpoint joins) -> negation rules
+    ingest docs -> mention/link (word join or phrase Arrow UDF)
+    -> EQ axiom-gen (projections) -> TBox generators
+    -> EL closure (fixpoint joins) -> negation rules
     -> presence/absence path queries -> profiles -> canonicalize (CC)
     -> triple emit (subject-hash buckets, salted hub joins)
 
 Every stage writes a table + lineage manifest via catalog.py; ``run`` skips
 stages whose manifest fingerprint matches the current inputs (resume).
+The stages, in build order:
+
+- ``linked_mentions``: dictionary mentions with their term's namespace;
+- ``span_annotations``: per (doc, span), the EQ annotation composed into
+  its phenotype class, with the span's state individual;
+- ``doc_triples``, ``eq_edges``, ``depictions``: exhibits/describes and EQ
+  annotation triples, the EQ classes' closure edges, image depictions;
+- ``restrictions``, ``negates``, ``tbox_triples``: TBox generators plus
+  the EQ classes' restriction definitions;
+- ``closure``, ``negation_hierarchy``: EL closure and negation subclasses;
+- ``path_triples``: J4 presence and J5 absence triples, one path pass;
+- ``closure_triples``, then when their inputs are given ``gene_profiles``,
+  ``evolutionary_profiles`` and ``homology_triples``;
+- ``triples``: the union, property-normalized, canonicalized, deduplicated.
 
 Inputs come in two kinds (:class:`KBInputs`):
 - **dimension inputs** (``DIMENSION_INPUTS``: terms, synonyms, subclass,
@@ -114,11 +129,16 @@ def link_mentions(spark: SparkSession, inputs: KBInputs) -> DataFrame:
 
 
 def compose_span_annotations(linked: DataFrame) -> DataFrame:
-    """Stage 3: per (doc, span), the EQ annotation row.
+    """Stage 3: per (doc, span), the EQ annotation row, composed.
 
     Deterministic aggregation: taxon/entity/quality = min(iri) per namespace
     within the span (ambiguity resolution must not depend on partitioning).
-    A second anatomy mention becomes the related entity.
+    A second anatomy mention becomes the related entity. Spans with an
+    entity or a quality carry their composed EQ class (``canonical_expr``,
+    ``phenotype_cls``) and their state individual: a content-hash IRI of
+    (doc, span) — the reference mints them per NeXML state element
+    (PhenexToOWL.scala:219-247); our identity is the span that asserted
+    them (§7.1 determinism). Every reader of EQ classes reads these rows.
     """
     per_span = linked.groupBy("doc_id", "span_idx").agg(
         F.min(F.when(F.col("namespace") == "taxon", F.col("term"))).alias("taxon"),
@@ -126,24 +146,18 @@ def compose_span_annotations(linked: DataFrame) -> DataFrame:
         F.max(F.when(F.col("namespace") == "anatomy", F.col("term"))).alias("entity2"),
         F.min(F.when(F.col("namespace") == "quality", F.col("term"))).alias("quality"),
     )
-    return per_span.withColumn(
+    ann = per_span.withColumn(
         "related_entity",
         F.when(F.col("entity2") != F.col("entity"), F.col("entity2")),
-    ).drop("entity2")
-
-
-def doc_triples(annotations: DataFrame) -> dict[str, DataFrame]:
-    """Stage 4: exhibits_state / describes_phenotype triples + EQ classes.
-
-    State individuals are content-hash IRIs of (doc, span) — the reference
-    mints them per NeXML state element (PhenexToOWL.scala:219-247); our
-    identity is the span that asserted them (§7.1 determinism).
-    """
-    ann = annotations.where(F.col("entity").isNotNull() | F.col("quality").isNotNull())
-    composed = eq.compose_eq_phenotypes(ann)
+    ).drop("entity2").where(F.col("entity").isNotNull() | F.col("quality").isNotNull())
     state_iri = iri_fn.mint_iri("state", "doc_id", F.col("span_idx").cast("string"))
-    composed = composed.withColumn("state", state_iri)
+    return eq.compose_eq_phenotypes(ann).withColumn("state", state_iri)
 
+
+def doc_triples(composed: DataFrame) -> dict[str, DataFrame]:
+    """Stage 4: exhibits_state / describes_phenotype triples, the EQ
+    classes' closure edges and restriction definitions, from the composed
+    span annotations (:func:`compose_span_annotations`)."""
     with_taxon = composed.where(F.col("taxon").isNotNull())
     exhibits = with_taxon.select(
         F.col("taxon").alias("subj"),
@@ -202,9 +216,6 @@ def doc_triples(annotations: DataFrame) -> dict[str, DataFrame]:
         .dropDuplicates(),
         "eq_edges": eq_edges.dropDuplicates(),
         "restrictions": doc_restrictions,
-        "states": composed.select(
-            "doc_id", "span_idx", "taxon", "entity", "quality", "state", "phenotype_cls"
-        ),
     }
 
 
@@ -272,9 +283,8 @@ def _phenotype_ancestors(tx_ph: DataFrame, closure: DataFrame, salt: int | None)
     hot phenotype classes appear in a large fraction of documents, so the
     probe side is salted and the closure (dim) side exploded
     (operators/salting.py). ``salt=None`` auto-chooses from the key
-    histogram (one collect job — callers with several path queries should
-    choose once and pass it, as kb_build.run does, recording it under
-    ``manifests['_config']``).
+    histogram (one collect job; kb_build.run chooses before its stage and
+    records it under ``manifests['_config']``).
     """
     cl = closure.select(F.col("sub").alias("cl_sub"), F.col("sup").alias("cl_sup"))
     if salt is None:
@@ -289,59 +299,53 @@ def _phenotype_ancestors(tx_ph: DataFrame, closure: DataFrame, salt: int | None)
     )
 
 
-def presence_query(
+def path_query(
     exhibits: DataFrame,
     describes: DataFrame,
     closure: DataFrame,
-    anatomy_under_root: DataFrame,
+    path_map: DataFrame,
     taxa_under_root: DataFrame,
     salt: int | None = None,
 ) -> DataFrame:
-    """J4 — the flagship CONSTRUCT (PhenoscapeKB.scala:380-389):
+    """J4 and J5 in one pass — the flagship CONSTRUCTs (PhenoscapeKB.scala:
+    380-396):
 
     taxon exhibits_state/describes_phenotype/(subClassOf*)/
-    implies_presence_of_some entity, entity under ANATOMICAL_ENTITY,
-    taxon under CHORDATA -> (taxon, has_presence_of, entity).
+    implies_presence_of_some entity (J4) or absence-of entity (J5),
+    taxon under CHORDATA -> (taxon, has_presence_of | has_absence_of,
+    entity).
 
-    The path decodes to: phenotype ⊑* (implies_presence_of some E), with the
-    named restriction's (prop, filler) read back from its definition table.
-    Here ``closure`` rows already terminate at restriction classes whose
-    filler we resolve via the restriction definitions carried in
-    ``anatomy_under_root`` probes (passed as (cls, entity) pairs).
+    The path decodes to: phenotype ⊑* C, where C is the named restriction
+    (implies_presence_of some E) or the absence class of E. ``path_map``
+    holds one row per such class, ``(path_cls, pred, entity)``, tagged with
+    the predicate its path emits, so the taxon/phenotype join and the
+    salted ancestor expansion run once for both queries.
     """
     tx_ph = _taxon_phenotypes(exhibits, describes)
     ph_anc = _phenotype_ancestors(tx_ph, closure, salt)
     hit = ph_anc.join(
-        F.broadcast(anatomy_under_root), ph_anc["cls"] == anatomy_under_root["presence_cls"]
-    ).select("taxon", "entity")
+        F.broadcast(path_map), ph_anc["cls"] == path_map["path_cls"]
+    ).select("taxon", "pred", "entity")
     out = hit.join(F.broadcast(taxa_under_root), hit["taxon"] == taxa_under_root["t"], "leftsemi")
     return out.select(
         F.col("taxon").alias("subj"),
-        F.lit(vocab.HAS_PRESENCE_OF).alias("pred"),
+        "pred",
         F.col("entity").alias("obj"),
     ).dropDuplicates()
 
 
-def absence_query(
-    exhibits: DataFrame,
-    describes: DataFrame,
-    closure: DataFrame,
-    absence_classes_df: DataFrame,
-    taxa_under_root: DataFrame,
-    salt: int | None = None,
-) -> DataFrame:
-    """J5 — same path through ABSENCE_OF (PhenoscapeKB.scala:391-396)."""
-    tx_ph = _taxon_phenotypes(exhibits, describes)
-    ph_anc = _phenotype_ancestors(tx_ph, closure, salt)
-    hit = ph_anc.join(
-        F.broadcast(absence_classes_df), ph_anc["cls"] == absence_classes_df["absence_cls"]
-    ).select("taxon", "entity")
-    out = hit.join(F.broadcast(taxa_under_root), hit["taxon"] == taxa_under_root["t"], "leftsemi")
-    return out.select(
-        F.col("taxon").alias("subj"),
-        F.lit(vocab.HAS_ABSENCE_OF).alias("pred"),
-        F.col("entity").alias("obj"),
-    ).dropDuplicates()
+def _input_fingerprint(inputs: KBInputs) -> str:
+    """The resume fingerprint of the inputs. It covers their CONTENT, not
+    just their shape: a schema-only fingerprint would happily serve corpus
+    A's cached stages for corpus B. One cheap checksum pass per input table
+    (the order-insensitive xxhash64 sum catalog.content_checksum provides)."""
+    content = []
+    for f in fields(inputs):
+        df = getattr(inputs, f.name)
+        content.append(f"{f.name}={catalog.content_checksum(df) if df is not None else 'none'}")
+    return catalog.fingerprint(
+        str(inputs.documents.schema), str(sorted(inputs.terms.columns)), *content,
+    )
 
 
 def run(
@@ -359,36 +363,22 @@ def run(
     stage = catalog.stage_runner(spark, result, out_path, resume, n_buckets)
     inputs = _read_dimensions_once(inputs)
 
-    # Resume fingerprint covers input CONTENT, not just shape: a schema-only
-    # fingerprint would happily serve corpus A's cached stages for corpus B.
-    # One cheap checksum pass per input table at pipeline start (the
-    # order-insensitive xxhash64 sum catalog.content_checksum provides).
     # Skipped entirely when no out_dir: without persisted manifests the
     # fingerprint is never stored or compared, so the scans would be waste.
     # (With out_dir but resume=False it still runs: the manifests written
     # this run are what a FUTURE resume=True run validates against.)
     # The dimension inputs are checksummed from their checkpoints, so even a
     # fully resumed run reads each of them once.
-    content_parts = []
-    for f in [] if out_path is None else fields(inputs):
-        df = getattr(inputs, f.name)
-        content_parts.append(
-            f"{f.name}={catalog.content_checksum(df) if df is not None else 'none'}"
-        )
-    in_fp = catalog.fingerprint(
-        str(inputs.documents.schema), str(sorted(inputs.terms.columns)),
-        *content_parts,
-    )
+    in_fp = "" if out_path is None else _input_fingerprint(inputs)
 
     linked = stage("linked_mentions", catalog.fingerprint("linked", in_fp),
                    lambda: link_mentions(spark, inputs))
-    ann = stage("span_annotations", catalog.fingerprint("ann", in_fp),
+    ann = stage("span_annotations", catalog.fingerprint("eq_ann", in_fp),
                 lambda: compose_span_annotations(linked))
     dt = doc_triples(ann)
     doc_trip = stage("doc_triples", catalog.fingerprint("doc_triples", in_fp),
                      lambda: dt["triples"])
     eq_edges = stage("eq_edges", catalog.fingerprint("eq_edges", in_fp), lambda: dt["eq_edges"])
-    states = stage("states", catalog.fingerprint("states", in_fp), lambda: dt["states"])
     depict = stage("depictions", catalog.fingerprint("depict", in_fp),
                    lambda: depiction_triples(inputs.documents, linked))
 
@@ -421,36 +411,32 @@ def run(
 
     # presence/absence path queries (J4/J5)
     anatomy = inputs.terms.where(F.col("namespace") == "anatomy").select("iri")
-    presence_map = anatomy.select(
-        iri_fn.restriction_class_iri(F.lit(vocab.IMPLIES_PRESENCE_OF), F.col("iri")).alias("presence_cls"),
+    path_map = anatomy.select(
+        iri_fn.restriction_class_iri(F.lit(vocab.IMPLIES_PRESENCE_OF), F.col("iri")).alias("path_cls"),
+        F.lit(vocab.HAS_PRESENCE_OF).alias("pred"),
         F.col("iri").alias("entity"),
-    )
-    absence_map = anatomy.select(
-        iri_fn.absence_class_iri(F.col("iri")).alias("absence_cls"),
+    ).unionByName(anatomy.select(
+        iri_fn.absence_class_iri(F.col("iri")).alias("path_cls"),
+        F.lit(vocab.HAS_ABSENCE_OF).alias("pred"),
         F.col("iri").alias("entity"),
-    )
+    ))
     taxa = inputs.terms.where(F.col("namespace") == "taxon").select(F.col("iri").alias("t"))
     exhibits = doc_trip.where(F.col("pred") == vocab.EXHIBITS_STATE)
     describes = doc_trip.where(F.col("pred") == vocab.DESCRIBES_PHENOTYPE)
-    # choose the hub-skew salt ONCE (one histogram job, shared by both path
-    # queries) and record it for resume/golden-file verification
+    # choose the hub-skew salt ONCE (one histogram job) and record it for
+    # resume/golden-file verification
     salt = salting.choose_salt_factor(
         _taxon_phenotypes(exhibits, describes), "phenotype"
     )
     result.manifests["_config"] = {"presence_path_salt": salt}
-    presences = stage(
-        "presences",
-        catalog.fingerprint("presences", in_fp, f"salt={salt}"),
-        lambda: presence_query(exhibits, describes, cl, presence_map, taxa, salt=salt),
-    )
-    absences = stage(
-        "absences",
-        catalog.fingerprint("absences", in_fp, f"salt={salt}"),
-        lambda: absence_query(exhibits, describes, cl, absence_map, taxa, salt=salt),
+    paths = stage(
+        "path_triples",
+        catalog.fingerprint("paths", in_fp, f"salt={salt}"),
+        lambda: path_query(exhibits, describes, cl, path_map, taxa, salt=salt),
     )
 
     # profiles
-    parts = [doc_trip, depict, tbox_triples, presences, absences]
+    parts = [doc_trip, depict, tbox_triples, paths]
     parts.append(
         stage(
             "closure_triples",
@@ -475,12 +461,12 @@ def run(
         )
     if inputs.taxonomy_edges is not None and inputs.state_phenotypes is not None:
         def build_evo():
-            assoc = states.where(F.col("taxon").isNotNull()).select(
+            assoc = ann.where(F.col("taxon").isNotNull()).select(
                 F.col("taxon"),
                 F.coalesce(F.col("quality"), F.lit("none")).alias("character"),
                 F.col("state"),
             )
-            sp = states.where(F.col("entity").isNotNull()).select(
+            sp = ann.where(F.col("entity").isNotNull()).select(
                 "state", F.col("entity").alias("phenotype")
             ).dropDuplicates()
             _, prof = profiles_op.evolutionary_profiles(inputs.taxonomy_edges, assoc)

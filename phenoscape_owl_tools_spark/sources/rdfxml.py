@@ -45,7 +45,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from .ofn import AXIOM_SCHEMA
-from .ttl import OWL, RDF, RDFS, _Doc, axiom_triples, document_axiom_rows
+from .ttl import _SCHEME_RE, OWL, RDF, RDFS, _Doc, axiom_triples, document_axiom_rows
 
 XML_NS = "http://www.w3.org/XML/1998/namespace"
 
@@ -65,20 +65,23 @@ def _qname(tag: str) -> str:
 def _resolve(base: str, ref: str) -> str:
     """Resolve an rdf:about/rdf:resource reference against xml:base.
 
-    Absolute refs pass through; ``#frag``/empty append to the base (the
-    OWLAPI xml:base convention); other relative refs against a ``/``- or
-    ``#``-terminated base concatenate. Any remaining relative ref is
+    Absolute refs pass through: an RFC 3986 scheme, with or without an
+    authority (``http://``, ``urn:``, ``mailto:``), or a "://" anywhere, as
+    in the bracketed ``<http://...>`` operands the writer renders verbatim.
+    ``#frag``/empty append to the base (the OWLAPI xml:base convention);
+    other relative refs against a ``/``- or ``#``-terminated base
+    concatenate. Any remaining relative ref is
     RFC3986-resolved with urljoin — and if no absolute IRI can be formed
     (no usable base), that is a loud parse error, never a bare relative
     string smuggled into the axiom frame."""
-    if "://" in ref or ref.startswith("urn:"):
+    if "://" in ref or _SCHEME_RE.match(ref):
         return ref
     if ref.startswith("#") or not ref:
         return base + ref
     if base.endswith(("/", "#")):
         return base + ref
     resolved = urljoin(base, ref) if base else ref
-    if "://" not in resolved and not resolved.startswith("urn:"):
+    if "://" not in resolved and not _SCHEME_RE.match(resolved):
         raise RdfXmlParseError(
             f"relative reference {ref!r} with unusable xml:base {base!r}"
         )

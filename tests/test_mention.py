@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from phenoscape_owl_tools_spark.operators import mention
@@ -72,19 +73,40 @@ def test_trie_ambiguous_tokenization_resolves_to_min_iri():
     assert t1.find(["big", "toe"])[0][3] == "iri:A"
 
 
-def test_word_matcher_equivalent_to_trie():
-    from phenoscape_owl_tools_spark.operators.mention import (
-        _PhraseTrie,
-        _WordMatcher,
-        build_matcher,
-        tokenize,
-    )
+# single-token surfaces: case collisions, tokens with ':', "'" and '_',
+# punctuation around a word, non-ASCII letters inside one
+WORD_SURFACES = ["fin", "Fin", "FIN", "toe", "fin's", "fin:ray", "toe_1", "(fin)",
+                 "[toe].", "ray", "café", "ïve", "é", "", "--"]
+TEXT_WORDS = ["fin", "Fin", "FIN", "toe", "TOE", "fin's", "fin:ray", "toe_1", "ray",
+              "café", "naïve", "finé", "the", "with", "Ray's"]
 
-    entries = [("toe", "iri:toe"), ("fin", "iri:fin"), ("Fin", "iri:aaa")]
-    wm = build_matcher(entries)
-    assert isinstance(wm, _WordMatcher)
-    trie = _PhraseTrie(entries)
-    for text in ["fin toe fin", "FIN unknown toe", "", "finto toe"]:
-        assert wm.find(tokenize(text)) == trie.find(tokenize(text)), text
-    # phrase dictionaries must NOT take the word path
-    assert isinstance(build_matcher(entries + [("big toe", "x")]), _PhraseTrie)
+
+@st.composite
+def word_dictionary_and_texts(draw):
+    surfaces = draw(st.lists(st.sampled_from(WORD_SURFACES), max_size=8))
+    entries = [(s, draw(st.sampled_from(["iri:a", "iri:b", "iri:c"]))) for s in surfaces]
+    word = st.tuples(st.sampled_from(TEXT_WORDS), st.sampled_from([" ", ", ", " (", ") ", ".", "é"]))
+    text = st.lists(word, max_size=10).map(lambda ws: "".join(w + sep for w, sep in ws))
+    texts = draw(st.lists(st.one_of(st.none(), st.just(""), text), min_size=1, max_size=40))
+    return entries, texts
+
+
+@settings(max_examples=15, deadline=None)
+@given(word_dictionary_and_texts())
+def test_word_route_matches_phrase_trie(spark, case):
+    """On single-token dictionaries the JVM word route returns the rows the
+    phrase trie finds in ``tokenize(text)``, NULL and empty text included."""
+    entries, texts = case
+    assert mention._single_token_surfaces(entries) is not None
+    docs = spark.createDataFrame(
+        [(f"d{i}", [("text", t, None, 0), ("media", None, "m", 1)]) for i, t in enumerate(texts)],
+        "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
+    )
+    got = mention.detect_mentions(spark, docs, spark.sparkContext.broadcast(entries)).collect()
+    trie = mention._PhraseTrie(entries)
+    expected = sorted(
+        (f"d{i}", 0, iri, surface, start, n)
+        for i, t in enumerate(texts) if t
+        for start, n, surface, iri in trie.find(mention.tokenize(t))
+    )
+    assert sorted(tuple(r) for r in got) == expected

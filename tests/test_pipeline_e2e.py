@@ -61,6 +61,41 @@ def test_presence_absence_emitted(pipeline_run):
     assert vocab.DEPICTS in preds
 
 
+def test_presence_absence_triples_exact(pipeline_run):
+    """J4 and J5 equal the oracle's triples exactly: the P/R gate above
+    would let a 5% loss of either through."""
+    from phenoscape_owl_tools_spark import vocab
+
+    c, _, _, _, got = pipeline_run
+    expected = pipeline_oracle.expected_triples(c)
+    for pred in (vocab.HAS_PRESENCE_OF, vocab.HAS_ABSENCE_OF):
+        want = {t for t in expected if t[1] == pred}
+        assert want, pred
+        assert {t for t in got if t[1] == pred} == want, pred
+
+
+def test_resume_rebuilds_span_annotations_of_the_old_schema(spark, pipeline_run, tmp_path):
+    """An out_dir whose span_annotations stage holds per-span rows without
+    their EQ class (the stage's schema under its old fingerprint tag
+    "ann") is rebuilt, not resumed."""
+    import shutil
+
+    from phenoscape_owl_tools_spark import catalog
+
+    c, paths, out, first, got = pipeline_run
+    old = tmp_path / "kb_out"
+    shutil.copytree(out, old)
+    inputs = _inputs(spark, paths)
+    per_span = first.stages["span_annotations"].select(
+        "doc_id", "span_idx", "taxon", "entity", "quality", "related_entity")
+    catalog.write_table(per_span, old / "span_annotations",
+                        fingerprint=catalog.fingerprint("ann", kb_build._input_fingerprint(inputs)))
+    res = kb_build.run(spark, inputs, out_dir=old, n_buckets=4)
+    assert not res.manifests["span_annotations"].get("resumed")
+    assert res.manifests["doc_triples"].get("resumed")
+    assert {(r["subj"], r["pred"], r["obj"]) for r in res.triples.collect()} == got
+
+
 def test_resume_skips_stages(spark, pipeline_run):
     c, paths, out, first, got = pipeline_run
     res2 = kb_build.run(spark, _inputs(spark, paths), out_dir=out, n_buckets=4)

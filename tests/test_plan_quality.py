@@ -387,3 +387,32 @@ def test_word_windows_and_text_stats_have_no_per_element_lambdas(spark):
         n_agg = 1 if name == "repetition_stats" else 0
         assert plan.count("aggregate(") == n_agg, (name, plan)
         assert plan.count("lambdafunction(") == 2 * n_agg, (name, plan)
+
+
+PYTHON_OPERATORS = ("MapInPandas", "PythonMapInArrow", "ArrowEvalPython", "BatchEvalPython")
+
+
+def test_mention_routes_plan_python_only_for_phrases(spark):
+    """A dictionary of single-token surfaces is matched in the JVM: no
+    Python operator in the plan. A phrase dictionary runs the trie in
+    exactly one MapInPandas."""
+    from pyspark.sql import functions as F
+
+    from phenoscape_owl_tools_spark.operators import mention
+    from phenoscape_owl_tools_spark.sources import tpch_kg as KG
+
+    flat = spark.read.parquet(f"{SF001}/documents.parquet")
+    spans = KG.span_documents(flat)
+    words = KG.terms(flat).select(F.col("label").alias("surface"), "iri")
+    phrases = words.unionByName(spark.createDataFrame([("big toe", "iri:big_toe")], words.schema))
+
+    def plan(dictionary) -> str:
+        df = mention.detect_mentions(spark, spans, dictionary)
+        return df._jdf.queryExecution().sparkPlan().toString()
+
+    word_plan = plan(words)
+    assert not any(op in word_plan for op in PYTHON_OPERATORS), word_plan
+    assert "BroadcastHashJoin" in word_plan, word_plan
+    phrase_plan = plan(phrases)
+    assert phrase_plan.count("MapInPandas") == 1, phrase_plan
+    assert sum(phrase_plan.count(op) for op in PYTHON_OPERATORS) == 1, phrase_plan

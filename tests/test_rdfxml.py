@@ -153,6 +153,24 @@ def test_rdfxml_resolve_relative_refs():
         rdfxml._resolve("relative-base", "Foo")
 
 
+def test_rdfxml_absolute_iris_without_authority_pass_through():
+    """An RFC 3986 scheme makes a reference absolute, with or without an
+    authority: ``mailto:`` and ``tag:`` IRIs need no xml:base."""
+    assert rdfxml._resolve("", "mailto:x@y.org") == "mailto:x@y.org"
+    assert rdfxml._resolve("http://b.org/dir/", "tag:b.org,2024:x") == "tag:b.org,2024:x"
+    doc = """<?xml version="1.0"?>
+<rdf:RDF xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#"
+         xmlns:owl="http://www.w3.org/2002/07/owl#"
+         xmlns:ex="http://example.org/x#">
+  <owl:NamedIndividual rdf:about="http://example.org/onto#Curator">
+    <ex:p rdf:resource="mailto:x@y.org"/>
+  </owl:NamedIndividual>
+</rdf:RDF>
+"""
+    rows = rdfxml.parse_document(doc, src="m")
+    assert any(r[2] == EX + "Curator" and r[4] == "mailto:x@y.org" for r in rows), rows
+
+
 def test_read_rdfxml_spark(spark, tmp_path):
     d = tmp_path / "owl"
     d.mkdir()
